@@ -159,8 +159,8 @@ KNOWN_SHUFFLE_HEAVY = {
     "dedup_pair_degree_hist", "sim_rrf_fusion",
     "dedup_neardup_source_crosstab", "train_token_apportionment",
     "events_session_gap_sweep",
-    # r17: the train-side MinHash signature rides the tier-shared
-    # plan-keyed persist (dedup._SIG_LRU) — the COLD plan prints the
+    # r17: the train-side MinHash signature rides the shared plan-keyed
+    # persist (shared_minhash_signature) — the COLD plan prints the
     # persist subtree's own exchanges (5→7), while the warm executed
     # shape reads one InMemoryRelation (measured 0.587→0.270 s; same
     # mechanism-note pattern as the r16 dup-span prepartition).

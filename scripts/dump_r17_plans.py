@@ -1,10 +1,10 @@
 """Capture `.explain("formatted")` for the queries touched by the
 round-17 optimization pass into plans/r17/<query>_<tag>.txt.
 
-Every query is built COLD: all engine persist slots and Spark's cache
-are drained before each build, so the dumped plan is the uncached one
-(a warm PlanKeyedLRU slot would substitute InMemoryRelations and make
-the before/after diff depend on dump order).
+Every query is built COLD: `caching.drain` empties the engine's reuse
+cache and Spark's cache before each build, so the dumped plan is the
+uncached one (a warm cache entry would substitute InMemoryRelations and
+make the before/after diff depend on dump order).
 
 Usage: python scripts/dump_r17_plans.py <tag> [query ...]
   tag: "before" | "after"; default query set = R17_TOUCHED below.
@@ -48,37 +48,10 @@ R17_TOUCHED = [
 ]
 
 
-def _drain_caches(spark) -> None:
-    """Empty every engine-level persist slot + Spark's cache (same set
-    as the tests/test_plan_audits.py fixture)."""
-    from yougile_etl_pipeline_spark.operators import dedup, text
-
-    slots = [text._LAST_GRAM_CACHE]
-    for attr in ("_SHINGLE_LRU", "_SIG_LRU", "_LAST_SHINGLE_CACHE"):
-        if hasattr(dedup, attr):
-            slots.append(getattr(dedup, attr))
-    for mod, attr in (("yougile_etl_pipeline_spark.registry_r15",
-                       "_SWEEP_CACHE"),
-                      ("yougile_etl_pipeline_spark.registry_r16",
-                       "_R16_CACHE")):
-        m = sys.modules.get(mod)
-        if m is not None and hasattr(m, attr):
-            slots.append(getattr(m, attr))
-    m17 = sys.modules.get("yougile_etl_pipeline_spark.registry_r17")
-    if m17 is not None:
-        for df in m17._R17_SHARED.values():
-            df.unpersist(blocking=False)
-        m17._R17_SHARED.clear()
-    for slot in slots:
-        for df in slot:
-            df.unpersist(blocking=False)
-        slot.clear()
-    spark.catalog.clearCache()
-
-
 def main() -> None:
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
     from yougile_etl_pipeline_spark import registry_r17  # noqa: F401
+    from yougile_etl_pipeline_spark.operators import caching
     from yougile_etl_pipeline_spark.operators.diagnostics import (
         formatted_plan,
         plan_profile,
@@ -91,7 +64,7 @@ def main() -> None:
     spark = get_spark(app_name=f"dump-r17-plans-{tag}")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
-        _drain_caches(spark)
+        caching.drain(spark)
         df = QUERIES[name](spark, SF)
         plan = formatted_plan(df)
         p = plan_profile(df)

@@ -10,11 +10,11 @@
    no-ops); the r17 staged test runs its smoke in a subprocess, and
    the direct-import pollution scenario is exercised here in a
    subprocess too.
-3. The positional 2-slot FIFO persist caches (registry_r15._SWEEP_CACHE,
-   registry_r16._R16_CACHE) are now plan-keyed sameSemantics LRUs
-   (operators/caching.py::PlanKeyedLRU — the text.py gram-cache
-   pattern): an entry that persists two relations can no longer be
-   silently unpersisted by the next entry's single persist.
+3. The positional 2-slot FIFO persist caches of registry_r15/r16 are
+   gone: every reuse persist goes through the plan-keyed LRU in
+   operators/caching.py, so an entry that persists two relations can
+   no longer be silently unpersisted by the next entry's single
+   persist.
 4. minhash_decontam's broadcast of the benchmark band-bucket relation
    gained an optional max_bench_docs guard that raises a clear
    ValueError instead of OOMing on a corpus-sized bench side.
@@ -87,67 +87,111 @@ def test_staged_r17_import_keeps_window_accounting():
 
 
 # ---------------------------------------------------------------------------
-# 3: plan-keyed LRU semantics
+# 3: reuse-cache semantics (operators/caching.py)
 # ---------------------------------------------------------------------------
 
 def test_plan_keyed_lru_hit_returns_cached_instance(spark):
-    from yougile_etl_pipeline_spark.operators.caching import PlanKeyedLRU
+    from yougile_etl_pipeline_spark.operators import caching
 
-    lru = PlanKeyedLRU(slots=2)
+    caching.drain(spark)
     a = spark.range(100).selectExpr("id", "id * 2 AS v")
-    first = lru.persist(a)
+    first = caching.persist(a)
     # a semantically-identical rebuild HITS and returns the SAME
     # persisted object — no second persist is stacked
-    again = lru.persist(spark.range(100).selectExpr("id", "id * 2 AS v"))
+    again = caching.persist(
+        spark.range(100).selectExpr("id", "id * 2 AS v"))
     assert again is first
-    assert len(lru) == 1
+    assert len(caching._STORE) == 1
+    caching.drain(spark)
 
 
 def test_plan_keyed_lru_two_relation_entry_survives_interleaving(spark):
     """The ADVICE r15 #3 scenario: an entry persists TWO relations
-    (sig + truth); another entry's single persist must NOT evict
+    (sig + truth); other entries' single persists must NOT evict
     either while slots remain, and a rebuild of the pair must hit."""
-    from yougile_etl_pipeline_spark.operators.caching import PlanKeyedLRU
+    from yougile_etl_pipeline_spark.operators import caching
 
-    # NOTE: sameSemantics canonicalizes aliases away, so the three
-    # relations must differ STRUCTURALLY (as the registry's sig /
-    # truth / pairs relations do), not just in column names.
-    lru = PlanKeyedLRU(slots=3)
-    sig = lru.persist(spark.range(50).selectExpr("id", "id * 3 AS s"))
-    truth = lru.persist(spark.range(50).filter("id % 2 = 0"))
-    other = lru.persist(spark.range(10).selectExpr("id + 7 AS o"))
-    assert len(lru) == 3
+    # NOTE: sameSemantics canonicalizes aliases away, so the relations
+    # must differ STRUCTURALLY (as the registry's sig / truth / pairs
+    # relations do), not just in column names.
+    caching.drain(spark)
+    sig = caching.persist(spark.range(50).selectExpr("id", "id * 3 AS s"))
+    truth = caching.persist(spark.range(50).filter("id % 2 = 0"))
+    others = [caching.persist(spark.range(10).selectExpr(f"id + {k} AS o"))
+              for k in range(7, 7 + caching.SLOTS - 2)]
+    assert len(caching._STORE) == caching.SLOTS
     # both shared relations still cached — rebuilds hit
-    assert lru.persist(
+    assert caching.persist(
         spark.range(50).selectExpr("id", "id * 3 AS s")) is sig
-    assert lru.persist(spark.range(50).filter("id % 2 = 0")) is truth
-    assert lru.persist(spark.range(10).selectExpr("id + 7 AS o")) is other
+    assert caching.persist(spark.range(50).filter("id % 2 = 0")) is truth
+    assert caching.persist(
+        spark.range(10).selectExpr("id + 7 AS o")) is others[0]
+    caching.drain(spark)
 
 
 def test_plan_keyed_lru_evicts_oldest_past_bound(spark):
-    from yougile_etl_pipeline_spark.operators.caching import PlanKeyedLRU
+    from yougile_etl_pipeline_spark.operators import caching
 
-    lru = PlanKeyedLRU(slots=2)
-    a = lru.persist(spark.range(10).selectExpr("id * 2 AS a"))
-    b = lru.persist(spark.range(10).filter("id > 3"))
+    caching.drain(spark)
+    a = caching.persist(spark.range(10).selectExpr("id * 2 AS a"))
+    b = caching.persist(spark.range(10).filter("id > 3"))
     # touch a → b becomes oldest
-    assert lru.persist(spark.range(10).selectExpr("id * 2 AS a")) is a
-    c = lru.persist(spark.range(10).selectExpr("id + 5 AS c"))
-    assert len(lru) == 2
-    assert spark.range(10).selectExpr("id * 2 AS a") in lru
-    assert spark.range(10).selectExpr("id + 5 AS c") in lru
-    assert spark.range(10).filter("id > 3") not in lru
-    for df in (a, b, c):
-        df.unpersist(blocking=False)
+    assert caching.persist(spark.range(10).selectExpr("id * 2 AS a")) is a
+    rest = [caching.persist(spark.range(10).selectExpr(f"id + {k} AS c"))
+            for k in range(5, 5 + caching.SLOTS - 1)]
+    assert len(caching._STORE) == caching.SLOTS
+    cached = list(caching._STORE.values())
+    assert any(c is a for c in cached)
+    assert all(c is not b for c in cached)
+    assert not b.storageLevel.useMemory
+    assert cached[-1] is rest[-1]
+    caching.drain(spark)
 
 
-def test_registry_caches_are_plan_keyed():
-    import yougile_etl_pipeline_spark.registry_r15 as r15
-    import yougile_etl_pipeline_spark.registry_r16 as r16
-    from yougile_etl_pipeline_spark.operators.caching import PlanKeyedLRU
+def test_named_lookup_builds_once_and_shares_the_lru(spark):
+    """shared(): ``build`` runs only on a miss, and named entries
+    count against the same slot bound as plan-keyed ones."""
+    from yougile_etl_pipeline_spark.operators import caching
 
-    assert isinstance(r15._SWEEP_CACHE, PlanKeyedLRU)
-    assert isinstance(r16._R16_CACHE, PlanKeyedLRU)
+    caching.drain(spark)
+    calls = []
+
+    def build():
+        calls.append(1)
+        return spark.range(20).filter("id % 3 = 0")
+
+    first = caching.shared(spark, ("sf", "stage"), build)
+    assert caching.shared(spark, ("sf", "stage"), build) is first
+    assert calls == [1]
+    assert first.storageLevel.useMemory
+    for k in range(caching.SLOTS):
+        caching.persist(spark.range(10).selectExpr(f"id + {k} AS n"))
+    assert len(caching._STORE) == caching.SLOTS
+    assert not first.storageLevel.useMemory
+    caching.shared(spark, ("sf", "stage"), build)
+    assert calls == [1, 1]
+    caching.drain(spark)
+    assert len(caching._STORE) == 0
+
+
+def test_reuse_persists_live_only_in_caching():
+    """The registry banks and the dedup/text operators persist for
+    reuse only through operators/caching.py: no module-level slot
+    lists, LRUs or memo dicts of persisted relations of their own."""
+    import re
+
+    pkg = os.path.join(REPO, "yougile_etl_pipeline_spark")
+    files = [os.path.join(pkg, "operators", f) for f in ("dedup.py",
+                                                         "text.py")]
+    files += [os.path.join(pkg, f) for f in sorted(os.listdir(pkg))
+              if re.fullmatch(r"registry_r\d+\.py", f)]
+    for path in files:
+        src = open(path).read()
+        bare = re.findall(r"(?<!caching)\.persist\(", src)
+        assert not bare, f"{path}: persist outside caching.persist"
+        assert "unpersist(" not in src, path
+        assert not re.search(r"PlanKeyedLRU|\b_\w*(LRU|CACHE|SHARED)\b",
+                             src), path
 
 
 # ---------------------------------------------------------------------------

@@ -110,23 +110,19 @@ def test_skipgram_cooccurrence_window_semantics(spark):
 def test_skipgram_shares_tokenized_relation_with_collocations(spark):
     """Same input ⇒ collocation_lift and skipgram_cooccurrence share
     ONE persisted tokenized relation via the plan-keyed LRU."""
-    from yougile_etl_pipeline_spark.operators import text as t
+    from yougile_etl_pipeline_spark.operators import caching
     from yougile_etl_pipeline_spark.operators.text import (
         collocation_lift,
         skipgram_cooccurrence,
     )
 
-    saved = list(t._LAST_GRAM_CACHE)
-    t._LAST_GRAM_CACHE.clear()
+    caching.drain(spark)
     try:
         docs = spark.createDataFrame(
             [(0, "a b c d e"), (1, "a b c d e")],
             "doc_id long, text string")
         collocation_lift(docs, min_pair_count=1)
         skipgram_cooccurrence(docs, min_pair_count=1)
-        assert len(t._LAST_GRAM_CACHE) == 1
+        assert len(caching._STORE) == 1
     finally:
-        for c in t._LAST_GRAM_CACHE:
-            c.unpersist(blocking=False)
-        t._LAST_GRAM_CACHE.clear()
-        t._LAST_GRAM_CACHE.extend(saved)
+        caching.drain(spark)

@@ -129,37 +129,34 @@ def test_dup_spans_duckdb_parity(spark):
 def test_gram_cache_is_plan_keyed_lru(spark):
     """ADVICE r14: the old single shared slot meant a composed query
     that built two gram-stream operators evicted the earlier persist
-    BEFORE the job ran. The cache is now keyed by plan semantics with
-    3 LRU slots: a semantic hit returns the ALREADY-persisted
-    DataFrame, misses evict oldest-first beyond capacity."""
-    from yougile_etl_pipeline_spark.operators import text as t
+    BEFORE the job ran. The reuse cache is keyed by plan semantics: a
+    semantic hit returns the ALREADY-persisted DataFrame, misses evict
+    oldest-first beyond capacity and unpersist the evicted relation."""
+    from yougile_etl_pipeline_spark.operators import caching
 
-    saved = list(t._LAST_GRAM_CACHE)
-    t._LAST_GRAM_CACHE.clear()
+    caching.drain(spark)
     try:
         a1 = spark.range(10).selectExpr("id * 2 as v")
         a2 = spark.range(10).selectExpr("id * 2 as v")  # same plan
-        r1 = t._cache_gram_stream(a1)
-        r2 = t._cache_gram_stream(a2)
+        r1 = caching.persist(a1)
+        r2 = caching.persist(a2)
         assert r2 is r1, "semantic twin must share the persisted slot"
-        assert len(t._LAST_GRAM_CACHE) == 1
-        rb = t._cache_gram_stream(spark.range(10).selectExpr("id*3 v"))
-        rc = t._cache_gram_stream(spark.range(10).selectExpr("id*5 v"))
-        assert len(t._LAST_GRAM_CACHE) == t._GRAM_CACHE_SLOTS == 3
+        assert len(caching._STORE) == 1
+        rest = [caching.persist(spark.range(10).selectExpr(f"id*{k} v"))
+                for k in range(3, 3 + caching.SLOTS - 1)]
+        assert len(caching._STORE) == caching.SLOTS
         # capacity exceeded: the LRU slot (r1) is evicted + unpersisted
-        rd = t._cache_gram_stream(spark.range(10).selectExpr("id*7 v"))
-        assert r1 not in t._LAST_GRAM_CACHE
+        rd = caching.persist(spark.range(10).selectExpr("id*997 v"))
+        assert all(c is not r1 for c in caching._STORE.values())
         assert not r1.storageLevel.useMemory
-        assert [x is y for x, y in
-                zip(t._LAST_GRAM_CACHE, [rb, rc, rd])] == [True] * 3
-        # a hit refreshes recency: rb moves to MRU, so rc is now LRU
-        t._cache_gram_stream(spark.range(10).selectExpr("id*3 v"))
-        assert t._LAST_GRAM_CACHE[-1] is rb
+        assert [x is y for x, y in zip(caching._STORE.values(),
+                                       rest + [rd])] == \
+            [True] * caching.SLOTS
+        # a hit refreshes recency: rest[0] moves to MRU
+        caching.persist(spark.range(10).selectExpr("id*3 v"))
+        assert list(caching._STORE.values())[-1] is rest[0]
     finally:
-        for cached in t._LAST_GRAM_CACHE:
-            cached.unpersist(blocking=False)
-        t._LAST_GRAM_CACHE.clear()
-        t._LAST_GRAM_CACHE.extend(saved)
+        caching.drain(spark)
 
 
 def test_dup_span_twins_share_one_persisted_gram_stream(spark):
@@ -167,18 +164,17 @@ def test_dup_span_twins_share_one_persisted_gram_stream(spark):
     the identical positional-gram stream — the exact+capped cap-audit
     composition that used to evict itself now occupies ONE shared
     persisted slot (the ADVICE-r14 scenario)."""
-    from yougile_etl_pipeline_spark.operators import text as t
+    from yougile_etl_pipeline_spark.operators import caching
     from yougile_etl_pipeline_spark.operators.text import (
         dup_span_removal,
     )
 
-    saved = list(t._LAST_GRAM_CACHE)
-    t._LAST_GRAM_CACHE.clear()
+    caching.drain(spark)
     try:
         d = _docs(spark, ["a b c d e f g", "a b c d e f g", "x y z"])
         cov = dup_span_coverage(d)
         rem = dup_span_removal(d)
-        assert len(t._LAST_GRAM_CACHE) == 1, (
+        assert len(caching._STORE) == 1, (
             "coverage+removal must share one persisted gram stream")
         # and the shared persist must not corrupt either result
         assert {r["doc_id"]: r["n_covered"]
@@ -187,12 +183,9 @@ def test_dup_span_twins_share_one_persisted_gram_stream(spark):
                 for r in rem.collect()} == {0: 0, 1: 7, 2: 0}
         # the exact+capped removal twins share it too
         dup_span_removal(d, max_gram_df=5)
-        assert len(t._LAST_GRAM_CACHE) == 1
+        assert len(caching._STORE) == 1
     finally:
-        for cached in t._LAST_GRAM_CACHE:
-            cached.unpersist(blocking=False)
-        t._LAST_GRAM_CACHE.clear()
-        t._LAST_GRAM_CACHE.extend(saved)
+        caching.drain(spark)
 
 
 def test_dup_span_source_pairs_debut_attribution(spark):

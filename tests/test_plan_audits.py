@@ -5,8 +5,6 @@ passes correctness but regresses 100 TB behavior — these tests catch it."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
 from tests.conftest import SF_SMOKE
@@ -18,29 +16,15 @@ from yougile_etl_pipeline_spark.registry import QUERIES
 def _cold_plan_caches(spark):
     """Plan budgets pin the COLD plan shape. Spark's CacheManager
     substitutes any semantically-matching PERSISTED relation into new
-    plans (InMemoryRelation), so a warm cache left by earlier tests —
-    the text gram-stream LRU, the dedup shingle slot, the r15/r16
-    sweep slots — changes exchange counts in the formatted plan and
+    plans (InMemoryRelation), so a warm reuse-cache entry left by
+    earlier tests changes exchange counts in the formatted plan and
     makes these budgets depend on suite order (r15: the sweep's
     persisted 18-table bucket relation overlapped
-    sim_ann_lsh_bucket's corpus bucketing). Empty every engine-level
-    persist slot and Spark's cache so each audit sees the uncached
-    plan."""
-    from yougile_etl_pipeline_spark.operators import dedup, text
+    sim_ann_lsh_bucket's corpus bucketing). Drain the engine's reuse
+    cache and Spark's cache so each audit sees the uncached plan."""
+    from yougile_etl_pipeline_spark.operators import caching
 
-    slots = [text._LAST_GRAM_CACHE, dedup._SHINGLE_LRU, dedup._SIG_LRU]
-    for mod, attr in (("yougile_etl_pipeline_spark.registry_r15",
-                       "_SWEEP_CACHE"),
-                      ("yougile_etl_pipeline_spark.registry_r16",
-                       "_R16_CACHE")):
-        m = sys.modules.get(mod)
-        if m is not None and hasattr(m, attr):
-            slots.append(getattr(m, attr))
-    for slot in slots:
-        for df in slot:
-            df.unpersist(blocking=False)
-        slot.clear()
-    spark.catalog.clearCache()
+    caching.drain(spark)
     yield
 
 

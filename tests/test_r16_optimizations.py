@@ -112,12 +112,9 @@ def test_dup_span_gram_stream_prepartitioned_by_fingerprint(spark):
     the join-back (both fp-keyed) reuse that one exchange instead of
     re-shuffling the full stream (guide §2.4). Cold-plan shape: the
     repartition must be present and keyed on __fp."""
-    from yougile_etl_pipeline_spark.operators import text
+    from yougile_etl_pipeline_spark.operators import caching, text
 
-    for df_cached in list(text._LAST_GRAM_CACHE):
-        df_cached.unpersist(blocking=False)
-    text._LAST_GRAM_CACHE.clear()
-    spark.catalog.clearCache()
+    caching.drain(spark)
 
     docs = load_table(spark, SF_SMOKE, "documents")
     out = text.dup_span_removal(docs, n=5)

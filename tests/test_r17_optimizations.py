@@ -150,6 +150,20 @@ def test_table_memo_is_keyed_per_application(spark):
     # every lookup key embeds the CURRENT context's applicationId
     assert all(k[0] == app for k in T._TABLE_MEMO
                if k[1] == SF_SMOKE and k[2] == "orders")
+    # ...and the memos drop a stopped application's entries (they pin
+    # its plans) as soon as a call arrives under another application.
+    # Simulate "filled by an application that is gone" by re-stamping
+    # both memos with a dead application id.
+    dead = "local-stopped-app"
+    stale = load_table(spark, SF_SMOKE, "orders")
+    for memo in (T._TABLE_MEMO, T._NUM_PARTS_MEMO):
+        memo.app = dead
+        memo[(dead, "stale")] = (stale, 1)
+    load_table(spark, SF_SMOKE, "orders")
+    T.ensure_parallelism(stale)
+    for memo in (T._TABLE_MEMO, T._NUM_PARTS_MEMO):
+        assert memo.app == app
+        assert memo and all(k[0] == app for k in memo), list(memo)
 
 
 def test_table_row_count_recurses_and_raises_on_empty(tmp_path):
@@ -188,25 +202,24 @@ def test_shared_minhash_signature_returns_same_relation(spark):
 
 
 def test_shingle_stream_lru_shares_across_builds(spark):
+    from yougile_etl_pipeline_spark.operators import caching
     from yougile_etl_pipeline_spark.operators import dedup as D
 
-    for df in list(D._SHINGLE_LRU):
-        df.unpersist(blocking=False)
-    D._SHINGLE_LRU.clear()
+    caching.drain(spark)
 
     docs = load_table(spark, SF_SMOKE, "documents")
     D.shingle_jaccard_pairs(docs, "doc_id", "text", threshold=0.5,
                             block_cols=["lang"])
-    assert len(D._SHINGLE_LRU) == 1
+    assert len(caching._STORE) == 1
     # same stream lineage (threshold does NOT participate): still 1
     D.shingle_jaccard_pairs(docs, "doc_id", "text", threshold=0.9,
                             block_cols=["lang"])
-    assert len(D._SHINGLE_LRU) == 1, (
+    assert len(caching._STORE) == 1, (
         "same capped stream must share one persist slot")
     # a different stream (other n) takes the second slot
     D.shingle_jaccard_pairs(docs, "doc_id", "text", n=2, threshold=0.5,
                             block_cols=["lang"])
-    assert len(D._SHINGLE_LRU) == 2
+    assert len(caching._STORE) == 2
 
 
 # ---------------------------------------------------------------------------

@@ -1,78 +1,110 @@
-"""Bounded, plan-keyed persist slots for shared intermediate relations.
+"""The engine's one reuse cache for persisted intermediate relations.
 
-Several registry entries persist a relation that feeds two or more
-downstream aggregations inside one query build (a scored pair relation,
-a bucketed signature, a truth set). A naive positional FIFO of persist
-slots has a composition hazard (ADVICE r14 on operators/text.py, ADVICE
-r15 #3 on registry_r15._SWEEP_CACHE / registry_r16._r16_persist): one
-entry that legitimately persists TWO relations fills every slot, so
-building any other persisting entry before the first one's DataFrame
-executes silently unpersists a still-needed relation and reintroduces
-the duplicate-lineage recomputation the persist existed to prevent.
+Several operators and registry entries persist a relation that later
+builds consume again: the MinHash signature of the eval tier, the
+dup-span gram stream, the capped shingle streams, the sweep and
+scorecard relations, the corpus-build stages. Every such persist goes
+through this module, so one rule decides how they are keyed, bounded
+and evicted:
 
-`PlanKeyedLRU` is the fix pattern proven in
-operators/text.py::_cache_gram_stream (round 15, certified under the
-five dup-span entries): slots are keyed by LOGICAL-PLAN SEMANTICS — a
-``sameSemantics`` hit returns the ALREADY-PERSISTED DataFrame instead
-of stacking a second identical persist, and misses evict beyond the
-slot bound, oldest first (in-flight consumers of an evicted result just
-recompute — correctness never depends on the cache). Single-threaded
-query construction is assumed, as everywhere in this engine: the
-registry builds plans sequentially; the cache is not guarded against
-concurrent construction.
+* ``persist(df)`` keys by logical-plan semantics: a ``semanticHash``
+  dict lookup confirmed with ``sameSemantics``. A semantically equal
+  rebuild gets the already-persisted DataFrame back instead of
+  stacking a second persist.
+* ``shared(spark, key, build)`` keys by name, for relations that never
+  compare semantically equal across builds (``connected_components``
+  lineages carry fresh ``localCheckpoint`` RDD ids). ``build`` runs
+  only on a miss.
+* Both share one LRU of ``SLOTS`` entries. A hit refreshes recency; a
+  miss past the bound unpersists the oldest entry. An in-flight
+  consumer of an evicted relation just recomputes it: correctness
+  never depends on the cache.
+* The store remembers the Spark application that filled it. A call
+  under another application forgets every entry first (their context
+  is stopped, so they cannot be unpersisted), so a restarted session
+  never gets a stale hit.
+* ``drain(spark)`` unpersists every entry and clears Spark's cache,
+  for cold plan dumps and plan-shape tests.
 
-At cluster scale the same reuse is a staging table or shuffle reuse;
-the local-mode persist (MEMORY_AND_DISK default) is the single-JVM
-equivalent.
+Query construction is single-threaded, as everywhere in this engine;
+the store is not guarded against concurrent builds. At cluster scale
+the same reuse is a staging table or shuffle reuse; the local-mode
+persist (MEMORY_AND_DISK) is the single-JVM equivalent.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections import OrderedDict
+from collections.abc import Callable, Hashable
 
-__all__ = ["PlanKeyedLRU"]
+from pyspark import SparkContext
+from pyspark.sql import DataFrame, SparkSession
+
+__all__ = ["SLOTS", "AppScopedDict", "persist", "shared", "drain"]
+
+# The 15 plan-keyed slots the call sites used to hold in separate
+# caches, plus the five named corpus-build relations.
+SLOTS = 20
 
 
-class PlanKeyedLRU:
-    """A small LRU of persisted DataFrames keyed by plan semantics."""
+class AppScopedDict(OrderedDict):
+    """A dict whose entries belong to one Spark application.
 
-    def __init__(self, slots: int = 3) -> None:
-        assert slots >= 1
-        self._slots = slots
-        self._cache: list[DataFrame] = []
+    ``scope(sc)`` must be called before each lookup: under a different
+    ``applicationId`` than the one that filled the dict, every entry is
+    forgotten first."""
 
-    def persist(self, df: DataFrame) -> DataFrame:
-        """Return a persisted DataFrame semantically equal to ``df``.
+    app: str | None = None
 
-        On a ``sameSemantics`` hit the cached (already-persisted)
-        DataFrame is returned and refreshed to most-recently-used; on
-        a miss ``df`` is persisted, cached, and the oldest entry beyond
-        the slot bound is unpersisted (non-blocking)."""
-        for cached in self._cache:
-            if cached.sameSemantics(df):
-                self._cache.remove(cached)
-                self._cache.append(cached)  # refresh LRU position
-                return cached
-        df = df.persist()
-        self._cache.append(df)
-        while len(self._cache) > self._slots:
-            self._cache.pop(0).unpersist(blocking=False)
-        return df
+    def scope(self, sc: SparkContext) -> str:
+        app = sc.applicationId
+        if app != self.app:
+            self.clear()
+            self.app = app
+        return app
 
-    def __len__(self) -> int:
-        return len(self._cache)
 
-    def __iter__(self):
-        # oldest → newest, same as the list-based slots this class
-        # replaced (tests/test_plan_audits.py's cache-draining fixture
-        # iterates slots to unpersist, then calls clear()).
-        return iter(list(self._cache))
+_STORE = AppScopedDict()
 
-    def __contains__(self, df: DataFrame) -> bool:
-        return any(c.sameSemantics(df) for c in self._cache)
 
-    def clear(self) -> None:
-        """Drop every slot WITHOUT unpersisting (callers that want the
-        blocks released iterate + unpersist first, like Spark's own
-        catalog.clearCache contract in the plan-audit fixture)."""
-        self._cache.clear()
+def _put(key: Hashable, df: DataFrame) -> DataFrame:
+    old = _STORE.pop(key, None)
+    if old is not None:  # a semanticHash collision: replace the slot
+        old.unpersist(blocking=False)
+    _STORE[key] = df
+    while len(_STORE) > SLOTS:
+        _STORE.popitem(last=False)[1].unpersist(blocking=False)
+    return df
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """Return a persisted DataFrame semantically equal to ``df``."""
+    _STORE.scope(df.sparkSession.sparkContext)
+    key = ("plan", df.semanticHash())
+    hit = _STORE.get(key)
+    if hit is not None and hit.sameSemantics(df):
+        _STORE.move_to_end(key)
+        return hit
+    return _put(key, df.persist())
+
+
+def shared(spark: SparkSession, key: Hashable,
+           build: Callable[[], DataFrame]) -> DataFrame:
+    """Return the persisted relation stored under ``key``, building and
+    persisting it with ``build()`` on a miss."""
+    _STORE.scope(spark.sparkContext)
+    key = ("named", key)
+    hit = _STORE.get(key)
+    if hit is not None:
+        _STORE.move_to_end(key)
+        return hit
+    return _put(key, build().persist())
+
+
+def drain(spark: SparkSession) -> None:
+    """Unpersist every cached relation and clear Spark's cache."""
+    _STORE.scope(spark.sparkContext)
+    for df in _STORE.values():
+        df.unpersist(blocking=False)
+    _STORE.clear()
+    spark.catalog.clearCache()

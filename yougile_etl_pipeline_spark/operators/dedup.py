@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from yougile_etl_pipeline_spark.operators.caching import PlanKeyedLRU
+from yougile_etl_pipeline_spark.operators import caching
 from yougile_etl_pipeline_spark.operators.text import (
     fingerprint_exact,
     shingles,
@@ -57,19 +57,6 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         F.min(id_col).alias("canonical_id"),
         F.count(F.lit(1)).alias("dup_count"),
     )
-
-
-# Plan-keyed persist slots for the (capped) shingle streams feeding the
-# pair self-joins (r17, VERDICT r16 #2 — was a single positional slot
-# that re-persisted a FRESH DataFrame on every call): a sameSemantics
-# hit now returns the already-persisted stream, so eval-tier entries
-# built in sequence over the SAME capped stream lineage (the truth side
-# of the recall/threshold/degree scorecards — the stream depends only
-# on (df, n, block_cols, max_shingle_df), NOT on the threshold) share
-# one materialization per session instead of re-running the explode +
-# cap per entry. Two slots bound memory at two streams (the
-# gram-stream pattern from operators/text.py, cross-query).
-_SHINGLE_LRU = PlanKeyedLRU(slots=2)
 
 
 def _shingled(df: DataFrame, id_col: str, text_col: str, n: int,
@@ -125,10 +112,10 @@ def shingle_jaccard_pairs(
     # persist each one re-runs the explode — measured 4× the work at
     # sf0.1. At cluster scale the same reuse is a staging table or
     # spark's shuffle reuse; MEMORY_AND_DISK is the local equivalent.
-    # Plan-keyed slots (bounded; see _SHINGLE_LRU): a semantically
-    # equal stream built by a LATER eval entry reuses this one's
-    # materialization instead of re-persisting fresh.
-    ex = _SHINGLE_LRU.persist(ex)
+    # Through the reuse cache: the stream depends only on (df, n,
+    # block_cols, max_shingle_df), not the threshold, so the eval
+    # entries' truth sides share one materialization.
+    ex = caching.persist(ex)
     sizes = ex.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
 
     a = ex.select(F.col("doc").alias("doc_a"), *[F.col(c) for c in block_cols],
@@ -194,7 +181,7 @@ def idf_weighted_jaccard_pairs(
                       F.greatest(F.lit(1).cast("bigint"),
                                  F.expr("__nd div __df"))
                       .alias("__w")))
-    exw = _SHINGLE_LRU.persist(ex.join(w, "sh"))
+    exw = caching.persist(ex.join(w, "sh"))
     sizes = exw.groupBy("doc").agg(
         F.sum("__w").cast("bigint").alias("__tw"))
     a = exw.select(F.col("doc").alias("doc_a"),
@@ -238,7 +225,7 @@ def shingle_containment_pairs(
 
     Same scale shape as `shingle_jaccard_pairs` (same candidate
     equi-join on (block, shingle), same stop-shingle DF cap bounding
-    the self-join, same single-slot persist of the shingle stream);
+    the self-join, same cached persist of the shingle stream);
     emits each ``id_a < id_b`` pair once with BOTH directions
     (``cont_a_in_b``, ``cont_b_in_a`` — exact-int ratios, one IEEE
     division each) and keeps pairs where EITHER direction ≥
@@ -262,7 +249,7 @@ def shingle_containment_pairs(
         keep = dfreq.filter(F.col("__df") <= max_shingle_df) \
                     .select(*block_cols, "sh")
         ex = ex.join(keep, [*block_cols, "sh"])
-    ex = _SHINGLE_LRU.persist(ex)
+    ex = caching.persist(ex)
     sizes = ex.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
 
     a = ex.select(F.col("doc").alias("doc_a"),
@@ -337,31 +324,18 @@ def minhash_signature(df: DataFrame, id_col: str, text_col: str,
     return ex.groupBy("doc").agg(*aggs)
 
 
-# Plan-keyed persist slots for MinHash signature relations consumed by
-# the eval/profile tier (r17, VERDICT r16 #2). The signature aggregate
-# (one md5 per shingle over the exploded stream) dominates every
-# banding scorecard's cost and is IDENTICAL across the tier's entries
-# (same docs plan via the load_table memo, same n_hashes/shingle_n) —
-# sharing one persisted copy per session removes the per-entry
-# recompute. Signatures are tiny (one row per doc, n_hashes short
-# strings), so a few slots cost ~nothing. Three slots: the tier
-# consumes three distinct signature lineages in bench order (full
-# corpus for the LSH scorecards, the train split for the decontam
-# lenses, the canonical survivors for the capstone) — bounding at 3
-# avoids eviction churn between adjacent entries.
-_SIG_LRU = PlanKeyedLRU(slots=3)
-
-
 def shared_minhash_signature(df: DataFrame, id_col: str, text_col: str,
                              *, n_hashes: int = 8,
                              shingle_n: int = 3) -> DataFrame:
-    """`minhash_signature` through a bounded plan-keyed persist slot —
-    for eval/profile/calibration entries that all consume the same
+    """`minhash_signature` through the reuse cache (operators/caching.py)
+    — for eval/profile/calibration entries that all consume the same
     signature relation (recall scorecards, bucket profiles, estimate
-    calibration, band sweeps). The certified production operators
-    (`minhash_lsh_pairs`'s internal build) stay unpersisted: their
-    bench numbers keep pricing the signature computation itself."""
-    return _SIG_LRU.persist(minhash_signature(
+    calibration, band sweeps, decontamination). The signature aggregate
+    dominates each of them and is identical across the tier, while the
+    relation itself is tiny (one row per doc). The certified production
+    operators (`minhash_lsh_pairs`'s internal build) stay unpersisted:
+    their bench numbers keep pricing the signature computation itself."""
+    return caching.persist(minhash_signature(
         df, id_col, text_col, n_hashes=n_hashes, shingle_n=shingle_n))
 
 
@@ -710,10 +684,6 @@ def dedup_incremental(new_docs: DataFrame, known_fps: DataFrame,
 
 _BLOOM_K = 7  # hash functions per key; fpp ≈ (1 - e^(-k*n/m))^k
 
-# Single-slot cache bound for the bloom probe stream (same pattern and
-# rationale as _LAST_SHINGLE_CACHE above).
-_LAST_BLOOM_CACHE: list[DataFrame] = []
-
 
 def _bloom_positions(fps: pd.Series, m_bits: int) -> np.ndarray:
     """k bit positions per fingerprint: ONE md5 per fingerprint, k
@@ -809,14 +779,10 @@ def dedup_incremental_bloom(new_docs: DataFrame, known_fps: DataFrame,
 
     # persist: the probe column feeds BOTH filter legs and the canon
     # aggregate — without it the pandas UDF re-evaluates per consumer.
-    fp = (new_docs.select(F.col(id_col),
-                          fingerprint_exact(text_col).alias("fp"))
-          .withColumn("__maybe", might_contain("fp"))
-          .persist())
-    prev = _LAST_BLOOM_CACHE.pop(0) if _LAST_BLOOM_CACHE else None
-    if prev is not None:
-        prev.unpersist(blocking=False)
-    _LAST_BLOOM_CACHE.append(fp)
+    fp = caching.persist(
+        new_docs.select(F.col(id_col),
+                        fingerprint_exact(text_col).alias("fp"))
+        .withColumn("__maybe", might_contain("fp")))
 
     # Store join only for probe-positive rows; negatives keep __k = NULL
     # without touching the store.

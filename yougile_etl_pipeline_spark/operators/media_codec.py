@@ -724,7 +724,10 @@ def _png_recon_row(filt: bytes, prior: bytes, bpp: int,
     numpy, and type 1's recurrence ``recon[i] = (filt[i] +
     recon[i-bpp]) & 0xFF`` is a per-byte-LANE running sum, i.e. a
     cumsum mod 256 (mod distributes over addition) — one vector pass.
-    Types 3/4 keep the byte loop at every length: their predictors
+    The type-1 vector path also needs ``n % bpp == 0``: the lanes are a
+    ``reshape(-1, bpp)``, so a row that is not a whole number of pixels
+    (only a malformed stream, since a valid scanline holds whole
+    pixels) keeps the byte loop. Types 3/4 keep the byte loop at every length: their predictors
     read the row being reconstructed through a nonlinear step
     (>>1 / Paeth), so no closed vector form exists; the loop bodies
     are specialized per type (no per-byte branch chain). Short rows

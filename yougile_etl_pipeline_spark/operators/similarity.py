@@ -430,6 +430,15 @@ def _exact_rerank(cand: DataFrame, queries: DataFrame, k: int,
                  .filter(F.col("rank") <= k))
 
 
+def _check_packed_planes(planes_per_table: int) -> None:
+    """The numpy LSH paths pack each table's sign bits into one int64
+    code (``bits @ 2**arange(P)``), which overflows past 63 planes."""
+    if not 1 <= planes_per_table <= 63:
+        raise ValueError(
+            f"planes_per_table must be in 1..63 for the packed int64 "
+            f"bucket codes, got {planes_per_table}")
+
+
 def _bucketed_np(df: DataFrame, id_alias: str, vec_alias: str,
                  id_col: str, vec_col: str,
                  n_tables: int, planes_per_table: int,
@@ -450,6 +459,7 @@ def _bucketed_np(df: DataFrame, id_alias: str, vec_alias: str,
         ensure_parallelism,
     )
 
+    _check_packed_planes(planes_per_table)
     # fan_out=False: the query side is small by contract — see
     # `_bucketed`; the guard there would only add an exchange.
     if fan_out:
@@ -529,7 +539,11 @@ def lsh_bucket_topk_np(corpus: DataFrame, queries: DataFrame, k: int = 5,
     query rows). **`queries` must be deterministic** (ADVICE r16): the
     collected rows drive candidate generation while the exact rerank
     re-evaluates the `queries` lineage — see `brute_force_topk_np` for
-    why the rerank side is NOT rebuilt from the collected rows."""
+    why the rerank side is NOT rebuilt from the collected rows.
+
+    Raises ``ValueError`` unless ``1 <= planes_per_table <= 63`` (the
+    packed int64 bucket code), before any Spark job runs."""
+    _check_packed_planes(planes_per_table)
     q_rows = queries.select(id_col, vec_col).limit(
         _MAX_COLLECTED_QUERIES + 1).collect()
     if 0 < len(q_rows) <= _MAX_COLLECTED_QUERIES:
@@ -569,7 +583,6 @@ def _lsh_topk_np_smallq(corpus: DataFrame, q_rows, queries: DataFrame,
     )
 
     pp = planes_per_table
-    assert pp <= 63, "packed per-table code needs planes_per_table <= 63"
     P = np.asarray(hyperplanes(n_tables, planes_per_table),
                    dtype=np.float64).reshape(n_tables * pp, -1)
     pows = 2 ** np.arange(pp - 1, -1, -1)

@@ -18,6 +18,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from yougile_etl_pipeline_spark.operators import caching
+
 __all__ = [
     "tokens",
     "bpe_ish_tokens",
@@ -809,8 +811,8 @@ def collocation_lift(df: DataFrame, *, text_col: str = "text",
     one-row broadcast via cross join (the `bm25_scores` pattern — the
     whole plan stays lazy, no driver collect). The TOKENIZED relation
     feeds three consumers (bigram counts, unigram counts, corpus
-    totals) and is persisted through the bounded plan-keyed LRU
-    `_cache_gram_stream` so the parquet scan + split run once, not
+    totals) and is persisted through the reuse cache
+    (`caching.persist`) so the parquet scan + split run once, not
     three times (r14: 3.27 s → measured post-change in BENCH_r14; at
     cluster scale the same reuse is a staging table)."""
     from yougile_etl_pipeline_spark.sources.tables import (
@@ -819,7 +821,7 @@ def collocation_lift(df: DataFrame, *, text_col: str = "text",
 
     df = ensure_parallelism(df)
     toks = tokens(text_col)
-    base = _cache_gram_stream(df.select(toks.alias("__t")))
+    base = caching.persist(df.select(toks.alias("__t")))
     starts = F.when(F.size("__t") > 1,
                     F.sequence(F.lit(1), F.size("__t") - 1)) \
               .otherwise(F.array().cast("array<int>"))
@@ -869,7 +871,7 @@ def skipgram_cooccurrence(df: DataFrame, *, text_col: str = "text",
 
     Scale: one tokenized relation feeding len(skips) positional
     explodes + unigram counts + corpus totals — persisted through the
-    plan-keyed `_cache_gram_stream` LRU, so it is scanned once AND
+    plan-keyed reuse cache (`caching.persist`), so it is scanned once AND
     shared with a collocation_lift over the same input (identical
     base plan). Pair/unigram aggregations are vocab²/vocab-bounded
     partial-agg shuffles; totals ride a one-row broadcast.
@@ -882,7 +884,7 @@ def skipgram_cooccurrence(df: DataFrame, *, text_col: str = "text",
 
     df = ensure_parallelism(df)
     toks = tokens(text_col)
-    base = _cache_gram_stream(df.select(toks.alias("__t")))
+    base = caching.persist(df.select(toks.alias("__t")))
     legs = []
     for d in skips:
         starts = F.when(F.size("__t") > d,
@@ -959,44 +961,6 @@ def readability_scores(df: DataFrame, *, id_col: str = "doc_id",
                      flesch.alias("flesch"))
 
 
-# Bounded LRU cache for the exploded positional-gram stream shared by
-# the dup-span/collocation operators (the dedup.py _LAST_SHINGLE_CACHE
-# precedent): the stream feeds BOTH the fingerprint-frequency/debut
-# aggregation and the join-back probe side, and without a persist each
-# consumer re-runs the explode+md5 scan — measured 29.4 s → 3.8 s at
-# the 10× sf1 probe (slope 8.0 → 2.4, round 14). At cluster scale the
-# same reuse is a staging table or shuffle reuse; MEMORY_AND_DISK is
-# the local equivalent.
-#
-# Keyed by logical-plan semantics (ADVICE r14: the old SINGLE slot was
-# shared by collocation_lift, dup_span_coverage and dup_span_removal,
-# so a composed query that built two of these — e.g. the cap-audit's
-# exact+capped removal twins — evicted the earlier persist BEFORE the
-# job ran, silently reintroducing the duplicate explode+md5 scans):
-# a `sameSemantics` hit returns the ALREADY-PERSISTED DataFrame, so
-# twins that derive the same gram stream now share one persist instead
-# of stacking two identical ones; misses evict beyond 3 slots, oldest
-# first (in-flight consumers of an evicted result just recompute).
-# Single-threaded query construction is assumed, as everywhere in this
-# engine — the registry builds plans sequentially; the cache is not
-# guarded against concurrent construction.
-_GRAM_CACHE_SLOTS = 3
-_LAST_GRAM_CACHE: list[DataFrame] = []
-
-
-def _cache_gram_stream(ex: DataFrame) -> DataFrame:
-    for cached in _LAST_GRAM_CACHE:
-        if cached.sameSemantics(ex):
-            _LAST_GRAM_CACHE.remove(cached)
-            _LAST_GRAM_CACHE.append(cached)  # refresh LRU position
-            return cached
-    ex = ex.persist()
-    _LAST_GRAM_CACHE.append(ex)
-    while len(_LAST_GRAM_CACHE) > _GRAM_CACHE_SLOTS:
-        _LAST_GRAM_CACHE.pop(0).unpersist(blocking=False)
-    return ex
-
-
 def dup_span_coverage(df: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text", n: int = 5,
                       max_gram_df: int | None = None) -> DataFrame:
@@ -1061,7 +1025,11 @@ def dup_span_coverage(df: DataFrame, id_col: str = "doc_id",
                     toks.alias("__toks"))
             .select(id_col, "__s", F.md5(gram).alias("__fp"))
             .repartition("__fp"))
-    ex = _cache_gram_stream(ex)
+    # The stream feeds the frequency aggregation AND the join-back;
+    # without the persist each re-runs the explode+md5 scan (29.4 s →
+    # 3.8 s at the 10× sf1 probe). Twins over the same input (removal,
+    # source pairs) share this one persist through the plan key.
+    ex = caching.persist(ex)
     counts = (ex.groupBy("__fp")
                 .agg(F.count_distinct(F.col(id_col)).alias("__nd"))
                 .filter(F.col("__nd") >= 2))
@@ -1122,7 +1090,7 @@ def dup_span_source_pairs(df: DataFrame, id_col: str = "doc_id",
     has no single source).
 
     Distributed shape: the positional gram stream (shared through the
-    plan-keyed `_cache_gram_stream` LRU with coverage/removal over
+    plan-keyed reuse cache with coverage/removal over
     the same input) reduces to DISTINCT (doc, fp) — 16-byte md5
     fingerprints shuffle, never gram text; one fp-keyed stats agg
     (count distinct docs + min doc), one fp equi-join back, one
@@ -1139,7 +1107,7 @@ def dup_span_source_pairs(df: DataFrame, id_col: str = "doc_id",
                     toks.alias("__toks"))
             .select(id_col, "__s", F.md5(gram).alias("__fp"))
             .repartition("__fp"))
-    ex = _cache_gram_stream(ex)
+    ex = caching.persist(ex)
     exd = ex.select(id_col, "__fp").distinct()
     st = (exd.groupBy("__fp")
              .agg(F.count(F.lit(1)).cast("bigint").alias("__nd"),
@@ -1313,7 +1281,7 @@ def dup_span_removal(df: DataFrame, id_col: str = "doc_id",
                     toks.alias("__toks"))
             .select(id_col, "__s", F.md5(gram).alias("__fp"))
             .repartition("__fp"))
-    ex = _cache_gram_stream(ex)
+    ex = caching.persist(ex)
     if max_gram_df is None:
         debut = ex.groupBy("__fp").agg(
             F.min(F.col(id_col)).alias("__debut"))

@@ -1286,7 +1286,7 @@ _STABLE_CERTIFIED = [
     # ALL 50 rows promote below in window order EXCEPT
     # text_dup_span_removal_capped, HELD IN the r15 window for a
     # PLANNED change (ADVICE r14 #1: the shared single-slot
-    # _LAST_GRAM_CACHE in operators/text.py becomes a small keyed LRU
+    # gram-stream cache in operators/text.py becomes a small keyed LRU
     # so exact+capped dup-span twins and cross-operator compositions
     # keep their persist; changed implementations recertify
     # officially). The same planned change pulls FOUR long-stable
@@ -1342,9 +1342,9 @@ _STABLE_CERTIFIED = [
     # CORRECTNESS_r15 50/50 green (rows + schema + hash, zero errors);
     # ALL 50 rows promote below in window order EXCEPT
     # sim_lsh_recall_sweep, HELD IN the r16 window for a PLANNED
-    # change (ADVICE r15 #3: registry_r15's _SWEEP_CACHE positional
+    # change (ADVICE r15 #3: registry_r15's sweep-cache positional
     # 2-slot FIFO becomes a plan-keyed sameSemantics LRU — the
-    # operators/text.py::_cache_gram_stream pattern — so composed
+    # operators/text.py gram-stream pattern — so composed
     # builds can no longer silently unpersist the sweep's shared
     # signature relation; changed implementations recertify
     # officially). Window composition: 18 registry_r16 bank entries +
@@ -1671,7 +1671,7 @@ _STABLE_CERTIFIED = [
 # 1. CORRECTNESS_r15.json read: 50/50 green (rows + schema + hash,
 #    zero errors). 49 of the 50 window rows promoted into
 #    _STABLE_CERTIFIED above, in window order; sim_lsh_recall_sweep
-#    HELD IN the window for the PLANNED registry_r15._SWEEP_CACHE →
+#    HELD IN the window for the PLANNED registry_r15 sweep-cache →
 #    plan-keyed sameSemantics LRU change (ADVICE r15 #3; see the r16
 #    note inside _STABLE_CERTIFIED).
 # 2. Bank wired: `from yougile_etl_pipeline_spark import registry_r16`

@@ -993,14 +993,14 @@ def text_ngram_novelty(spark, sf):
     # aggregates — min-debut is duplicate-insensitive and the per-doc
     # distinct count moves into count_distinct, so no interpreted
     # per-row distinct lambda either.
-    from yougile_etl_pipeline_spark.operators.dedup import _SHINGLE_LRU
+    from yougile_etl_pipeline_spark.operators import caching
     from yougile_etl_pipeline_spark.operators.text import shingle_stream
 
     docs = load_table(spark, sf, "documents")
     # r17: the raw stream feeds two differently-keyed aggregates (per-
-    # doc distinct count; per-shingle min debut) — the bounded plan-
-    # keyed slot materializes the explode once per session
-    ex = _SHINGLE_LRU.persist(shingle_stream(docs, "doc_id", "text", 3))
+    # doc distinct count; per-shingle min debut) — the reuse cache
+    # materializes the explode once per session
+    ex = caching.persist(shingle_stream(docs, "doc_id", "text", 3))
     n_sh = ex.groupBy("doc_id").agg(
         F.count_distinct("sh").alias("n_shingles"))
     novel = (ex.groupBy("sh").agg(F.min("doc_id").alias("debut_doc"))

@@ -295,15 +295,15 @@ def text_jaccard_topk_pairs(spark, sf):
     # dedup_blocking_profile applied to a report query. Similarity is
     # integer ppm (floor), making the global top-k (TakeOrdered, no
     # full sort) hash-exact; (ppm DESC, a, b) is a total order.
-    from yougile_etl_pipeline_spark.operators.dedup import _SHINGLE_LRU
+    from yougile_etl_pipeline_spark.operators import caching
     from yougile_etl_pipeline_spark.operators.text import shingle_stream
 
     docs = load_table(spark, sf, "documents")
     # r17: the distinct bigram stream feeds FIVE subtrees (sizes, the
     # rare-shingle df filter, both blocked self-join legs, both
-    # intersection legs); the bounded plan-keyed slot materializes it
-    # once per session instead of leaning on runtime exchange reuse
-    bg = _SHINGLE_LRU.persist(
+    # intersection legs); the reuse cache materializes it once per
+    # session instead of leaning on runtime exchange reuse
+    bg = caching.persist(
         shingle_stream(docs, "doc_id", "text", n=2).distinct())
     sizes = bg.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("nb"))

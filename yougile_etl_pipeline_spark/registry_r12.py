@@ -827,7 +827,7 @@ def dedup_minhash_estimate_error(spark, sf):
     n_pos = F.size(toks) - 2
     offs = F.when(n_pos > 0, F.sequence(F.lit(0), n_pos - 1)) \
         .otherwise(F.array().cast("array<int>"))
-    from yougile_etl_pipeline_spark.operators.dedup import _SHINGLE_LRU
+    from yougile_etl_pipeline_spark.operators import caching
 
     ex = (docs.select(F.col("doc_id").alias("doc"), toks.alias("__t"),
                       F.explode(offs).alias("__i"))
@@ -837,9 +837,9 @@ def dedup_minhash_estimate_error(spark, sf):
               F.col("__t")[F.col("__i") + 2]).alias("sh"))
           .distinct())
     # r17: the distinct exact-shingle stream feeds THREE consumers
-    # (sizes + both candidate-restricted join legs); the bounded
-    # plan-keyed slot materializes it once per session
-    ex = _SHINGLE_LRU.persist(ex)
+    # (sizes + both candidate-restricted join legs); the reuse cache
+    # materializes it once per session
+    ex = caching.persist(ex)
     sz = ex.groupBy("doc").agg(F.count(F.lit(1)).cast("bigint")
                                .alias("sz"))
     ea = ex.select(F.col("doc").alias("da"), "sh")

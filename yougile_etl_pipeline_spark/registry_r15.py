@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from yougile_etl_pipeline_spark.operators import caching
 from yougile_etl_pipeline_spark.registry import register
 from yougile_etl_pipeline_spark.sources.tables import load_table
 
@@ -945,9 +946,9 @@ def sim_lsh_recall_sweep(spark, sf):
     # tests/test_dedup_similarity.py): the L-table relation is exactly
     # ``tbl < L`` of the 18-table one. Bucket ONCE at L=18, persist,
     # and filter per arm; persist the truth relation its four
-    # consumers (tn + three hit joins) share. Both persists ride a
-    # bounded two-slot cache (the dedup._LAST_SHINGLE_CACHE
-    # rationale); at cluster scale they are staging tables.
+    # consumers (tn + three hit joins) share. Both persists go through
+    # the reuse cache (operators/caching.py); at cluster scale they are
+    # staging tables.
     from yougile_etl_pipeline_spark.operators.similarity import (
         _bucketed_np,
         brute_force_topk_np,
@@ -956,11 +957,11 @@ def sim_lsh_recall_sweep(spark, sf):
 
     emb = load_table(spark, sf, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
-    truth = _sweep_persist(
+    truth = caching.persist(
         brute_force_topk_np(emb, queries, k=5)
         .select("query_id", "match_id"))
     tn = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    cb18 = _sweep_persist(
+    cb18 = caching.persist(
         _bucketed_np(emb, "match_id", "c_vec", "vec_id", "embedding",
                      18, 4))
     qb18 = _bucketed_np(queries, "query_id", "q_vec", "vec_id",
@@ -984,27 +985,6 @@ def sim_lsh_recall_sweep(spark, sf):
     for a in arms[1:]:
         out = out.unionByName(a)
     return out
-
-
-# Bounded persist slots for the sweep's shared corpus bucketing.
-# Plan-keyed sameSemantics LRU (ADVICE r15 #3: the old positional
-# 2-slot FIFO had the same composition hazard the text.py gram cache
-# fixed in r15 — another persisting entry built before the sweep's
-# DataFrame executed could silently unpersist the still-needed
-# bucketing and reintroduce the duplicate-lineage recomputation).
-# Repeated builds (bench warm/time, check scripts) now HIT the cache
-# instead of stacking persisted copies; misses evict oldest-first.
-# This change is the reason sim_lsh_recall_sweep is HELD IN the r16
-# certification window (changed implementations recertify officially).
-from yougile_etl_pipeline_spark.operators.caching import (  # noqa: E402
-    PlanKeyedLRU,
-)
-
-_SWEEP_CACHE = PlanKeyedLRU(slots=2)
-
-
-def _sweep_persist(df):
-    return _SWEEP_CACHE.persist(df)
 
 
 # ---------------------------------------------------------------------------

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from yougile_etl_pipeline_spark.operators.caching import PlanKeyedLRU
+from yougile_etl_pipeline_spark.operators import caching
 from yougile_etl_pipeline_spark.registry import register
 from yougile_etl_pipeline_spark.sources.tables import (
     load_table,
@@ -314,11 +314,11 @@ def quality_dedup_threshold_curve(spark, sf):
     )
 
     docs = load_table(spark, sf, "documents")
-    # Persisted (bounded slot): the scored pair relation feeds BOTH
+    # Persisted (reuse cache): the scored pair relation feeds BOTH
     # the pair-level and the doc-level aggregations — without the
     # persist the whole self-join pair miner runs twice (measured 33
     # shuffles / 2.5 s at sf0.1 vs half that shared).
-    pairs = _r16_persist(
+    pairs = caching.persist(
         shingle_jaccard_pairs(docs, "doc_id", "text",
                               threshold=0.0, block_cols=["lang"],
                               max_shingle_df=100))
@@ -379,11 +379,11 @@ def dedup_pair_degree_hist(spark, sf):
     docs = load_table(spark, sf, "documents")
     kept = shingle_jaccard_pairs(docs, "doc_id", "text",
                                  threshold=0.5, block_cols=["lang"])
-    # Persisted (bounded slot): the tiny degree relation feeds both
+    # Persisted (reuse cache): the tiny degree relation feeds both
     # the histogram and the touched-count for the degree-0 row —
     # without it the pair miner upstream runs twice (measured 35
     # shuffles / 2.3 s at sf0.1).
-    deg = _r16_persist(
+    deg = caching.persist(
         kept.select(F.explode(F.array("doc_a", "doc_b")).alias("doc"))
             .groupBy("doc")
             .agg(F.count(F.lit(1)).cast("bigint").alias("degree")))
@@ -553,12 +553,10 @@ def dedup_minhash_band_sweep(spark, sf):
     )
 
     docs = load_table(spark, sf, "documents")
-    # r17: the signature persist moved to the TIER-shared plan-keyed
-    # slot (dedup._SIG_LRU) so the sweep shares one materialization
-    # with the r12/ext banding scorecards instead of holding a private
-    # copy in _R16_CACHE (VERDICT r16 #2).
+    # The signature comes from shared_minhash_signature, so the sweep
+    # shares one materialization with the r12/ext banding scorecards.
     sig = shared_minhash_signature(docs, "doc_id", "text")
-    truth = _r16_persist(
+    truth = caching.persist(
         shingle_jaccard_pairs(docs, "doc_id", "text",
                               threshold=0.5, block_cols=["lang"])
         .select("doc_a", "doc_b"))
@@ -1227,23 +1225,6 @@ def corpus_survivor_token_share(spark, sf):
             .select("source", "total_tokens", "kept_tokens",
                     F.expr("kept_tokens * 1000000 div total_tokens")
                      .cast("bigint").alias("kept_ppm")))
-
-
-# Bounded persist slots for the sweep-style entries' shared relations.
-# Plan-keyed sameSemantics LRU (ADVICE r15 #3: the old positional
-# 2-slot FIFO was shared by four r16 entries, and the band-sweep alone
-# fills two slots — sig + truth — so building any OTHER persisting
-# entry before the sweep's DataFrame executed silently unpersisted the
-# signature and reintroduced the duplicate-lineage recomputation; the
-# plan-keyed cache returns the already-persisted relation on a
-# semantics hit and evicts oldest-first only past the bound). Four
-# slots cover the worst certified composition (band-sweep's two shared
-# relations + two single-persist entries built interleaved).
-_R16_CACHE = PlanKeyedLRU(slots=4)
-
-
-def _r16_persist(df):
-    return _R16_CACHE.persist(df)
 
 
 # Staged-entry manifest, in registration order (kept in sync by the

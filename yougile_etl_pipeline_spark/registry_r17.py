@@ -50,36 +50,18 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from yougile_etl_pipeline_spark.operators import caching
 from yougile_etl_pipeline_spark.registry import register
 from yougile_etl_pipeline_spark.sources.tables import load_table
 
-# Shared-lineage store for this bank: the corpus-build capstone and
-# its funnel readout share the canon + gated relations; the two
-# cluster entries share the ranked component relation. A plan-keyed
-# sameSemantics cache (operators/caching.py::PlanKeyedLRU) CANNOT
-# express this sharing: connected_components localCheckpoints its
+# The corpus-build capstone and its funnel readout share the canon +
+# gated relations, the decontam readouts share the lens outputs, and the
+# two cluster entries share the ranked component relation. They go
+# through the NAMED lookup of the reuse cache (caching.shared), keyed
+# by (sf dir, stage name): connected_components localCheckpoints its
 # frontier, so two builds of the "same" lineage carry different
-# checkpoint RDD ids and never compare semantically equal (measured:
-# dedup_token_savings re-paid the full CC build after
-# dedup_cluster_profile despite an LRU hit path). The shared relations
-# are instead MEMOIZED per (Spark application, sf dir, stage name) —
-# the first build persists, every later build in the same process
-# returns the same persisted DataFrame. Never unpersisted: the store
-# is bounded by the handful of distinct sf dirs a process touches
-# (bench uses two), and the relations are the bank's hottest inputs.
-# At cluster scale this memo IS the staging table the pipeline would
-# write between stages.
-_R17_SHARED: dict = {}
-
-
-def _shared(spark, sf, name, builder):
-    key = (spark.sparkContext.applicationId, sf, name)
-    hit = _R17_SHARED.get(key)
-    if hit is not None:
-        return hit
-    df = builder().persist()
-    _R17_SHARED[key] = df
-    return df
+# checkpoint RDD ids and never compare semantically equal. At cluster
+# scale these are the staging tables the pipeline writes between stages.
 
 
 # --- DuckDB twin helpers (local copies of the registry_ext/r16 forms;
@@ -256,7 +238,7 @@ def _corpus_stages(spark, sf):
     candidates (never all-pairs), O(log d) pointer-jumping components,
     a broadcast bench bucket relation (train is never shuffled by
     decontam), one (doc, token) partial agg for the gate. canon and
-    gated are memoized persisted relations (see _R17_SHARED) — the
+    gated are shared persisted relations (caching.shared) — the
     local-mode stand-in for the staging tables a 100 TB pipeline
     would write between stages."""
     from yougile_etl_pipeline_spark.operators.dedup import (
@@ -289,11 +271,11 @@ def _corpus_stages(spark, sf):
                 .filter(F.col("rn") == 1)
                 .drop("rn", "component"))
 
-    canon = _shared(spark, sf, "build_canon", build_canon)
+    canon = caching.shared(spark, (sf, "build_canon"), build_canon)
     # r17 note: persisting `clean` itself was measured and rejected
     # (funnel 1.42→1.50 s, no consumer wins) — the expensive half of
     # the decontam stage is the canon-side signature, which already
-    # rides the tier-shared _SIG_LRU persist inside minhash_decontam;
+    # rides the shared signature persist inside minhash_decontam;
     # the remaining anti-join is cheaper than materializing clean.
     contam = minhash_decontam(canon, bench, "doc_id", "text")
     clean = canon.join(contam.select("doc_id"), "doc_id", "left_anti")
@@ -316,7 +298,7 @@ def _corpus_stages(spark, sf):
                 .select("doc_id", "lang", "source",
                         F.size("t").cast("bigint").alias("n_tokens")))
 
-    gated = _shared(spark, sf, "build_gated", build_gated)
+    gated = caching.shared(spark, (sf, "build_gated"), build_gated)
     return train, canon, clean, gated
 
 
@@ -376,19 +358,19 @@ def _decontam_lenses(spark, sf):
     docs = load_table(spark, sf, "documents")
     train = docs.filter(~_bench_pred())
     bench = docs.filter(_bench_pred())
-    ng = _shared(spark, sf, "decontam_ngram_hits",
-                 lambda: ngram_contamination(train, bench, n=8))
-    mh = _shared(spark, sf, "decontam_mh_hits",
-                 lambda: minhash_decontam(train, bench,
-                                          "doc_id", "text"))
+    ng = caching.shared(spark, (sf, "decontam_ngram_hits"),
+                        lambda: ngram_contamination(train, bench, n=8))
+    mh = caching.shared(spark, (sf, "decontam_mh_hits"),
+                        lambda: minhash_decontam(train, bench,
+                                                 "doc_id", "text"))
     return train, ng, mh
 
 
 def _doc_clusters(spark, sf):
     """Full-corpus MinHash-LSH components with the quality-survivor
     ranking and exact token counts — a memoized persisted relation
-    (shared by dedup_cluster_profile and dedup_token_savings; see
-    _R17_SHARED for why sameSemantics caching can't express this)."""
+    (shared by dedup_cluster_profile and dedup_token_savings through
+    the named lookup of the reuse cache)."""
     from yougile_etl_pipeline_spark.operators.dedup import (
         minhash_lsh_pairs,
     )
@@ -414,7 +396,7 @@ def _doc_clusters(spark, sf):
             "rn", F.row_number().over(
                 w.orderBy(F.col("n_chars").desc(), F.col("doc_id"))))
 
-    return _shared(spark, sf, "doc_clusters", build)
+    return caching.shared(spark, (sf, "doc_clusters"), build)
 
 
 # ---------------------------------------------------------------------------

@@ -62,7 +62,7 @@ ENGINE_CONF: dict[str, str] = {
     # win_rank_topn 2× slower and faster at 8 cores than 32 — task
     # overhead domination. r17 re-measured COLD (fresh JVM per
     # sample, interleaved configs, 2 reps x 19 headline queries):
-    # 4 MB wins on 11 of 19 queries and never loses materially
+    # 4 MB wins or ties on 17 of 19 queries and never loses materially
     # (per-query-min totals 7.58 s vs 8.26 s; win_rank 0.215 vs
     # 0.257) — the 512 KB split floor was a warm-JVM artifact, so the
     # Spark default stands. At 100 TB files are >=128 MB and

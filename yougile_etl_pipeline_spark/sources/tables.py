@@ -16,6 +16,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from yougile_etl_pipeline_spark.operators.caching import AppScopedDict
 from yougile_etl_pipeline_spark.schemas import (
     TESTDATA_SCHEMAS,
     TESTDATA_TABLES,
@@ -40,8 +41,10 @@ __all__ = ["load_table", "load_tables", "register_temp_views",
 # simply re-probes. Files mutating under a live session would stale
 # the memo, which no engine path does (bench/tests/driver all read
 # immutable testdata). Keyed per SparkContext so a fresh session (new
-# conf, new defaultParallelism) never sees stale counts.
-_NUM_PARTS_MEMO: dict[tuple[str, int], tuple[DataFrame, int]] = {}
+# conf, new defaultParallelism) never sees stale counts, and scoped to
+# one application like the reuse cache (operators/caching.py), so a
+# restarted session also drops the plans of the stopped one.
+_NUM_PARTS_MEMO = AppScopedDict()
 
 
 def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame:
@@ -60,7 +63,7 @@ def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame
     query path is (the determinism contract, SURVEY.md §5.2)."""
     sc = df.sparkSession.sparkContext
     target = min_parts or sc.defaultParallelism
-    key = (sc.applicationId, df.semanticHash())
+    key = (_NUM_PARTS_MEMO.scope(sc), df.semanticHash())
     hit = _NUM_PARTS_MEMO.get(key)
     if hit is not None and hit[0].sameSemantics(df):
         n = hit[1]
@@ -80,15 +83,16 @@ def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame
 # nothing semantically (every action still scans parquet in full); it
 # only removes repeated reader construction (NOT results — no row is
 # materialized here) — and, for `events`, the
-# repeated pyarrow footer sniff. Keyed per SparkContext so a restarted
-# session gets fresh plans.
-_TABLE_MEMO: dict[tuple[str, str, str], DataFrame] = {}
+# repeated pyarrow footer sniff. Keyed per SparkContext and scoped to
+# one application (the reuse-cache rule), so a restarted session gets
+# fresh plans and the stopped session's plans are dropped.
+_TABLE_MEMO = AppScopedDict()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one logical table from ``{sf_dir}/{name}.parquet`` with its
     explicit schema (no inference)."""
-    key = (spark.sparkContext.applicationId, sf_dir, name)
+    key = (_TABLE_MEMO.scope(spark.sparkContext), sf_dir, name)
     df = _TABLE_MEMO.get(key)
     if df is not None:
         return df
