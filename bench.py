@@ -121,43 +121,15 @@ def main() -> None:
         # ANN that misses its neighbors is just a fast wrong answer.
         "recall": _ann_recall(spark, sf_dir),
     }
-    # round-6 registrations beyond HEADLINE: single warmed run each +
-    # a plan fingerprint — the full newly-certified surface keeps a
-    # per-round perf/plan record.
-    out["r06"], out["r06_plans"] = _r06_timings(spark, sf_dir)
-    # round-7 registrations (the registry_r07 bank, live since the r07
-    # rotation): same treatment.
-    out["r07"], out["r07_plans"] = _r07_timings(spark, sf_dir)
-    # round-8 registrations (registry_r08, wired live at the r08
-    # rotation, populated mid-round): same treatment.
-    out["r08"], out["r08_plans"] = _r08_timings(spark, sf_dir)
-    # round-9 registrations (registry_r09, wired live at r09 start,
-    # populated mid-round): same treatment.
-    out["r09"], out["r09_plans"] = _r09_timings(spark, sf_dir)
-    # round-10 registrations (the registry_r10 bank, live since the
-    # r10 rotation, plus mid-round direct additions): same treatment.
-    out["r10"], out["r10_plans"] = _r10_timings(spark, sf_dir)
-    # round-11 registrations (the registry_r11 bank, live since the
-    # r11 rotation, plus mid-round direct additions): same treatment.
-    out["r11"], out["r11_plans"] = _r11_timings(spark, sf_dir)
-    # round-12 registrations (the registry_r12 bank, live since the
-    # r12 rotation, plus mid-round direct additions): same treatment.
-    out["r12"], out["r12_plans"] = _r12_timings(spark, sf_dir)
-    # round-13 registrations (the registry_r13 bank, live since the
-    # r13 rotation, plus mid-round direct additions): same treatment.
-    out["r13"], out["r13_plans"] = _r13_timings(spark, sf_dir)
-    # round-14 registrations (the registry_r14 bank, live since the
-    # r14 rotation, plus mid-round direct additions): same treatment.
-    out["r14"], out["r14_plans"] = _r14_timings(spark, sf_dir)
-    # round-15 registrations (the registry_r15 bank, live since the
-    # r15 rotation, plus mid-round direct additions): same treatment.
-    out["r15"], out["r15_plans"] = _r15_timings(spark, sf_dir)
-    # round-16 registrations (the registry_r16 bank, live since the
-    # r16 rotation, plus mid-round direct additions): same treatment.
-    out["r16"], out["r16_plans"] = _r16_timings(spark, sf_dir)
+    # every bank from registry_r06 on (beyond HEADLINE): a single warmed
+    # run each + a plan fingerprint, so the whole surface keeps a per-
+    # bank perf/plan record under the keys "rNN" / "rNN_plans".
+    for key, names in _bank_entries().items():
+        out[key], out[f"{key}_plans"] = _manifest_timings(
+            spark, sf_dir, names, skip=set(HEADLINE))
     # r17 staging bank: same single-warmed-run + fingerprint treatment,
-    # so nothing registers untimed at the next rotation (the staging
-    # contract's own lesson — the 22.7 s rolling-distinct catch).
+    # so nothing registers untimed (the staging contract's own lesson —
+    # the 22.7 s rolling-distinct catch).
     out["staged"], out["staged_plans"] = _staged_timings(spark, sf_dir)
     # sf1 scaling evidence (VERDICT r07 #5), gated on
     # SPARK_GRAFT_SF1_DIR so routine per-round runs stay cheap: a
@@ -270,123 +242,30 @@ def _manifest_timings(
     return timings, plans
 
 
-def _r07_timings(
-        spark, sf_dir: str) -> tuple[dict[str, float], dict[str, str]]:
-    """Per-round perf/plan record for the round-7 registrations (live
-    in the registry since the r07 rotation)."""
-    from yougile_etl_pipeline_spark.registry_r07 import R07_ENTRIES
+def _bank_entries() -> dict[str, list[str]]:
+    """``{"r06": [names...], ...}``: every registered query defined in a
+    ``registry_rNN`` bank (NN >= 06), in QUERIES order. Streaming
+    rows-only entries are skipped by _manifest_timings: they manage
+    their own execution and a noop-sink write does not measure them
+    faithfully."""
+    from yougile_etl_pipeline_spark.registry import BANKS, QUERIES
 
-    return _manifest_timings(spark, sf_dir, R07_ENTRIES,
-                             skip=set(HEADLINE))
-
-
-def _r08_timings(
-        spark, sf_dir: str) -> tuple[dict[str, float], dict[str, str]]:
-    """Per-round perf/plan record for the round-8 registrations (live
-    in the registry since the r08 rotation)."""
-    from yougile_etl_pipeline_spark.registry_r08 import R08_ENTRIES
-
-    return _manifest_timings(spark, sf_dir, R08_ENTRIES,
-                             skip=set(HEADLINE))
-
-
-def _r09_timings(
-        spark, sf_dir: str) -> tuple[dict[str, float], dict[str, str]]:
-    """Per-round perf/plan record for the round-9 registrations (live
-    in the registry since the r09 wiring)."""
-    from yougile_etl_pipeline_spark.registry_r09 import R09_ENTRIES
-
-    return _manifest_timings(spark, sf_dir, R09_ENTRIES,
-                             skip=set(HEADLINE))
-
-
-def _r10_timings(
-        spark, sf_dir: str) -> tuple[dict[str, float], dict[str, str]]:
-    """Per-round perf/plan record for the round-10 registrations (live
-    in the registry since the r10 rotation)."""
-    from yougile_etl_pipeline_spark.registry_r10 import R10_ENTRIES
-
-    return _manifest_timings(spark, sf_dir, R10_ENTRIES,
-                             skip=set(HEADLINE))
-
-
-def _r11_timings(
-        spark, sf_dir: str) -> tuple[dict[str, float], dict[str, str]]:
-    """Per-round perf/plan record for the round-11 registrations (the
-    registry_r11 bank, live since the r11 rotation, plus mid-round
-    direct additions)."""
-    from yougile_etl_pipeline_spark.registry_r11 import R11_ENTRIES
-
-    return _manifest_timings(spark, sf_dir, R11_ENTRIES,
-                             skip=set(HEADLINE))
-
-
-def _r12_timings(
-        spark, sf_dir: str) -> tuple[dict[str, float], dict[str, str]]:
-    """Per-round perf/plan record for the round-12 registrations (the
-    registry_r12 bank, live since the r12 rotation, plus mid-round
-    direct additions)."""
-    from yougile_etl_pipeline_spark.registry_r12 import R12_ENTRIES
-
-    return _manifest_timings(spark, sf_dir, R12_ENTRIES,
-                             skip=set(HEADLINE))
-
-
-def _r13_timings(
-        spark, sf_dir: str) -> tuple[dict[str, float], dict[str, str]]:
-    """Per-round perf/plan record for the round-13 registrations (the
-    registry_r13 bank, live since the r13 rotation, plus mid-round
-    direct additions)."""
-    from yougile_etl_pipeline_spark.registry_r13 import R13_ENTRIES
-
-    return _manifest_timings(spark, sf_dir, R13_ENTRIES,
-                             skip=set(HEADLINE))
-
-
-def _r14_timings(
-        spark, sf_dir: str) -> tuple[dict[str, float], dict[str, str]]:
-    """Per-round perf/plan record for the round-14 registrations (the
-    registry_r14 bank, live since the r14 rotation, plus mid-round
-    direct additions)."""
-    from yougile_etl_pipeline_spark.registry_r14 import R14_ENTRIES
-
-    return _manifest_timings(spark, sf_dir, R14_ENTRIES,
-                             skip=set(HEADLINE))
-
-
-def _r15_timings(
-        spark, sf_dir: str) -> tuple[dict[str, float], dict[str, str]]:
-    """Per-round perf/plan record for the round-15 registrations (the
-    registry_r15 bank, live since the r15 rotation, plus mid-round
-    direct additions)."""
-    from yougile_etl_pipeline_spark.registry_r15 import R15_ENTRIES
-
-    return _manifest_timings(spark, sf_dir, R15_ENTRIES,
-                             skip=set(HEADLINE))
-
-
-def _r16_timings(
-        spark, sf_dir: str) -> tuple[dict[str, float], dict[str, str]]:
-    """Per-round perf/plan record for the round-16 registrations (the
-    registry_r16 bank, live since the r16 rotation, plus mid-round
-    direct additions)."""
-    from yougile_etl_pipeline_spark.registry_r16 import R16_ENTRIES
-
-    return _manifest_timings(spark, sf_dir, R16_ENTRIES,
-                             skip=set(HEADLINE))
+    keys = {m.__name__: m.__name__.rsplit("_", 1)[1] for m in BANKS}
+    out: dict[str, list[str]] = {
+        k: [] for k in keys.values() if k[1:].isdigit() and k >= "r06"}
+    for name, fn in QUERIES.items():
+        if keys.get(fn.__module__) in out:
+            out[keys[fn.__module__]].append(name)
+    return out
 
 
 def _staged_timings(
         spark, sf_dir: str) -> tuple[dict[str, float], dict[str, str]]:
     """Wall time + plan fingerprint for every round-17 BANK entry,
     driven off registry_r17's own registrations. Importing the bank
-    module registers its entries IN THIS PROCESS ONLY — they append
-    past the already-rotated stable block and the module's tail guard
-    re-rotates (registry_r17.py bottom — real since ADVICE r15 #1;
-    rotation is idempotent), so the certified window SET bench
-    measures is untouched (the driver's correctness process never
-    imports the bank; tests/test_registry_r17_staged.py proves
-    non-import on the canonical path)."""
+    module registers its entries IN THIS PROCESS ONLY; they append
+    after every other query, so ``list(QUERIES)[:50]`` is untouched
+    (the driver's correctness process never imports the bank)."""
     from yougile_etl_pipeline_spark import registry_r17
 
     return _manifest_timings(spark, sf_dir, registry_r17.R17_ENTRIES)
@@ -435,24 +314,6 @@ def _sf1_block(spark, sf1_dir: str,
         "slopes_vs_sf01": slopes,
         "worst_slope": max(slopes.values()) if slopes else None,
     }
-
-
-def _r06_timings(
-        spark, sf_dir: str) -> tuple[dict[str, float], dict[str, str]]:
-    """Single warmed run + plan fingerprint for every round-6
-    registration not already in HEADLINE, driven straight off the
-    registry (the r05 staged block hand-built each case; now that the
-    entries are registered, QUERIES is the single source of truth —
-    transcription drift between bench and registry is impossible).
-    Streaming rows-only entries are skipped: they manage their own
-    execution and a noop-sink write does not measure them faithfully.
-    Covers VERDICT r05 #5: every r06 registration gets a recorded
-    sf-dir wall time each round, not just the ones someone hand-added.
-    """
-    from yougile_etl_pipeline_spark.registry_r06 import R06_ENTRIES
-
-    return _manifest_timings(spark, sf_dir, R06_ENTRIES,
-                             skip=set(HEADLINE))
 
 
 def _plan_fingerprints(spark, sf_dir: str) -> dict[str, str]:

@@ -1,7 +1,7 @@
 """Ad-hoc oracle check for a subset of registered queries (dev tool).
 
-Usage: python scripts/check_queries.py [query ...]   (default: the
-current 50-query certification window)
+Usage: python scripts/check_queries.py [query ...]   (default:
+registry.WINDOW, the 50 queries the driver certifies)
 """
 from __future__ import annotations
 
@@ -14,17 +14,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 from tests.oracle_compare import compare, duck_connect  # noqa: E402
-from yougile_etl_pipeline_spark.registry import ORACLES, QUERIES  # noqa: E402
+from yougile_etl_pipeline_spark.registry import (  # noqa: E402
+    ORACLES,
+    QUERIES,
+    WINDOW,
+)
 from yougile_etl_pipeline_spark.session import get_spark  # noqa: E402
-
-# Default set = the driver's CURRENT 50-query certification window
-# (the first 50 registered queries after rotation) — exactly what the
-# next CORRECTNESS_r{N}.json will grade.
-DEFAULT = list(QUERIES)[:50]
 
 
 def main() -> None:
-    names = sys.argv[1:] or DEFAULT
+    names = sys.argv[1:] or WINDOW
     spark = get_spark(app_name="check")
     spark.sparkContext.setLogLevel("ERROR")
     con = duck_connect(SF)

@@ -1,24 +1,12 @@
-"""Re-run every R17-BANK staged-operator oracle-parity test at the
-DRIVER'S certification scale factor (sf0.01) before registration.
+"""Re-run the staged r17 bank's oracle-parity smoke at the DRIVER'S
+certification scale factor (sf0.01) instead of sf0.001.
 
-History: in round 5 this swept the 46 registry_r06 staged entries; in
-round 6 the 12 registry_r07 bank entries; in round 9 the 8 registry_r10
-bank entries; in round 10 the 10 registry_r11 bank entries; in round
-11 the 10 registry_r12 bank entries; in round 12 the 10 registry_r13
-bank entries; in round 13 the 14 registry_r14 bank entries; in round
-14 the 16 registry_r15 bank entries; in round 15 the 18 registry_r16
-bank entries. Those
-banks registered at their rotations and are now covered by
-scripts/check_queries.py (the live certification window).
-MID-ROUND DIRECT REGISTRATIONS (the registry_r08-style in-window
-additions) are NOT swept here — they enter the live window
-immediately, so scripts/check_queries.py covers them at sf0.01 the
-moment they register; their sf0.001 parity tests ride normal CI. This
-wrapper exists for the NEXT round's bank only: operators built and
-oracle-proven ahead of slots freeing at the r17 rotation. Same
-contract as before: parity at sf0.001 rides normal CI, this wrapper
-re-executes the exact parity subset with the fixture dir overridden
+registry_r17.py is the one bank registry.py does not import; its
+subprocess smoke (tests/test_registry_r17_staged.py) runs at sf0.001 in
+normal CI. This wrapper re-executes it with the fixture dir overridden
 to the driver's scale (tests/conftest.py reads SPARK_GRAFT_SMOKE_DIR).
+Wired banks are covered by scripts/check_queries.py and
+scripts/full_sweep.py.
 
 Usage: python scripts/check_staged.py [pytest args...]
 """

@@ -13,6 +13,7 @@ Normalization before comparing:
 from __future__ import annotations
 
 import datetime as dt
+import hashlib
 import math
 
 import duckdb
@@ -56,6 +57,12 @@ def _rows(df: pd.DataFrame) -> list[tuple[str, ...]]:
     for row in df.itertuples(index=False, name=None):
         out.append(tuple(_canon(v) for v in row))
     return sorted(out)
+
+
+def value_hash(pdf: pd.DataFrame) -> str:
+    """sha256 over the canonical sorted rows: equal hashes mean
+    bit-identical values, in any row order."""
+    return hashlib.sha256(repr(_rows(pdf)).encode()).hexdigest()
 
 
 def compare(spark_df, con: duckdb.DuckDBPyConnection, sql: str,

@@ -1,15 +1,11 @@
 """Regression tests for the four ADVICE-r15 findings.
 
-1. The 'module tail guard re-rotates' comments were fictitious for
-   registry_r15/r16 — both modules (and the seeded registry_r17) now
-   carry the real registry_r14-style guard, so window composition is
-   import-order independent by MECHANISM, not by incidental import
-   order.
+1. The 'module tail guard re-rotates' comments were fictitious. The
+   rotation and its guards are gone: registry.py orders the registry
+   once (tests/test_certification_window.py checks every entry path).
 2. In-process bank imports polluting the global QUERIES for the rest
-   of the pytest session: registry_r16 is wired now (imports are
-   no-ops); the r17 staged test runs its smoke in a subprocess, and
-   the direct-import pollution scenario is exercised here in a
-   subprocess too.
+   of the pytest session: the r17 staged test runs its smoke in a
+   subprocess, and the import is exercised here in a subprocess too.
 3. The positional 2-slot FIFO persist caches of registry_r15/r16 are
    gone: every reuse persist goes through the plan-keyed LRU in
    operators/caching.py, so an entry that persists two relations can
@@ -32,58 +28,26 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 # ---------------------------------------------------------------------------
-# 1 + 2: tail guards are real; direct bank-module entry converges
+# 2: importing the staged bank leaves the window alone
 # ---------------------------------------------------------------------------
 
-def test_bank_modules_carry_real_tail_guards():
-    for mod in ("registry_r15", "registry_r16", "registry_r17"):
-        src = open(os.path.join(
-            REPO, "yougile_etl_pipeline_spark", f"{mod}.py")).read()
-        assert "_rotate_certification_window()" in src, (
-            f"{mod} lost its tail rotation guard (ADVICE r15 #1: the "
-            f"guard the comments describe must actually exist)")
-
-
-def test_direct_r16_import_yields_canonical_window():
-    """Entering the engine through the WIRED bank module directly must
-    converge to the same accounted window as the canonical
-    registry-first import (the tail guard doing its job)."""
-    code = (
-        "import sys; sys.path.insert(0, %r)\n"
-        "import yougile_etl_pipeline_spark.registry_r16\n"
-        "from yougile_etl_pipeline_spark.registry import (QUERIES,\n"
-        "    _STABLE_CERTIFIED, _DEFERRED_TO_NEXT_WINDOW)\n"
-        "acc = set(_STABLE_CERTIFIED) | set(_DEFERRED_TO_NEXT_WINDOW)\n"
-        "assert not [q for q in list(QUERIES)[50:] if q not in acc]\n"
-        "assert not [q for q in list(QUERIES)[:50] if q in acc]\n"
-        "print('R16-ENTRY-OK', len(QUERIES))\n" % REPO)
-    out = subprocess.run([sys.executable, "-c", code], cwd=REPO,
-                         capture_output=True, text=True, timeout=300)
-    assert out.returncode == 0, out.stderr[-2000:]
-    assert "R16-ENTRY-OK" in out.stdout
-
-
 def test_staged_r17_import_keeps_window_accounting():
-    """Importing the STAGED r17 bank in-process must leave the
-    certification-window accounting test's invariant intact: staged
-    entries append past the stable block AND the tail guard re-rotates
-    — either way every out-of-window query stays accounted. Run in a
-    subprocess so this session's registry stays untouched (ADVICE r15
-    #2)."""
+    """Importing the STAGED r17 bank after the registry appends its
+    entries after every other query: ``list(QUERIES)[:50]`` stays
+    ``registry.WINDOW``. Run in a subprocess so this session's
+    registry stays untouched (ADVICE r15 #2)."""
     code = (
         "import sys; sys.path.insert(0, %r)\n"
-        "import yougile_etl_pipeline_spark.registry\n"
+        "from yougile_etl_pipeline_spark.registry import QUERIES, WINDOW\n"
+        "before = list(QUERIES)\n"
         "import yougile_etl_pipeline_spark.registry_r17 as r17\n"
-        "from yougile_etl_pipeline_spark.registry import (QUERIES,\n"
-        "    _STABLE_CERTIFIED, _DEFERRED_TO_NEXT_WINDOW)\n"
-        "acc = (set(_STABLE_CERTIFIED) | set(_DEFERRED_TO_NEXT_WINDOW)\n"
-        "       | set(r17.R17_ENTRIES))\n"
-        "assert not [q for q in list(QUERIES)[50:] if q not in acc]\n"
-        "print('R17-POLLUTION-OK')\n" % REPO)
+        "assert list(QUERIES)[:50] == list(WINDOW)\n"
+        "assert list(QUERIES) == before + r17.R17_ENTRIES\n"
+        "print('R17-WINDOW-OK')\n" % REPO)
     out = subprocess.run([sys.executable, "-c", code], cwd=REPO,
                          capture_output=True, text=True, timeout=300)
     assert out.returncode == 0, out.stderr[-2000:]
-    assert "R17-POLLUTION-OK" in out.stdout
+    assert "R17-WINDOW-OK" in out.stdout
 
 
 # ---------------------------------------------------------------------------

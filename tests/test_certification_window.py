@@ -1,82 +1,83 @@
-"""Certification-window contract (registry.py module tail).
+"""The frozen certification window (registry.py module tail).
 
-The round driver records CORRECTNESS rows for the FIRST 50 registered
-queries only. The rotation must therefore guarantee: every query outside
-``list(QUERIES)[:50]`` is either twice-driver-certified-and-unchanged
-(``_STABLE_CERTIFIED``) or explicitly deferred with a reason
-(``_DEFERRED_TO_NEXT_WINDOW``). A new registration that silently pushes
-an uncertified query past position 50 MUST fail here — that is the
-regression this file exists to catch."""
+The round driver certifies ``list(QUERIES)[:50]`` only. ``registry.WINDOW``
+names those 50 queries in order, and registry.py orders QUERIES/ORACLES
+once at import: WINDOW first, then every other query by module (registry,
+then ``registry.BANKS``) and registration order. Whichever module a
+process imports first, the driver must see the same lists."""
 from __future__ import annotations
 
-from yougile_etl_pipeline_spark.registry import (
-    ORACLES,
-    QUERIES,
-    _DEFERRED_TO_NEXT_WINDOW,
-    _STABLE_CERTIFIED,
-)
+import json
+import os
+import subprocess
+import sys
+from concurrent.futures import ThreadPoolExecutor
 
-WINDOW = 50
+import pytest
+
+from yougile_etl_pipeline_spark import registry
+from yougile_etl_pipeline_spark.registry import ORACLES, QUERIES, WINDOW
+from yougile_etl_pipeline_spark.registry_base import register
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# Modules a process may import first; "__spark_entry__" means the driver
+# contract's queries()/oracle_sql().
+ENTRY_PATHS = ("registry", "registry_ext", "registry_analytics",
+               "registry_tpch", "registry_r05", "registry_r06",
+               "registry_r16", "__spark_entry__")
+
+_LIST = """
+import json, sys
+sys.path.insert(0, %r)
+entry = %r
+if entry == "__spark_entry__":
+    import __spark_entry__ as e
+    q, o = list(e.queries()), list(e.oracle_sql())
+else:
+    __import__("yougile_etl_pipeline_spark." + entry)
+    from yougile_etl_pipeline_spark.registry import ORACLES, QUERIES
+    q, o = list(QUERIES), list(ORACLES)
+print(json.dumps([q, o]))
+"""
 
 
-def test_out_of_window_queries_are_accounted_for():
-    tail = list(QUERIES)[WINDOW:]
-    accounted = set(_STABLE_CERTIFIED) | set(_DEFERRED_TO_NEXT_WINDOW)
-    unaccounted = [q for q in tail if q not in accounted]
-    assert not unaccounted, (
-        f"queries outside the driver's {WINDOW}-query certification "
-        f"window with no certification history and no documented "
-        f"deferral: {unaccounted} — rotate them into the window or add "
-        f"them to _DEFERRED_TO_NEXT_WINDOW with a reason")
-
-
-def test_window_queries_are_not_listed_stable_or_deferred():
-    window = list(QUERIES)[:WINDOW]
-    misplaced = [q for q in window
-                 if q in _STABLE_CERTIFIED or q in _DEFERRED_TO_NEXT_WINDOW]
-    assert not misplaced, (
-        f"listed as stable/deferred but still inside the window "
-        f"(rotation did not run or list is stale): {misplaced}")
-
-
-def test_listed_names_exist():
-    ghosts = [q for q in _STABLE_CERTIFIED + _DEFERRED_TO_NEXT_WINDOW
-              if q not in QUERIES]
-    assert not ghosts, f"rotation lists reference unregistered: {ghosts}"
-
-
-def test_deferred_queries_are_locally_verifiable():
-    # every deferred query must either carry an oracle (so
-    # scripts/check_queries.py can verify it locally) or be a documented
-    # rows-only streaming op (none since r11: stream_click_attribution
-    # gained its hash-exact deterministic-projection oracle)
-    rows_only_by_design: set[str] = set()
-    missing = [q for q in _DEFERRED_TO_NEXT_WINDOW
-               if q not in ORACLES and q not in rows_only_by_design]
-    assert not missing
+def _listing(entry: str) -> list[list[str]]:
+    out = subprocess.run([sys.executable, "-c", _LIST % (REPO, entry)],
+                         cwd=REPO, capture_output=True, text=True,
+                         timeout=300)
+    assert out.returncode == 0, out.stderr[-2000:]
+    return json.loads(out.stdout.strip().splitlines()[-1])
 
 
 def test_window_set_is_import_order_independent():
-    """Entering the engine through registry_ext (the circular tail-
-    import path) must yield the same certification-window SET as the
-    canonical registry-first import — the rotation guards at each
-    registry_* module bottom converge any entry point (regression for
-    the pytest-collection-order pollution found in round 5)."""
-    import os
-    import subprocess
-    import sys
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        listings = dict(zip(ENTRY_PATHS, pool.map(_listing, ENTRY_PATHS)))
+    canonical = listings["registry"]
+    assert canonical[0][:50] == list(WINDOW)
+    assert canonical == [list(QUERIES), list(ORACLES)]
+    differ = [e for e, got in listings.items() if got != canonical]
+    assert not differ, f"entry paths that reorder the registry: {differ}"
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    code = (
-        "import sys; sys.path.insert(0, %r)\n"
-        "from yougile_etl_pipeline_spark.registry_ext import _shingles_sql\n"
-        "from yougile_etl_pipeline_spark.registry import (QUERIES,\n"
-        "    _STABLE_CERTIFIED, _DEFERRED_TO_NEXT_WINDOW)\n"
-        "acc = set(_STABLE_CERTIFIED) | set(_DEFERRED_TO_NEXT_WINDOW)\n"
-        "assert not [q for q in list(QUERIES)[50:] if q not in acc]\n"
-        "assert not [q for q in list(QUERIES)[:50] if q in acc]\n"
-        "print('ORDER-OK', len(QUERIES))\n" % repo)
-    out = subprocess.run([sys.executable, "-c", code], cwd=repo,
-                         capture_output=True, text=True, timeout=300)
-    assert out.returncode == 0, out.stderr[-2000:]
-    assert "ORDER-OK" in out.stdout
+
+def test_listed_names_exist():
+    assert len(set(WINDOW)) == len(WINDOW) == 50
+    assert list(QUERIES)[:50] == list(WINDOW)
+    assert list(ORACLES)[:50] == list(WINDOW)
+
+
+def test_out_of_window_queries_are_accounted_for():
+    # every query after the window comes from registry.py or one of its
+    # banks, grouped by module in import order
+    order = [registry.__name__] + [m.__name__ for m in registry.BANKS]
+    tail = [QUERIES[n].__module__ for n in list(QUERIES)[50:]]
+    assert set(tail) <= set(order)
+    assert tail == sorted(tail, key=order.index)
+
+
+def test_register_rejects_a_duplicate_name():
+    before = QUERIES["mart_flagship"]
+    with pytest.raises(ValueError, match="mart_flagship"):
+        register("mart_flagship", "SELECT 1")(lambda spark, sf: None)
+    assert QUERIES["mart_flagship"] is before
+    assert ORACLES["mart_flagship"] != "SELECT 1"

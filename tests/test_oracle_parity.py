@@ -25,4 +25,4 @@ def test_query_matches_oracle(name, spark, duck):
 
 
 def test_all_oracle_keys_have_queries():
-    assert set(ORACLES) <= set(QUERIES)
+    assert set(ORACLES) == set(QUERIES)

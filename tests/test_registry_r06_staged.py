@@ -1,95 +1,29 @@
-"""Guards for the round-6 registration module — WIRED at r06 start.
-
-Round-5 state (preserved in git history): registry_r06 was staged,
-deliberately unimported, and these guards enforced non-import plus a
-subprocess smoke. The r06 rotation executed the plan: registry.py now
-imports registry_r06, its 46 entries sit inside the driver's 50-slot
-certification window (with the held-out recertification slots —
-see _STABLE_CERTIFIED's r05 note; `mart_abc_parts` joined mid-round
-after its VERDICT #6 rework, taking one of them). The guards now enforce the WIRED
-invariants:
-
-1. the import is live (the staged module cannot silently fall out);
-2. every r06 entry is inside ``list(QUERIES)[:50]`` (registered but
-   never-certified is the failure mode the window accounting exists
-   to prevent);
-3. every r06 entry carries an oracle except the declared rows-only
-   streaming entry;
-4. the entries whose engine side is INLINED in registry_r06 (their
-   parity tests prove local copies) are oracle-executed from the
-   REGISTRY copies, so transcription drift cannot ship.
-"""
+"""Guards for the registry_r06 bank (checks in tests/bank_checks.py)."""
 
 from __future__ import annotations
 
-import sys
+from tests import bank_checks
 
-from tests.conftest import SF_SMOKE
-from tests.oracle_compare import compare, duck_connect
-
-_EXPECTED = 47
-
-# declared rows-only entries — EMPTY since r07: stream_ewma_values
-# (the set's one member through r06) gained a hash-exact oracle via
-# the deterministic-projection argument (its emitted rows equal the
-# batch twin's under an availableNow drain, so it pairs with
-# events_ewma's recursive-CTE SQL)
-ROWS_ONLY: set[str] = set()
-
-# entries whose engine side lives inline in registry_r06.py rather
-# than an operator module — the registry copies must be executed
-# against their oracles here (the per-op parity tests exercise their
-# own local copies, so drift between the two would otherwise ship)
-_INLINED = (
-    "corpus_shard_manifest", "quality_distribution_drift",
-    "mart_cohort_ltv", "events_top_paths",
-    "events_dwell_time", "text_lang_confusion",
-    # inline engine side diverged from tests/test_novelty.py's local
-    # copy at the round-6 pre-certification rework (doc-grain join) —
-    # the registry copy must keep proving itself here
-    "text_ngram_novelty",
-)
+BANK = "registry_r06"
 
 
 def test_registry_imports_r06():
-    import yougile_etl_pipeline_spark.registry  # noqa: F401
-
-    assert "yougile_etl_pipeline_spark.registry_r06" in sys.modules, (
-        "the r06 rotation import fell out of registry.py — the 46 "
-        "round-6 entries would silently deregister")
+    bank_checks.check_imported(BANK)
 
 
 def test_r06_entries_registered_inside_window():
-    from yougile_etl_pipeline_spark.registry import ORACLES, QUERIES
-    from yougile_etl_pipeline_spark.registry_r06 import R06_ENTRIES
+    bank_checks.check_registered(BANK, 47)
 
-    from yougile_etl_pipeline_spark.registry import _STABLE_CERTIFIED
 
-    assert len(R06_ENTRIES) == _EXPECTED
-    window = set(list(QUERIES)[:50])
-    missing = [n for n in R06_ENTRIES if n not in QUERIES]
-    assert not missing, f"r06 entries not registered: {missing}"
-    # Post-r07-rotation invariant: every r06 entry is either promoted
-    # to the stable list (certified green in the r06 window) or held
-    # INSIDE the new window for recertification (graph_kcore /
-    # text_dup_span_removal, touched by planned r07 work, and
-    # stream_ewma_values, whose oracle upgrade needs a driver row) —
-    # "registered but never-certified" remains impossible.
-    limbo = [n for n in R06_ENTRIES
-             if n not in window and n not in set(_STABLE_CERTIFIED)]
-    assert not limbo, (
-        f"r06 entries neither stable nor in the certification "
-        f"window: {limbo}")
-    no_oracle = [n for n in R06_ENTRIES
-                 if n not in ORACLES and n not in ROWS_ONLY]
-    assert not no_oracle, f"entries without oracles: {no_oracle}"
+# entries whose engine side lives inline in registry_r06.py rather than
+# an operator module: the per-op parity tests exercise their own copies,
+# so the registry copies are executed against their oracles here
+_INLINED = (
+    "corpus_shard_manifest", "quality_distribution_drift",
+    "mart_cohort_ltv", "events_top_paths",
+    "events_dwell_time", "text_lang_confusion", "text_ngram_novelty",
+)
 
 
 def test_inlined_registry_entries_match_oracles(spark):
-    from yougile_etl_pipeline_spark.registry import ORACLES, QUERIES
-
-    con = duck_connect(SF_SMOKE)
-    for name in _INLINED:
-        issues = compare(QUERIES[name](spark, SF_SMOKE),
-                         con, ORACLES[name])
-        assert not issues, f"{name}: {issues}"
+    bank_checks.check_oracles(spark, _INLINED)

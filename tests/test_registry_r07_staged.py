@@ -1,78 +1,19 @@
-"""Guards for the round-7 registration module — WIRED at r07 start.
-
-Round-6 state (preserved in git history): registry_r07 was staged,
-deliberately unimported, and these guards enforced non-import plus a
-subprocess smoke. The r07 rotation executed the plan at the registry
-tail: registry_ext.py now imports registry_r07 at its bottom, the 12
-bank entries sit inside the driver's 50-slot certification window
-next to the recertification fillers held out of _STABLE_CERTIFIED.
-The guards now enforce the WIRED invariants (same shape as
-tests/test_registry_r06_staged.py):
-
-1. the import is live (the bank cannot silently fall out);
-2. every r07 entry is inside ``list(QUERIES)[:50]`` (registered but
-   never-certified is the failure mode the window accounting exists
-   to prevent);
-3. every r07 entry carries an oracle — the bank has NO rows-only
-   entries (stream_dedup_keys ships the deterministic-projection
-   hash-exact oracle);
-4. every entry is oracle-executed from its REGISTRY copy at SF_SMOKE,
-   so transcription drift between the bank module and the per-op
-   parity tests cannot ship.
-"""
+"""Guards for the registry_r07 bank (checks in tests/bank_checks.py)."""
 
 from __future__ import annotations
 
-import sys
+from tests import bank_checks
 
-from tests.conftest import SF_SMOKE
-from tests.oracle_compare import compare, duck_connect
-
-_EXPECTED = 18   # 12 staged in the r06 bank + 6 r07 mid-round
+BANK = "registry_r07"
 
 
 def test_registry_imports_r07():
-    import yougile_etl_pipeline_spark.registry  # noqa: F401
-
-    assert "yougile_etl_pipeline_spark.registry_r07" in sys.modules, (
-        "the r07 rotation import fell out of registry_ext.py — the 12 "
-        "round-7 bank entries would silently deregister")
+    bank_checks.check_imported(BANK)
 
 
 def test_r07_entries_registered_inside_window():
-    from yougile_etl_pipeline_spark.registry import (
-        ORACLES,
-        QUERIES,
-        _STABLE_CERTIFIED,
-    )
-    from yougile_etl_pipeline_spark.registry_r07 import R07_ENTRIES
-
-    assert len(R07_ENTRIES) == _EXPECTED
-    window = set(list(QUERIES)[:50])
-    missing = [n for n in R07_ENTRIES if n not in QUERIES]
-    assert not missing, f"r07 entries not registered: {missing}"
-    # Post-r08-rotation invariant (same shape as the r06 twin,
-    # tests/test_registry_r06_staged.py): every r07 entry is either
-    # promoted to the stable list (certified green in the r08 window,
-    # CORRECTNESS_r07 50/50) or held INSIDE the new window for
-    # recertification (corpus_release_manifest / stream_sessions_final
-    # / stream_topk_state, changed by the round-9 work) —
-    # "registered but never-certified" remains impossible.
-    limbo = [n for n in R07_ENTRIES
-             if n not in window and n not in set(_STABLE_CERTIFIED)]
-    assert not limbo, (
-        f"r07 entries neither stable nor in the certification "
-        f"window: {limbo}")
-    no_oracle = [n for n in R07_ENTRIES if n not in ORACLES]
-    assert no_oracle == [], f"entries without oracles: {no_oracle}"
+    bank_checks.check_registered(BANK, 18)
 
 
 def test_r07_registry_entries_match_oracles(spark):
-    from yougile_etl_pipeline_spark.registry import ORACLES, QUERIES
-    from yougile_etl_pipeline_spark.registry_r07 import R07_ENTRIES
-
-    con = duck_connect(SF_SMOKE)
-    for name in R07_ENTRIES:
-        issues = compare(QUERIES[name](spark, SF_SMOKE),
-                         con, ORACLES[name])
-        assert not issues, f"{name}: {issues}"
+    bank_checks.check_oracles(spark, bank_checks.bank_names(BANK))

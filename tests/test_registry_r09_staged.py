@@ -1,79 +1,19 @@
-"""Guards for the round-9 registration module — WIRED at r09 start.
-
-Round-8 state (preserved in git history): registry_r09 was a staged
-empty bank, deliberately unimported, and these guards enforced
-non-import plus a subprocess smoke. Round 9 wired it at
-registry_ext.py's bottom with ZERO entries; genuinely new round-9
-operators register directly into this module mid-round, each swapping
-one held-out recertification filler back into _STABLE_CERTIFIED so
-the driver's 50-slot certification window never strands a
-never-certified query. The guards now enforce the WIRED invariants
-(same shape as tests/test_registry_r08_staged.py):
-
-1. the import is live (the bank cannot silently fall out);
-2. every r09 entry is inside ``list(QUERIES)[:50]`` (registered but
-   never-certified is the failure mode the window accounting exists
-   to prevent);
-3. every r09 entry carries an oracle unless documented rows-only;
-4. every entry is oracle-executed from its REGISTRY copy at SF_SMOKE,
-   so transcription drift between the bank module and the per-op
-   parity tests cannot ship.
-"""
+"""Guards for the registry_r09 bank (checks in tests/bank_checks.py)."""
 
 from __future__ import annotations
 
-import sys
+from tests import bank_checks
 
-from tests.conftest import SF_SMOKE
-from tests.oracle_compare import compare, duck_connect
-
-_EXPECTED = 12  # grows with every mid-round r09 registration
+BANK = "registry_r09"
 
 
 def test_registry_imports_r09():
-    import yougile_etl_pipeline_spark.registry  # noqa: F401
-
-    assert "yougile_etl_pipeline_spark.registry_r09" in sys.modules, (
-        "the r09 wiring import fell out of registry_ext.py — the "
-        "round-9 registrations would silently deregister")
+    bank_checks.check_imported(BANK)
 
 
 def test_r09_entries_registered_inside_window():
-    from yougile_etl_pipeline_spark.registry import (
-        ORACLES,
-        QUERIES,
-        _STABLE_CERTIFIED,
-    )
-    from yougile_etl_pipeline_spark.registry_r09 import R09_ENTRIES
-
-    assert len(R09_ENTRIES) == _EXPECTED
-    window = set(list(QUERIES)[:50])
-    missing = [n for n in R09_ENTRIES if n not in QUERIES]
-    assert not missing, f"r09 entries not registered: {missing}"
-    # Post-r10-rotation invariant (same shape as the r06/r07 twins):
-    # every r09 entry is either promoted to the stable list (certified
-    # green in the r09 window, CORRECTNESS_r09 50/50) or held INSIDE
-    # the new window for recertification — "registered but
-    # never-certified" remains impossible. Flipped at the r10 rotation
-    # itself this time (VERDICT r08 #2's lesson: the r08 rotation
-    # forgot its twin and shipped a red suite).
-    limbo = [n for n in R09_ENTRIES
-             if n not in window and n not in set(_STABLE_CERTIFIED)]
-    assert not limbo, (
-        f"r09 entries neither inside the certification window nor "
-        f"promoted to _STABLE_CERTIFIED: {limbo}")
-    no_oracle = [n for n in R09_ENTRIES if n not in ORACLES]
-    assert no_oracle == [], f"entries without oracles: {no_oracle}"
+    bank_checks.check_registered(BANK, 12)
 
 
 def test_r09_registry_entries_match_oracles(spark):
-    from yougile_etl_pipeline_spark.registry import ORACLES, QUERIES
-    from yougile_etl_pipeline_spark.registry_r09 import R09_ENTRIES
-
-    con = duck_connect(SF_SMOKE)
-    for name in R09_ENTRIES:
-        if name not in ORACLES:
-            continue
-        issues = compare(QUERIES[name](spark, SF_SMOKE),
-                         con, ORACLES[name])
-        assert not issues, f"{name}: {issues}"
+    bank_checks.check_oracles(spark, bank_checks.bank_names(BANK))

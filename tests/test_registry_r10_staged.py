@@ -1,74 +1,19 @@
-"""Guards for the round-10 registration module — WIRED at r10 start,
-its 39 entries PROMOTED to _STABLE_CERTIFIED at the r11 rotation
-(CORRECTNESS_r10: 50/50 rows + schema + hash, zero errors) EXCEPT
-graph_pagerank_convergence, which stays inside the r11 window for a
-planned implementation change (VERDICT r10 #3: shared-prefix
-trajectory instead of two independent depth-1/depth-2 lineages).
-
-The guards now enforce the POST-PROMOTION invariants (same shape as
-tests/test_registry_r09_staged.py):
-
-1. the import is live (the bank cannot silently fall out);
-2. every r10 entry is either promoted to the stable list or held
-   INSIDE ``list(QUERIES)[:50]`` — "registered but never-certified"
-   remains impossible;
-3. every r10 entry carries an oracle;
-4. every entry is oracle-executed from its REGISTRY copy at SF_SMOKE,
-   so transcription drift between the bank module and the per-op
-   parity tests cannot ship.
-"""
+"""Guards for the registry_r10 bank (checks in tests/bank_checks.py)."""
 
 from __future__ import annotations
 
-import sys
+from tests import bank_checks
 
-from tests.conftest import SF_SMOKE
-from tests.oracle_compare import compare, duck_connect
-
-_EXPECTED = 39  # final round-10 count (frozen at the r11 rotation)
+BANK = "registry_r10"
 
 
 def test_registry_imports_r10():
-    import yougile_etl_pipeline_spark.registry  # noqa: F401
-
-    assert "yougile_etl_pipeline_spark.registry_r10" in sys.modules, (
-        "the r10 wiring import fell out of registry_ext.py — the "
-        "round-10 registrations would silently deregister")
+    bank_checks.check_imported(BANK)
 
 
 def test_r10_entries_registered_inside_window():
-    from yougile_etl_pipeline_spark.registry import (
-        ORACLES,
-        QUERIES,
-        _STABLE_CERTIFIED,
-    )
-    from yougile_etl_pipeline_spark.registry_r10 import R10_ENTRIES
-
-    assert len(R10_ENTRIES) == _EXPECTED
-    window = set(list(QUERIES)[:50])
-    missing = [n for n in R10_ENTRIES if n not in QUERIES]
-    assert not missing, f"r10 entries not registered: {missing}"
-    # Post-r11-rotation invariant: every r10 entry is either promoted
-    # to the stable list (certified green in the r10 window,
-    # CORRECTNESS_r10 50/50) or held INSIDE the new window for
-    # recertification (graph_pagerank_convergence, changed this round).
-    limbo = [n for n in R10_ENTRIES
-             if n not in window and n not in set(_STABLE_CERTIFIED)]
-    assert not limbo, (
-        f"r10 entries neither inside the certification window nor "
-        f"promoted to _STABLE_CERTIFIED: {limbo}")
-    no_oracle = [n for n in R10_ENTRIES if n not in ORACLES]
-    assert no_oracle == [], f"entries without oracles: {no_oracle}"
+    bank_checks.check_registered(BANK, 39)
 
 
 def test_r10_registry_entries_match_oracles(spark):
-    from yougile_etl_pipeline_spark.registry import ORACLES, QUERIES
-    from yougile_etl_pipeline_spark.registry_r10 import R10_ENTRIES
-
-    con = duck_connect(SF_SMOKE)
-    for name in R10_ENTRIES:
-        if name not in ORACLES:
-            continue
-        issues = compare(QUERIES[name](spark, SF_SMOKE),
-                         con, ORACLES[name])
-        assert not issues, f"{name}: {issues}"
+    bank_checks.check_oracles(spark, bank_checks.bank_names(BANK))

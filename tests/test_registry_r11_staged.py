@@ -1,75 +1,19 @@
-"""Guards for the round-11 registration module — WIRED at r11 start,
-its 33 entries PROMOTED to _STABLE_CERTIFIED at the r12 rotation
-(CORRECTNESS_r11: 50/50 rows + schema + hash, zero errors) EXCEPT
-sql_pivot_multi_agg, stream_burst_flags and stream_cumulative_users,
-which stay inside the r12 window for planned ADVICE-r11 changes
-(post-pivot NULL→0 coalesce; single-batch-drain hardening of the
-burst / first-seen stateful twins).
-
-The guards now enforce the POST-PROMOTION invariants (same shape as
-tests/test_registry_r10_staged.py):
-
-1. the import is live (the bank cannot silently fall out);
-2. every r11 entry is either promoted to the stable list or held
-   INSIDE ``list(QUERIES)[:50]`` — "registered but never-certified"
-   remains impossible;
-3. every r11 entry carries an oracle;
-4. every entry is oracle-executed from its REGISTRY copy at SF_SMOKE,
-   so transcription drift between the bank module and the per-op
-   parity tests cannot ship.
-"""
+"""Guards for the registry_r11 bank (checks in tests/bank_checks.py)."""
 
 from __future__ import annotations
 
-import sys
+from tests import bank_checks
 
-from tests.conftest import SF_SMOKE
-from tests.oracle_compare import compare, duck_connect
-
-_EXPECTED = 33  # final round-11 count (frozen at the r12 rotation)
+BANK = "registry_r11"
 
 
 def test_registry_imports_r11():
-    import yougile_etl_pipeline_spark.registry  # noqa: F401
-
-    assert "yougile_etl_pipeline_spark.registry_r11" in sys.modules, (
-        "the r11 wiring import fell out of registry_ext.py — the "
-        "round-11 registrations would silently deregister")
+    bank_checks.check_imported(BANK)
 
 
 def test_r11_entries_registered_inside_window():
-    from yougile_etl_pipeline_spark.registry import (
-        ORACLES,
-        QUERIES,
-        _STABLE_CERTIFIED,
-    )
-    from yougile_etl_pipeline_spark.registry_r11 import R11_ENTRIES
-
-    assert len(R11_ENTRIES) == _EXPECTED
-    window = set(list(QUERIES)[:50])
-    missing = [n for n in R11_ENTRIES if n not in QUERIES]
-    assert not missing, f"r11 entries not registered: {missing}"
-    # Post-r12-rotation invariant: every r11 entry is either promoted
-    # to the stable list (certified green in the r11 window,
-    # CORRECTNESS_r11 50/50) or held INSIDE the new window for
-    # recertification (the three planned ADVICE-r11 changes).
-    limbo = [n for n in R11_ENTRIES
-             if n not in window and n not in set(_STABLE_CERTIFIED)]
-    assert not limbo, (
-        f"r11 entries neither inside the certification window nor "
-        f"promoted to _STABLE_CERTIFIED: {limbo}")
-    no_oracle = [n for n in R11_ENTRIES if n not in ORACLES]
-    assert no_oracle == [], f"entries without oracles: {no_oracle}"
+    bank_checks.check_registered(BANK, 33)
 
 
 def test_r11_registry_entries_match_oracles(spark):
-    from yougile_etl_pipeline_spark.registry import ORACLES, QUERIES
-    from yougile_etl_pipeline_spark.registry_r11 import R11_ENTRIES
-
-    con = duck_connect(SF_SMOKE)
-    for name in R11_ENTRIES:
-        if name not in ORACLES:
-            continue
-        issues = compare(QUERIES[name](spark, SF_SMOKE),
-                         con, ORACLES[name])
-        assert not issues, f"{name}: {issues}"
+    bank_checks.check_oracles(spark, bank_checks.bank_names(BANK))

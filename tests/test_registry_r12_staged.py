@@ -1,76 +1,19 @@
-"""Guards for the round-12 registration module — WIRED at r12 start,
-its 20 entries PROMOTED to _STABLE_CERTIFIED at the r13 rotation
-(CORRECTNESS_r12: 50/50 rows + schema + hash, zero errors) EXCEPT
-quality_benford_chi2_gate, mm_media_dispatch_profile and
-dedup_minhash_estimate_error, which stay inside the r13 window for
-planned ADVICE-r12 changes (the 9-cell Benford domain join; BIGINT
-partial sums for the dispatch profile; parameter-consistency
-validation of the reused minhash signature).
-
-The guards now enforce the POST-PROMOTION invariants (same shape as
-tests/test_registry_r11_staged.py):
-
-1. the import is live (the bank cannot silently fall out);
-2. every r12 entry is either promoted to the stable list or held
-   INSIDE ``list(QUERIES)[:50]`` — "registered but never-certified"
-   remains impossible;
-3. every r12 entry carries an oracle;
-4. every entry is oracle-executed from its REGISTRY copy at SF_SMOKE,
-   so transcription drift between the bank module and the per-op
-   parity tests cannot ship.
-"""
+"""Guards for the registry_r12 bank (checks in tests/bank_checks.py)."""
 
 from __future__ import annotations
 
-import sys
+from tests import bank_checks
 
-from tests.conftest import SF_SMOKE
-from tests.oracle_compare import compare, duck_connect
-
-_EXPECTED = 20  # final round-12 count (frozen at the r13 rotation)
+BANK = "registry_r12"
 
 
 def test_registry_imports_r12():
-    import yougile_etl_pipeline_spark.registry  # noqa: F401
-
-    assert "yougile_etl_pipeline_spark.registry_r12" in sys.modules, (
-        "the r12 wiring import fell out of registry_ext.py — the "
-        "round-12 registrations would silently deregister")
+    bank_checks.check_imported(BANK)
 
 
 def test_r12_entries_registered_inside_window():
-    from yougile_etl_pipeline_spark.registry import (
-        ORACLES,
-        QUERIES,
-        _STABLE_CERTIFIED,
-    )
-    from yougile_etl_pipeline_spark.registry_r12 import R12_ENTRIES
-
-    assert len(R12_ENTRIES) == _EXPECTED
-    window = set(list(QUERIES)[:50])
-    missing = [n for n in R12_ENTRIES if n not in QUERIES]
-    assert not missing, f"r12 entries not registered: {missing}"
-    # Post-r13-rotation invariant: every r12 entry is either promoted
-    # to the stable list (certified green in the r12 window,
-    # CORRECTNESS_r12 50/50) or held INSIDE the new window for
-    # recertification (the three planned ADVICE-r12 changes).
-    limbo = [n for n in R12_ENTRIES
-             if n not in window and n not in set(_STABLE_CERTIFIED)]
-    assert not limbo, (
-        f"r12 entries neither inside the certification window nor "
-        f"promoted to _STABLE_CERTIFIED: {limbo}")
-    no_oracle = [n for n in R12_ENTRIES if n not in ORACLES]
-    assert no_oracle == [], f"entries without oracles: {no_oracle}"
+    bank_checks.check_registered(BANK, 20)
 
 
 def test_r12_registry_entries_match_oracles(spark):
-    from yougile_etl_pipeline_spark.registry import ORACLES, QUERIES
-    from yougile_etl_pipeline_spark.registry_r12 import R12_ENTRIES
-
-    con = duck_connect(SF_SMOKE)
-    for name in R12_ENTRIES:
-        if name not in ORACLES:
-            continue
-        issues = compare(QUERIES[name](spark, SF_SMOKE),
-                         con, ORACLES[name])
-        assert not issues, f"{name}: {issues}"
+    bank_checks.check_oracles(spark, bank_checks.bank_names(BANK))

@@ -1,73 +1,19 @@
-"""Guards for the round-13 registration module — WIRED at r13 start,
-all 24 of its entries PROMOTED to _STABLE_CERTIFIED at the r14
-rotation (CORRECTNESS_r13: 50/50 rows + schema + hash, zero errors —
-the full window, bank and mid-round registrations included, went
-green with no ADVICE holds).
-
-The guards now enforce the POST-PROMOTION invariants (same shape as
-tests/test_registry_r12_staged.py):
-
-1. the import is live (the bank cannot silently fall out);
-2. every r13 entry is either promoted to the stable list or held
-   INSIDE ``list(QUERIES)[:50]`` — "registered but never-certified"
-   remains impossible;
-3. every r13 entry carries an oracle;
-4. every entry is oracle-executed from its REGISTRY copy at SF_SMOKE,
-   so transcription drift between the bank module and the per-op
-   parity tests cannot ship.
-"""
+"""Guards for the registry_r13 bank (checks in tests/bank_checks.py)."""
 
 from __future__ import annotations
 
-import sys
+from tests import bank_checks
 
-from tests.conftest import SF_SMOKE
-from tests.oracle_compare import compare, duck_connect
-
-_EXPECTED = 24  # final round-13 count (frozen at the r14 rotation)
+BANK = "registry_r13"
 
 
 def test_registry_imports_r13():
-    import yougile_etl_pipeline_spark.registry  # noqa: F401
-
-    assert "yougile_etl_pipeline_spark.registry_r13" in sys.modules, (
-        "the r13 wiring import fell out of registry_ext.py — the "
-        "round-13 registrations would silently deregister")
+    bank_checks.check_imported(BANK)
 
 
 def test_r13_entries_registered_inside_window():
-    from yougile_etl_pipeline_spark.registry import (
-        ORACLES,
-        QUERIES,
-        _STABLE_CERTIFIED,
-    )
-    from yougile_etl_pipeline_spark.registry_r13 import R13_ENTRIES
-
-    assert len(R13_ENTRIES) == _EXPECTED
-    window = set(list(QUERIES)[:50])
-    missing = [n for n in R13_ENTRIES if n not in QUERIES]
-    assert not missing, f"r13 entries not registered: {missing}"
-    # Post-r14-rotation invariant: every r13 entry is either promoted
-    # to the stable list (certified green in the r13 window,
-    # CORRECTNESS_r13 50/50) or held INSIDE the new window for
-    # recertification.
-    limbo = [n for n in R13_ENTRIES
-             if n not in window and n not in set(_STABLE_CERTIFIED)]
-    assert not limbo, (
-        f"r13 entries neither inside the certification window nor "
-        f"promoted to _STABLE_CERTIFIED: {limbo}")
-    no_oracle = [n for n in R13_ENTRIES if n not in ORACLES]
-    assert no_oracle == [], f"entries without oracles: {no_oracle}"
+    bank_checks.check_registered(BANK, 24)
 
 
 def test_r13_registry_entries_match_oracles(spark):
-    from yougile_etl_pipeline_spark.registry import ORACLES, QUERIES
-    from yougile_etl_pipeline_spark.registry_r13 import R13_ENTRIES
-
-    con = duck_connect(SF_SMOKE)
-    for name in R13_ENTRIES:
-        if name not in ORACLES:
-            continue
-        issues = compare(QUERIES[name](spark, SF_SMOKE),
-                         con, ORACLES[name])
-        assert not issues, f"{name}: {issues}"
+    bank_checks.check_oracles(spark, bank_checks.bank_names(BANK))

@@ -1,76 +1,19 @@
-"""Guards for the round-14 registration module — WIRED at r14 start,
-14 of its 15 entries PROMOTED to _STABLE_CERTIFIED at the r15
-rotation (CORRECTNESS_r14: 50/50 rows + schema + hash, zero errors).
-text_dup_span_removal_capped is HELD IN the r15 window instead of
-promoting: the ADVICE-r14 gram-cache LRU change (operators/text.py)
-touches its implementation and changed implementations recertify
-officially.
-
-The guards now enforce the POST-PROMOTION invariants (same shape as
-tests/test_registry_r13_staged.py):
-
-1. the import is live (the bank cannot silently fall out);
-2. every r14 entry is either promoted to the stable list or held
-   INSIDE ``list(QUERIES)[:50]`` — "registered but never-certified"
-   remains impossible;
-3. every r14 entry carries an oracle;
-4. every entry is oracle-executed from its REGISTRY copy at SF_SMOKE,
-   so transcription drift between the bank module and the per-op
-   parity tests cannot ship.
-"""
+"""Guards for the registry_r14 bank (checks in tests/bank_checks.py)."""
 
 from __future__ import annotations
 
-import sys
+from tests import bank_checks
 
-from tests.conftest import SF_SMOKE
-from tests.oracle_compare import compare, duck_connect
-
-_EXPECTED = 15  # final round-14 count (frozen at the r15 rotation)
+BANK = "registry_r14"
 
 
 def test_registry_imports_r14():
-    import yougile_etl_pipeline_spark.registry  # noqa: F401
-
-    assert "yougile_etl_pipeline_spark.registry_r14" in sys.modules, (
-        "the r14 wiring import fell out of registry_ext.py — the "
-        "round-14 registrations would silently deregister")
+    bank_checks.check_imported(BANK)
 
 
 def test_r14_entries_registered_inside_window():
-    from yougile_etl_pipeline_spark.registry import (
-        ORACLES,
-        QUERIES,
-        _STABLE_CERTIFIED,
-    )
-    from yougile_etl_pipeline_spark.registry_r14 import R14_ENTRIES
-
-    assert len(R14_ENTRIES) == _EXPECTED
-    window = set(list(QUERIES)[:50])
-    missing = [n for n in R14_ENTRIES if n not in QUERIES]
-    assert not missing, f"r14 entries not registered: {missing}"
-    # Post-r15-rotation invariant: every r14 entry is either promoted
-    # to the stable list (certified green in the r14 window,
-    # CORRECTNESS_r14 50/50) or held INSIDE the new window for
-    # recertification (text_dup_span_removal_capped — the gram-cache
-    # LRU hold).
-    limbo = [n for n in R14_ENTRIES
-             if n not in window and n not in set(_STABLE_CERTIFIED)]
-    assert not limbo, (
-        f"r14 entries neither inside the certification window nor "
-        f"promoted to _STABLE_CERTIFIED: {limbo}")
-    no_oracle = [n for n in R14_ENTRIES if n not in ORACLES]
-    assert no_oracle == [], f"entries without oracles: {no_oracle}"
+    bank_checks.check_registered(BANK, 15)
 
 
 def test_r14_registry_entries_match_oracles(spark):
-    from yougile_etl_pipeline_spark.registry import ORACLES, QUERIES
-    from yougile_etl_pipeline_spark.registry_r14 import R14_ENTRIES
-
-    con = duck_connect(SF_SMOKE)
-    for name in R14_ENTRIES:
-        if name not in ORACLES:
-            continue
-        issues = compare(QUERIES[name](spark, SF_SMOKE),
-                         con, ORACLES[name])
-        assert not issues, f"{name}: {issues}"
+    bank_checks.check_oracles(spark, bank_checks.bank_names(BANK))

@@ -1,77 +1,19 @@
-"""Guards for the round-15 registration module — WIRED at r15 start,
-15 of its 16 entries PROMOTED to _STABLE_CERTIFIED at the r16
-rotation (CORRECTNESS_r15: 50/50 rows + schema + hash, zero errors).
-sim_lsh_recall_sweep is HELD IN the r16 window instead of promoting:
-the ADVICE-r15 #3 change (registry_r15._SWEEP_CACHE positional FIFO →
-plan-keyed sameSemantics LRU, operators/caching.py::PlanKeyedLRU)
-touches its implementation and changed implementations recertify
-officially.
-
-The guards now enforce the POST-PROMOTION invariants (same shape as
-tests/test_registry_r14_staged.py):
-
-1. the import is live (the bank cannot silently fall out);
-2. every r15 entry is either promoted to the stable list or held
-   INSIDE ``list(QUERIES)[:50]`` — "registered but never-certified"
-   remains impossible;
-3. every r15 entry carries an oracle;
-4. every entry is oracle-executed from its REGISTRY copy at SF_SMOKE,
-   so transcription drift between the bank module and the per-op
-   parity tests cannot ship.
-"""
+"""Guards for the registry_r15 bank (checks in tests/bank_checks.py)."""
 
 from __future__ import annotations
 
-import sys
+from tests import bank_checks
 
-from tests.conftest import SF_SMOKE
-from tests.oracle_compare import compare, duck_connect
-
-_EXPECTED = 16  # final round-15 count (frozen at the r16 rotation)
+BANK = "registry_r15"
 
 
 def test_registry_imports_r15():
-    import yougile_etl_pipeline_spark.registry  # noqa: F401
-
-    assert "yougile_etl_pipeline_spark.registry_r15" in sys.modules, (
-        "the r15 wiring import fell out of registry_ext.py — the "
-        "round-15 registrations would silently deregister")
+    bank_checks.check_imported(BANK)
 
 
 def test_r15_entries_registered_inside_window():
-    from yougile_etl_pipeline_spark.registry import (
-        ORACLES,
-        QUERIES,
-        _STABLE_CERTIFIED,
-    )
-    from yougile_etl_pipeline_spark.registry_r15 import R15_ENTRIES
-
-    assert len(R15_ENTRIES) == _EXPECTED
-    window = set(list(QUERIES)[:50])
-    missing = [n for n in R15_ENTRIES if n not in QUERIES]
-    assert not missing, f"r15 entries not registered: {missing}"
-    # Post-r16-rotation invariant: every r15 entry is either promoted
-    # to the stable list (certified green in the r15 window,
-    # CORRECTNESS_r15 50/50) or held INSIDE the new window for
-    # recertification (sim_lsh_recall_sweep — the _SWEEP_CACHE
-    # plan-keyed-LRU hold).
-    limbo = [n for n in R15_ENTRIES
-             if n not in window and n not in set(_STABLE_CERTIFIED)]
-    assert not limbo, (
-        f"r15 entries neither inside the certification window nor "
-        f"promoted to _STABLE_CERTIFIED: {limbo}")
-    no_oracle = [n for n in R15_ENTRIES if n not in ORACLES]
-    assert no_oracle == [], f"entries without oracles: {no_oracle}"
+    bank_checks.check_registered(BANK, 16)
 
 
 def test_r15_registry_entries_match_oracles(spark):
-    from yougile_etl_pipeline_spark.registry import ORACLES, QUERIES
-    from yougile_etl_pipeline_spark.registry_r15 import R15_ENTRIES
-
-    con = duck_connect(SF_SMOKE)
-    for name in R15_ENTRIES:
-        if name not in ORACLES:
-            continue
-        issues = compare(QUERIES[name](spark, SF_SMOKE),
-                         con, ORACLES[name])
-        assert not issues, f"{name}: {issues}"
+    bank_checks.check_oracles(spark, bank_checks.bank_names(BANK))

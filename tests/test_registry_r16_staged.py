@@ -1,67 +1,19 @@
-"""Guards for the round-16 registration module — WIRED at r16 start.
-
-Round-15 state (preserved in git history): registry_r16 was a staged
-eighteen-entry bank, deliberately unimported, and these guards
-enforced non-import plus a subprocess smoke. Round 16 wired it at
-registry_ext.py's bottom; genuinely new round-16 operators register
-directly into this module mid-round, each swapping a held-out
-recertification filler back into _STABLE_CERTIFIED so the driver's
-50-slot certification window never strands a never-certified query.
-The guards now enforce the WIRED invariants (same shape as
-tests/test_registry_r15_staged.py had while r15 was live):
-
-1. the import is live (the bank cannot silently fall out);
-2. every r16 entry is inside ``list(QUERIES)[:50]`` (registered but
-   never-certified is the failure mode the window accounting exists
-   to prevent);
-3. every r16 entry carries an oracle unless documented rows-only;
-4. every entry is oracle-executed from its REGISTRY copy at SF_SMOKE,
-   so transcription drift between the bank module and the per-op
-   parity tests cannot ship.
-"""
+"""Guards for the registry_r16 bank (checks in tests/bank_checks.py)."""
 
 from __future__ import annotations
 
-import sys
+from tests import bank_checks
 
-from tests.conftest import SF_SMOKE
-from tests.oracle_compare import compare, duck_connect
-
-_EXPECTED = 18  # grows with every mid-round r16 registration
+BANK = "registry_r16"
 
 
 def test_registry_imports_r16():
-    import yougile_etl_pipeline_spark.registry  # noqa: F401
-
-    assert "yougile_etl_pipeline_spark.registry_r16" in sys.modules, (
-        "the r16 wiring import fell out of registry_ext.py — the "
-        "round-16 registrations would silently deregister")
+    bank_checks.check_imported(BANK)
 
 
 def test_r16_entries_registered_inside_window():
-    from yougile_etl_pipeline_spark.registry import ORACLES, QUERIES
-    from yougile_etl_pipeline_spark.registry_r16 import R16_ENTRIES
-
-    assert len(R16_ENTRIES) == _EXPECTED
-    window = set(list(QUERIES)[:50])
-    missing = [n for n in R16_ENTRIES if n not in QUERIES]
-    assert not missing, f"r16 entries not registered: {missing}"
-    out = [n for n in R16_ENTRIES if n not in window]
-    assert not out, (
-        f"r16 entries pushed outside the 50-slot certification "
-        f"window: {out}")
-    no_oracle = [n for n in R16_ENTRIES if n not in ORACLES]
-    assert no_oracle == [], f"entries without oracles: {no_oracle}"
+    bank_checks.check_registered(BANK, 18)
 
 
 def test_r16_registry_entries_match_oracles(spark):
-    from yougile_etl_pipeline_spark.registry import ORACLES, QUERIES
-    from yougile_etl_pipeline_spark.registry_r16 import R16_ENTRIES
-
-    con = duck_connect(SF_SMOKE)
-    for name in R16_ENTRIES:
-        if name not in ORACLES:
-            continue
-        issues = compare(QUERIES[name](spark, SF_SMOKE),
-                         con, ORACLES[name])
-        assert not issues, f"{name}: {issues}"
+    bank_checks.check_oracles(spark, bank_checks.bank_names(BANK))

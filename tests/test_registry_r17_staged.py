@@ -1,16 +1,13 @@
-"""Guards for the pre-wired round-17 registration bank.
+"""Guards for the staged round-17 registration bank.
 
-Same contract the r06–r16 banks ran under while staged: (1) round 16
-must NOT import registry_r17 — the r16 window is exactly full, and an
-accidental import would strand never-certified registrations at the
-round boundary; (2) the module must actually work when wired —
-verified in a SUBPROCESS so this test session's registry stays
-untouched (ADVICE r15 #2: an in-process import permanently appends to
-the global QUERIES for the rest of the pytest session, breaking the
-certification-window accounting test under reordered collection),
-with every entry oracle-executed from its REGISTRY copy at sf0.001
-(or SPARK_GRAFT_SMOKE_DIR — the scripts/check_staged.py sf0.01
-re-proof path)."""
+(1) registry.py must NOT import registry_r17: wiring it grows the
+driver's query set from 430 to 444. (2) The module must work when
+imported, verified in a SUBPROCESS so this test session's registry
+stays untouched (ADVICE r15 #2: an in-process import appends to the
+global QUERIES for the rest of the pytest session), with every entry
+oracle-executed from its REGISTRY copy at sf0.001 (or
+SPARK_GRAFT_SMOKE_DIR — the scripts/check_staged.py sf0.01 re-proof
+path)."""
 
 from __future__ import annotations
 
@@ -20,7 +17,7 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-_EXPECTED = 14  # grows as round-16 work stages r17-bank entries
+_EXPECTED = 14
 
 _SUBPROC = """
 import os, sys

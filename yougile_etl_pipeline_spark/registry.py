@@ -27,9 +27,8 @@ matches bit-for-bit):
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import importlib
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
@@ -56,30 +55,14 @@ from yougile_etl_pipeline_spark.operators.reshape import (
     posexplode_keep_empty,
 )
 from yougile_etl_pipeline_spark.plans.mart import MART_ORACLE_SQL, build_mart
+from yougile_etl_pipeline_spark.registry_base import (
+    ORACLES,
+    QUERIES,
+    _dec,
+    register,
+)
 from yougile_etl_pipeline_spark.schemas import conform
 from yougile_etl_pipeline_spark.sources.tables import load_table, load_tables
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
-
-QUERIES: dict[str, QueryFn] = {}
-ORACLES: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    """Decorator: declare a query (and optionally its DuckDB oracle)."""
-    def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-    return deco
-
-
-def _dec(col, prec: str = "decimal(20,6)"):
-    """Exact-arithmetic aggregation input (see module docstring)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast(prec)
-
 
 # ---------------------------------------------------------------------------
 # Flagship: the full mart pipeline (SURVEY.md §7 minimum slice)
@@ -629,23 +612,6 @@ def sort_limit_topk(spark, sf):
         .limit(5).select("o_orderkey", "o_totalprice")
 
 
-# Extension operators (text / dedup / similarity / multimodal / events /
-# streaming) register themselves into QUERIES/ORACLES on import. Imported
-# last so `register` exists; keep at module bottom.
-from yougile_etl_pipeline_spark import registry_ext  # noqa: E402,F401
-from yougile_etl_pipeline_spark import registry_analytics  # noqa: E402,F401
-from yougile_etl_pipeline_spark import registry_tpch  # noqa: E402,F401
-from yougile_etl_pipeline_spark import registry_r05  # noqa: E402,F401
-# registry_r06 (the wired round-6 registrations) is imported at the
-# BOTTOM of registry_ext.py, not here: registry_r06 consumes
-# registry_ext's shared oracle-SQL fragments (_CSIM, _LANG_CASE, ...),
-# and an import from this position breaks the registry_ext-first
-# circular entry path (ext would still be partially initialized when
-# r06 asks for its fragments). At ext's bottom the fragments exist on
-# every entry path, and each module-tail rotation guard converges the
-# certification-window SET regardless of entry point.
-
-
 @register("set_except_all", """
 SELECT l_suppkey AS suppkey FROM lineitem WHERE l_orderkey < 500
 EXCEPT ALL
@@ -745,1011 +711,6 @@ def set_union_distinct(spark, sf):
         .distinct()
 
 
-# ---------------------------------------------------------------------------
-# Driver certification-window rotation
-# ---------------------------------------------------------------------------
-# The round driver records CORRECTNESS rows for the FIRST 50 registered
-# queries only. Queries with two rounds of driver-green history
-# (CORRECTNESS_r01+r02) and an unchanged implementation yield their window
-# slot to (a) queries never driver-certified (the analytics family and
-# late-registered join/set ops) and (b) queries whose implementation or
-# oracle changed this round — so every operator earns an official green
-# row. Runs at import-bottom, after ALL registrations (see module tail).
-_STABLE_CERTIFIED = [
-    # r01+r02 driver HASH-green (hash_match=True in CORRECTNESS_r01 AND
-    # r02), code untouched since — reinsert at the end of the
-    # registration order, preserving relative order.
-    #
-    # r05 note: `events_asof_join` and `sim_cosine_topk` are NOT
-    # listed despite their green history — their helpers changed in
-    # r04 (asof_join grew direction/tolerance; brute_force_topk_np
-    # grew the collect-cap guard), and although defaults preserve the
-    # old path bit-for-bit, VERDICT r04 asked for an official
-    # recertification to retire the caveat. Both sit in the r05 window.
-    # r07 note: 34 long-stable cheap entries are HELD OUT of this list
-    # (not un-certified — recertifying) to fill the r07 window next to
-    # the 12 registry_r07 bank entries: the p2–p9 projection family,
-    # j_inner/j_semi/j_anti/j_full_outer, the f_* scalar families
-    # (f1/f2_f3/f4/f5/f6, string/math/date/array/regexp/case/hash/try/
-    # pad/trunc, array_set_ops, na_fill_drop) and the four set-op
-    # recerts. Each is sub-second at sf0.1 with multi-round green
-    # history — the natural recertification picks per the rotation
-    # plan. As genuinely new registrations land mid-round they swap
-    # back into this list one-for-one.
-    # r11 note: the 17 r01/r02-era promotes that used to open this
-    # list (mart_flagship, j1_left_broadcast_dim, j2_left_fact_child,
-    # a1_dedup_by_key, agg_pricing_summary, agg_topk_revenue,
-    # agg_rollup, text_token_stats, text_lang_id, text_quality_score,
-    # text_fingerprints, dedup_exact, mm_binary_metadata,
-    # mm_decode_features, events_hourly_snapshot, events_json_flatten,
-    # events_sessionize) are HELD OUT at the r11 rotation (not
-    # un-certified — recertifying): their last official driver row is
-    # CORRECTNESS_r02, now the OLDEST green history in the repo. With
-    # the 21 r03-era holds noted below they fill 38 filler slots next
-    # to the 10 registry_r11 bank entries and the two planned-change
-    # holds (stream_click_attribution hash-exact oracle,
-    # graph_pagerank_convergence shared-prefix trajectory — VERDICT
-    # r10 #2/#3): 10 + 2 + 38 = 50. They swap back one-for-one as
-    # genuinely new r11 registrations land mid-round (the standing
-    # mart_abc_parts precedent).
-    # r08 note: 18 more long-stable cheap entries are HELD OUT of this
-    # list (not un-certified — recertifying) to fill the r08 window
-    # next to the 28 r07-filler recerts, the three planned-change
-    # holds (corpus_release_manifest quota rework, stream_sessions_final
-    # oracle tie-break, stream_topk_state drain guard — planned at the
-    # r08 rotation, the code changes themselves landed in ROUND 9) and
-    # the pulled graph_pagerank (checkpoint_every 8→2, landed r09):
-    # r1/r2 explodes,
-    # u1_union_by_name, set_intersect/set_except, a1_dedup_full,
-    # d1_orphan_audit, win_rank_topn/win_running_total, sort_limit_topk,
-    # f_string/math/date/array/try/regexp/null/bitwise function
-    # families. As genuinely new r08 registrations land mid-round they
-    # swap back into this list one-for-one (the mart_abc_parts
-    # precedent).
-    # (r11: the 14 names that used to sit here — a1_dedup_by_key
-    # through events_sessionize — are in the r11 held-out recert set;
-    # see the r11 note above.)
-    # r06 note: `stream_tumbling_counts` (r01+r02 rows-only green) is
-    # deliberately NOT listed — its last driver row was r02, and
-    # VERDICT r05 "What's missing" #3 asked for a fresh rows-only row;
-    # the r06 window has a free slot for it (46 staged + 4 = 50).
-    # r03 driver HASH-green (hash_match=True in CORRECTNESS_r03), code
-    # untouched since — the full r03 window minus text_inverted_index
-    # (red in r03: raw-array output; fixed this round, kept in the
-    # window for recertification).
-    # r10 note: 30 of the r03 promotes below are HELD OUT of this list
-    # (not un-certified — recertifying): their last official driver row
-    # is CORRECTNESS_r03, the OLDEST green history in the repo, which
-    # makes them the natural picks to fill the r10 window next to the
-    # 8 registry_r10 bank entries and the 12 r09-swap fillers (whose
-    # last row is r08). Held out here: text_repetition_stats,
-    # doc_chunks, sample_source_mix, train_pack_sequences,
-    # dedup_shingle_jaccard, dedup_shingle_capped, dedup_minhash_lsh,
-    # dedup_simhash, dedup_simhash_pairs, dedup_clusters,
-    # dedup_canonical_docs, sim_ann_lsh_sized, corpus_clean_pipeline,
-    # events_funnel, ivf_kmeans_step (15 from the first r03 block) and
-    # 15 more below. As genuinely new r10 registrations land mid-round
-    # they swap back into this list one-for-one (the standing
-    # mart_abc_parts precedent).
-    # NOT listed despite r03 green: sim_ann_lsh_bucket, sim_ivf_topk,
-    # sim_ivf_multiprobe — retuned this round (LSH L=4→18 tables; IVF
-    # centroids fixed-256 → √N-adaptive on both engine and oracle
-    # sides, after the bench recall block measured 0.50/0.725/0.825
-    # recall@5 at the old knobs vs 0.95/0.975/1.0 now at sf0.1).
-    # Changed implementation+oracle ⇒ back into the window for
-    # recertification, per the changed-this-round rule.
-    # (r10: the second half of the r03 held-out recert set —
-    # dedup_embedding_cosine_w6, dedup_embedding_cosine,
-    # mm_frame_sample, text_zscore_by_lang, agg_pivot_status, agg_cube,
-    # agg_count_distinct, agg_percentiles, win_lead_lag_ntile,
-    # win_range_frame, sample_deterministic, quality_profile,
-    # sql_api_top_nations, sketch_approx_distinct,
-    # sketch_approx_quantiles — see the r10 note above.)
-    # r04 driver HASH-green (CORRECTNESS_r04: 50/50, rows + schema +
-    # hash), code untouched since — the full r04 window promotes,
-    # including the three array-output queries stringified in r04
-    # (text_inverted_index, agg_collect_sorted, f_array_set_ops) and
-    # the retuned-and-recertified ANN trio.
-    # r16 note: the 9 r04-last-green rows that used to open this block
-    # (text_lm_quality, win_dist_functions, sql_scalar_subquery,
-    # sql_in_subquery, sql_having_total, sql_lateral_topk,
-    # sql_recursive_spine, sql_market_share, plus text_oov_rate below)
-    # are HELD OUT at the r16 rotation (not un-certified —
-    # recertifying): LAST-DRIVER-GREEN recomputed over
-    # CORRECTNESS_r01..r15 makes them the oldest official greens in
-    # the repo. With the 22 alphabetically-first r06-last-green rows
-    # noted below they fill the 31 filler slots of the r16 window
-    # (18 registry_r16 bank entries + 1 planned-change hold + 31 = 50).
-    # They swap back one-for-one as genuinely new r16 registrations
-    # land mid-round (the standing mart_abc_parts precedent).
-    # r08 note: graph_pagerank is NOT listed despite its green history —
-    # it was pulled at the r08 rotation for a PLANNED checkpoint-cadence
-    # change (checkpoint_every 8→2, VERDICT r07 "What's wrong" #2). The
-    # change did NOT land in round 8 (VERDICT r08 "What's wrong" #1);
-    # it landed in round 9 (operators/graph.py:181 now 2, plan budget
-    # pinned in tests/test_plan_audits.py) and the entry recertifies in
-    # the r09 window with the new cadence.
-    # r05 driver HASH-green (CORRECTNESS_r05: 50/50 — 49 hash-matched
-    # + stream_click_attribution rows-only by design), code untouched
-    # since — the full r05 window promotes EXCEPT: f_null_functions,
-    # f_bitwise_functions (held out to recertify in the r06 window —
-    # the staged registrations leave free slots and the window must
-    # hold exactly 50 non-stable entries; these are the cheapest
-    # greens to re-run) and stream_tumbling_counts' sibling note
-    # above. f_hash_functions was initially held out too, then
-    # promoted here when `mart_abc_parts` (the VERDICT #6 rework)
-    # registered mid-round and took its slot. (r07: f_hash_functions
-    # moved to the held-out recert set with its f_* siblings.)
-    # r11 note: stream_click_attribution is NOT listed despite its
-    # rows-only green history — VERDICT r10 #2 retires the engine's
-    # last rows-only entry by giving it the hash-exact
-    # deterministic-projection oracle (the stream_dedup_keys pattern:
-    # under an availableNow drain the inner stream-stream join emits
-    # exactly the batch events_interval_join row-set, which the parity
-    # test asserts literally). Changed oracle ⇒ back into the r11
-    # window for official recertification.
-    # r13 note: the 6 r05-era names that used to sit here
-    # (sql_parameterized, agg_listagg, agg_minby_maxby,
-    # agg_weighted_avg, win_moving_avg, j_cross — the "recert in r13"
-    # promise made at the r12 rotation) are HELD OUT at the r13
-    # rotation (not un-certified — recertifying): their last official
-    # driver row is CORRECTNESS_r05, the oldest green history left in
-    # the repo. With the 10 r05-era mid-r12 swap-backs and the 21
-    # oldest r06-vintage stables they fill the 37 filler slots of the
-    # r13 window (10 bank + 3 ADVICE-r12 holds + 37 = 50). They swap
-    # back one-for-one as genuinely new r13 registrations land.
-    # r06 driver HASH-green (CORRECTNESS_r06: 48/50 hash-matched; the
-    # two rows-only streaming rows stay in the window to receive their
-    # hash-exact oracles this round — VERDICT r06 #2), code untouched
-    # since — the r06 window promotes EXCEPT: `graph_kcore` and
-    # `text_dup_span_removal`, deliberately kept in the r07 window
-    # because VERDICT r06 #3/#4 schedule implementation changes to
-    # both (iterative-plan checkpoint cadence; sorted-positions span
-    # rebuild) and changed implementations recertify officially.
-    # r13 note: the 21 oldest r06-vintage stables that used to open
-    # this block (sketch_countmin_suppliers, events_mad_outliers,
-    # dedup_shingle_containment, dedup_semantic, text_domain_affinity,
-    # text_bpe_merge_step, text_collocations, graph_label_propagation,
-    # emb_gram_matrix, dedup_simhash_recall_eval,
-    # quality_distribution_drift, corpus_shard_manifest,
-    # dedup_blocking_profile, agg_exact_median_global, events_ewma,
-    # pq_encode, pq_adc_topk, ivfpq_topk, events_rolling_users_daily,
-    # sample_stratified_exact, events_step_latency — last official
-    # driver row CORRECTNESS_r06) are HELD OUT at the r13 rotation
-    # (not un-certified — recertifying); see the r13 note above. They
-    # swap back one-for-one as new r13 registrations land.
-    # r16 note: 13 r06-last-green rows that used to sit in this block
-    # (events_theil_sen, agg_price_histogram, agg_weighted_median,
-    # events_cusum_alarms, events_rolling_slope, freq_copurchase_lift,
-    # events_mode_type, graph_link_jaccard, agg_exact_quantiles,
-    # events_seasonal_baseline, events_top_paths, events_dwell_time,
-    # mart_abc_parts) are HELD OUT at the r16 rotation as age-picked
-    # recertification fillers — see the r16 note at the top of this
-    # list. The other 9 r16 fillers from the r06 vintage sit in the
-    # r13-swap block below (agg_exact_median_global,
-    # corpus_shard_manifest, dedup_blocking_profile, dedup_semantic,
-    # dedup_shingle_containment, dedup_simhash_recall_eval,
-    # emb_gram_matrix, events_mad_outliers, graph_label_propagation).
-    "text_readability", "text_ngram_novelty",
-    "quality_benford",
-    "text_rake_keyphrases",
-    "quality_winsorize",
-    "text_hashed_features", "mart_rfm_scores",
-    "mart_cohort_ltv",
-    "text_lang_confusion",
-    # (r08: f_null/f_bitwise and the six f_* families promoted back in
-    # r07 moved to the held-out recert set again — see the r08 note.)
-    # r08 driver HASH-green (CORRECTNESS_r07: 50/50 — rows + schema +
-    # hash, zero errors), promoted at the r08 rotation in r07-window
-    # order. Held IN the window instead for PLANNED changes:
-    # corpus_release_manifest (per-language quota rebuilt as two-phase
-    # top-k, VERDICT r07 #1), stream_sessions_final (oracle tie-break
-    # ORDER BY ts, event_id — ADVICE r07), stream_topk_state
-    # (single-batch drain guard — ADVICE r07). The changes did NOT
-    # land in round 8 (VERDICT r08 "What's wrong" #1 — the holds were
-    # recorded but the code was untouched); all three landed in ROUND
-    # 9 (registry_r07.py quota via operators/relational.py::
-    # grouped_topk; registry_r07.py session oracle; streaming/
-    # stateful.py drain guard) and the entries recertify in the r09
-    # window with the changed code.
-    "stream_tumbling_counts", "graph_kcore", 
-    "stream_ewma_values", "mm_wav_stats", "mm_bmp_stats",
-    "quality_gini", "events_ks_global", "text_code_profile",
-    "text_bpe_fertility", "graph_bfs_layers", "stream_dedup_keys",
-    "mm_media_features", "f_map_functions", "events_seasonal_anomalies",
-    "mart_pareto_coverage", "mm_wav_resample", "mm_bmp_rle8",
-    "stream_segment_rollup",
-    # r09 mid-round swaps: each genuinely new registry_r09 entry freed
-    # one window slot by promoting a held-out recert filler back here
-    # (f_case_bands, set_union_distinct, j_full_outer,
-    # f_regexp_extract, set_intersect_all, set_except_dup_left,
-    # set_except_all, f_datetime_truncs, f_string_pad_translate,
-    # f_hash_functions, f_bitwise_functions, f_try_arithmetic — each
-    # many-times-driver-certified, most recently CORRECTNESS_r08).
-    # r10 note: those same 12 are HELD OUT again at the r10 rotation —
-    # together with the 30 r03-era holds noted above they fill the 42
-    # filler slots next to the 8 registry_r10 bank entries (8 + 42 =
-    # 50). They swap back one-for-one as new r10 registrations land.
-    #
-    # ROUND-10 ROTATION — EXECUTED at r10 start: all 50 r09-window
-    # queries are CORRECTNESS_r09 green (rows + schema + hash for 47;
-    # the stream_* entries hash-green via their batch-parity oracles),
-    # code untouched since the r09 close — promote ALL 50, in window
-    # order. This includes the four r08-planned changes that landed in
-    # round 9 (corpus_release_manifest two-phase quota, graph_pagerank
-    # checkpoint 8→2, stream_sessions_final oracle tie-break,
-    # stream_topk_state drain guard) — each now carries an official
-    # driver row for the CHANGED code, closing the r08 audit-trail
-    # finding for good.
-    # r10 exception: graph_pagerank and graph_pagerank_personalized
-    # are NOT promoted despite their CORRECTNESS_r09 greens — the
-    # ADVICE r09 defensive edge normalization (operators/graph.py:
-    # edges projected to internal __src/__dst names at entry) CHANGED
-    # their implementation this round, and changed implementations
-    # recertify officially. Both stay in the r10 window; f_case_bands
-    # and set_union_distinct swap back here to keep the window at
-    # exactly 50.
-    "p2_projection", "p3_rename", "p4_conform", "p5_member_filter",
-    "p6_nullsafe_neq", "p7_null_predicates", "p8_drop_cols",
-    "p9_literal_append", "j_inner", "j_semi", "j_anti",
-    "r1_explode_tokens_pos", "r2_explode_keep_empty",
-    "u1_union_by_name", "set_intersect", "set_except", "f1_coalesce",
-    "f2_f3_strip_split", "f4_parse_ddmmyyyy", "f5_epoch_ms_roundtrip",
-    "f6_empty_to_null_cast", "a1_dedup_full", "a2_counts",
-    "d1_orphan_audit", "win_rank_topn", "win_running_total",
-    "sort_limit_topk", "stream_topk_state",
-    "stream_sessions_final", "corpus_release_manifest",
-    "sample_reservoir_per_lang", "corpus_mixture_rebalance",
-    "events_hopping_counts", "text_bpe_roundtrip",
-    "stream_dedup_static_store", "mm_bmp_palette8",
-    "events_asof_nearest", "events_resample_interpolate",
-    "stream_hopping_counts",
-    "events_stickiness_dau_mau", "corpus_dedup_rate_report",
-    "f_string_functions", "f_math_functions", "f_date_arithmetic",
-    "f_array_functions", "p_na_fill_drop", "f_null_functions",
-    "f_array_set_ops",
-    "f_case_bands",        # slot ← graph_pagerank (changed, recerts)
-    "set_union_distinct",  # slot ← graph_pagerank_personalized (ditto)
-    # r10 mid-round swaps: each genuinely new registry_r10 entry frees
-    # one window slot by promoting a held-out recert filler back here
-    # (every one is a many-times-driver-certified green, most recently
-    # CORRECTNESS_r08/r09).
-    "j_full_outer",        # slot → graph_degree_assortativity
-    "f_regexp_extract",    # slot → graph_reciprocity
-    "set_intersect_all",   # slot → quality_chi2_lang_source
-    "set_except_dup_left",  # slot → text_kwic_concordance
-    "set_except_all",      # slot → mm_bmp_resize_nearest
-    "f_datetime_truncs",   # slot → mm_wav_frame_energy
-    "f_string_pad_translate",  # slot → events_gaps_islands
-    "f_hash_functions",    # slot → train_shard_planner
-    "f_bitwise_functions",  # slot → graph_katz_centrality
-    "f_try_arithmetic",    # slot → quality_cramers_v
-    # r11 note: the 21 r03-era names that used to close this block
-    # (text_repetition_stats, doc_chunks, sample_source_mix,
-    # train_pack_sequences, dedup_shingle_jaccard, dedup_shingle_capped,
-    # dedup_minhash_lsh, dedup_simhash, dedup_simhash_pairs,
-    # dedup_clusters, dedup_canonical_docs, sim_ann_lsh_sized,
-    # corpus_clean_pipeline, events_funnel, ivf_kmeans_step,
-    # dedup_embedding_cosine_w6, dedup_embedding_cosine,
-    # mm_frame_sample, text_zscore_by_lang, agg_pivot_status, agg_cube
-    # — each swapped back here during round 10, so their last official
-    # driver row is still CORRECTNESS_r03) are HELD OUT again at the
-    # r11 rotation: with the 17 r02-era holds noted at the top of this
-    # list they fill the 38 filler slots of the r11 window. They swap
-    # back one-for-one as new r11 registrations land. events_interval_
-    # join and agg_regional_volume (the only other r03-era greens)
-    # stay promoted — the filler pool needs exactly 38.
-    #
-    # ROUND-11 ROTATION — EXECUTED at r11 start: all 50 r10-window
-    # queries are CORRECTNESS_r10 green (rows + schema + hash, zero
-    # errors — the driver's cleanest window yet), code untouched since
-    # the r10 close — promote ALL 50 in window order EXCEPT
-    # graph_pagerank_convergence, which stays in the r11 window for a
-    # PLANNED change (VERDICT r10 #3: the depth-1/depth-2 double
-    # lineage becomes a shared localCheckpoint'ed prefix in
-    # operators/graph.py; changed implementations recertify
-    # officially).
-    "agg_count_distinct", "agg_percentiles", "win_lead_lag_ntile",
-    "win_range_frame", "sample_deterministic", "quality_profile",
-    "sql_api_top_nations", "sketch_approx_distinct",
-    "sketch_approx_quantiles", "graph_pagerank",
-    "graph_pagerank_personalized", "quality_iqr_outliers",
-    "agg_share_of_parent", "mm_wav_mulaw", "events_asof_tolerance",
-    "graph_hits_scores", "text_jaccard_topk_pairs",
-    "quality_duplicate_key_audit", "text_vocab_coverage_curve",
-    "graph_degree_assortativity", "graph_reciprocity",
-    "quality_chi2_lang_source", "text_kwic_concordance",
-    "mm_bmp_resize_nearest", "mm_wav_frame_energy",
-    "events_gaps_islands", "train_shard_planner",
-    "graph_katz_centrality", "quality_cramers_v",
-    "events_user_lifecycle", "events_peak_concurrency",
-    "mart_revenue_bridge", "events_missing_days", "sim_margin_audit",
-    "text_hapax_ratio", "graph_clustering_coeff",
-    "events_conversion_latency", "mart_order_fill_latency",
-    "events_autocorr_daily", "mart_revenue_hhi",
-    "events_engagement_transitions", "events_ab_assignment_audit",
-    "events_hour_dow_heatmap", "events_session_depth_hist",
-    "text_doclen_quartiles_by_source", "graph_degree_histogram",
-    "corpus_source_overlap", "quality_effect_size_cohens_d",
-    "train_shuffle_order_sample",
-    # r11 mid-round swaps: each genuinely new registry_r11 entry frees
-    # one window slot by promoting a held-out recert filler back here
-    # (youngest-history fillers return first — the r03-era holds —
-    # keeping the oldest r02-era rows inside the window to refresh).
-    # slot → mm_png_stats
-    # slot → events_holt_linear
-    # slot → freq_association_rules
-    # slot → quality_lorenz_deciles
-    # slot → stream_burst_flags
-    # slot → events_cumulative_users
-    # slot → sim_pq_recall_eval
-    # slot → events_funnel_windowed
-    # slot → mm_png_resize_nearest
-    # slot → graph_component_sizes
-    # slot → mart_customer_band_migration
-    # slot → sql_pivot_multi_agg
-    # slot → emb_dimension_profile
-    # slot → f_json_functions
-    # slot → link_blocking_recall_eval
-    # slot → stream_cumulative_users
-    # slot → mm_png_flip_crop
-    # slot → events_zscore_anomaly_days
-    # slot → mart_repeat_purchase_curve
-    # slot → events_attribution_gap_bands
-    # slot → events_mann_kendall_trend
-    # slot → dedup_cluster_purity_eval
-    # slot → sim_ivf_recall_eval
-    # r12 rotation: the 47 CORRECTNESS_r11 hash-greens promoted here in
-    # window order (50/50 green; the other 3 — sql_pivot_multi_agg,
-    # stream_burst_flags, stream_cumulative_users — are HELD inside the
-    # r12 window for planned ADVICE-r11 changes: post-pivot coalesce and
-    # single-batch-drain hardening). 37 r05-era vintages (last official
-    # row CORRECTNESS_r05: the sim_cosine_topk / events_asof_join /
-    # TPC-H-completion block and the agg_*/win_* r05 additions) are
-    # HELD OUT of this list (not un-certified — recertifying) to fill
-    # the 37 non-bank window slots; j_cross, sql_parameterized,
-    # agg_listagg, agg_minby_maxby, agg_weighted_avg, win_moving_avg
-    # stay stable (the 6 cheapest of the 43 candidates — recert in
-    # r13). Swapped back one-for-one as r12 registrations land.
-    "mart_flagship",
-    "j1_left_broadcast_dim",
-    "j2_left_fact_child",
-    "a1_dedup_by_key",
-    "agg_pricing_summary",
-    "agg_topk_revenue",
-    "agg_rollup",
-    "text_fingerprints",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "mm_binary_metadata",
-    "mm_decode_features",
-    "events_hourly_snapshot",
-    "events_json_flatten",
-    "events_sessionize",
-    "stream_click_attribution",
-    "graph_pagerank_convergence",
-    "mm_bmp_flip_crop",
-    "graph_harmonic_r2",
-    "text_term_burstiness",
-    "agg_weekend_revenue_share",
-    "events_interarrival_bands",
-    "train_split_leakage_audit",
-    "stream_interarrival_bands",
-    "mm_wav_peak_normalize",
-    "events_burst_flag_audit",
-    "sample_temperature_mixture",
-    "mm_png_stats",
-    "events_holt_linear",
-    "freq_association_rules",
-    "quality_lorenz_deciles",
-    "events_cumulative_users",
-    "sim_pq_recall_eval",
-    "events_funnel_windowed",
-    "mm_png_resize_nearest",
-    "graph_component_sizes",
-    "mart_customer_band_migration",
-    "emb_dimension_profile",
-    "f_json_functions",
-    "link_blocking_recall_eval",
-    "mm_png_flip_crop",
-    "events_zscore_anomaly_days",
-    "mart_repeat_purchase_curve",
-    "events_attribution_gap_bands",
-    "events_mann_kendall_trend",
-    "dedup_cluster_purity_eval",
-    "sim_ivf_recall_eval",
-    # r12 mid-round swaps: each genuinely new registry_r12 entry frees
-    # one window slot by promoting a held-out r05-era recert filler
-    # back here (they recertify in r13 instead).
-    # r13 note: the 10 r05-era mid-r12 swap-backs that used to sit
-    # here (text_line_dedup, text_bm25_scores, text_self_dedup,
-    # sample_quality_quota, dedup_minhash_recall_eval,
-    # emb_quantize_int8, sim_topk_int8, sql_q9_product_profit,
-    # sql_q21_waiting_suppliers, sql_q18_large_orders — each freed a
-    # window slot for a new r12 registration; last official driver row
-    # still CORRECTNESS_r05) are HELD OUT at the r13 rotation (not
-    # un-certified — recertifying); see the r13 notes above.
-    #
-    # ROUND-13 ROTATION — EXECUTED at r13 start: all 50 r12-window
-    # queries are CORRECTNESS_r12 green (rows + schema + hash, zero
-    # errors) — promote ALL 50 in window order EXCEPT three held
-    # INSIDE the r13 window for planned ADVICE-r12 changes (changed
-    # implementations recertify officially):
-    #   quality_benford_chi2_gate — chi² must charge every digit of
-    #     the 9-cell Benford domain its expected-count term even at
-    #     obs=0 (left-join onto a literal digit domain, both engines);
-    #   mm_media_dispatch_profile — f0/f3 sums aggregated as BIGINT
-    #     then cast, so partial sums stay exact integers at any SF
-    #     (the double running sum crossed 2^53 at ~56k wav payloads);
-    #   dedup_minhash_estimate_error — its `signature=` reuse path in
-    #     minhash_lsh_pairs gained parameter-consistency validation
-    #     (ADVICE r12 #4: a mismatched precomputed signature now
-    #     errors instead of silently mis-banding).
-    "sim_cosine_topk", "events_asof_join", "events_asof_forward",
-    "stream_burst_flags", "sql_pivot_multi_agg",
-    "stream_cumulative_users", "dedup_lsh_bucket_profile",
-    "dedup_lsh_band_hist", "graph_bfs_layer_hist",
-    "train_packing_efficiency", "train_pack_fragmentation",
-    "text_ttr_by_source", "mm_wav_rms_bands", "mart_supplier_scorecard",
-    "events_error_rate_daily", "f_higher_order_array_funcs",
-    "sim_ivf_recall_sweep", "mm_gif_stats", "events_ab_lift_gate",
-    "quality_ks_drift_gate", "corpus_dedup_rate_by_source",
-    "link_er_clusters", "events_markov_stationary",
-    "sql_q3_shipping_priority", "sql_q14_promo_share",
-    "sql_q16_supplier_cnt", "sql_q22_dormant_rich",
-    "win_first_last_ignorenulls", "agg_median_split",
-    "win_time_range_frame", "sql_q10_returned_items",
-    "agg_sufficient_stats", "agg_mode_per_group",
-    "sql_q2_min_cost_supplier", "sql_q6_forecast_revenue",
-    "sql_q7_nation_volume", "sql_q12_late_lines_priority",
-    "sql_q13_order_distribution", "sql_q15_top_supplier",
-    "sql_q20_excess_suppliers", "agg_corr_exact", "win_event_gaps",
-    "win_pct_change_daily", "events_bigram_transitions",
-    "text_ngram_topk", "dedup_normalized_exact", "graph_triangle_count",
-    # r13 mid-round swaps: each genuinely new registry_r13 entry frees
-    # one window slot by promoting a held-out recert filler back here
-    # (youngest-history fillers return first — the r06-vintage holds —
-    # keeping the oldest r05-era rows inside the window to refresh).
-    # r14: sketch_countmin_suppliers is PULLED from this list (was
-    # "slot → mm_png_gray_stats") — its build flipped to the
-    # pre-aggregate-by-key path this round (bit-identical sketch, but
-    # changed implementation ⇒ back into the window for official
-    # recertification, the graph_pagerank r08 precedent). Its window
-    # slot comes from promoting text_oov_rate back (the youngest
-    # age-picked filler after layout_zorder_profile).
-    # r16 note: text_oov_rate (r04-last-green) and 9 r06-last-green
-    # rows that used to sit here (events_mad_outliers,
-    # dedup_shingle_containment, dedup_semantic,
-    # graph_label_propagation, emb_gram_matrix,
-    # dedup_simhash_recall_eval, corpus_shard_manifest,
-    # dedup_blocking_profile, agg_exact_median_global) are HELD OUT at
-    # the r16 rotation as age-picked recertification fillers — see the
-    # r16 note at the top of this list. Slot provenance preserved:
-    # events_mad_outliers ← mm_png_rgba_stats, dedup_shingle_containment
-    # ← events_survival_km, dedup_semantic ← quality_mann_whitney_gate,
-    # graph_label_propagation ← stream_bigram_transitions,
-    # emb_gram_matrix ← events_poisson_dispersion_gate,
-    # dedup_simhash_recall_eval ← events_max_drawdown,
-    # corpus_shard_manifest ← mm_gif_interlaced_stats,
-    # dedup_blocking_profile ← mm_png_adam7_stats,
-    # agg_exact_median_global ← mm_png_palette_stats.
-    "text_domain_affinity",       # slot → text_zipf_rank_ratio
-    "text_bpe_merge_step",        # slot → quality_tv_drift_gate
-    # slot → events_slo_burn_rates
-    "quality_distribution_drift",  # slot → stream_max_drawdown
-    # r14 note: 36 recert fillers are HELD OUT of this list (not
-    # un-certified — recertifying), picked by LAST-DRIVER-GREEN round
-    # computed from CORRECTNESS_r01..r13 (VERDICT r13 "Next round" #1:
-    # rotate by official-record age, not bank vintage). Held out:
-    # the 3 r02-last-green rows (text_token_stats, text_lang_id,
-    # text_quality_score), the 22 r03-last-green rows
-    # (events_interval_join, agg_regional_volume, text_repetition_stats,
-    # doc_chunks, sample_source_mix, train_pack_sequences,
-    # dedup_shingle_jaccard, dedup_shingle_capped, dedup_simhash,
-    # dedup_simhash_pairs, dedup_clusters, dedup_canonical_docs,
-    # sim_ann_lsh_sized, corpus_clean_pipeline, events_funnel,
-    # ivf_kmeans_step, dedup_embedding_cosine_w6, dedup_embedding_cosine,
-    # mm_frame_sample, text_zscore_by_lang, agg_pivot_status, agg_cube)
-    # and 11 of the 47 r04-last-green rows (the VERDICT-named
-    # sim_ann_lsh_bucket / sim_ivf_topk / j_salted_skew plus
-    # sim_ivf_multiprobe, text_inverted_index, text_redact_pii,
-    # decontam_ngram_overlap, text_tfidf_top_terms, text_vocab_topv,
-    # text_oov_rate, layout_zorder_profile). 14 + 36 = 50. They swap
-    # back one-for-one as genuinely new r14 registrations land
-    # mid-round (the standing mart_abc_parts precedent).
-    # r13 window promotes — CORRECTNESS_r13: 50/50 green (rows +
-    # schema + hash), in window order:
-    "text_line_dedup", "text_bm25_scores", "text_self_dedup", "sample_quality_quota",
-    "dedup_minhash_recall_eval", "emb_quantize_int8", "sim_topk_int8",
-    "events_ewma", "pq_encode", "pq_adc_topk", "ivfpq_topk", "events_rolling_users_daily",
-    "sample_stratified_exact", "events_step_latency", "dedup_minhash_estimate_error",
-    "mm_media_dispatch_profile", "quality_benford_chi2_gate", "stream_error_rate_daily",
-    "events_error_burst_runs", "train_packing_curve", "quality_approx_percentile_gate",
-    "sketch_hll_error_gate", "mm_gif_resize_nearest", "mm_gif_flip_crop",
-    "mart_nation_trade_balance", "text_dedup_survivorship",
-    "mm_png_gray_stats", "mm_png_rgba_stats", "events_survival_km", "quality_mann_whitney_gate",
-    "text_zipf_rank_ratio", "quality_tv_drift_gate", "events_slo_burn_rates",
-    "stream_bigram_transitions", "events_poisson_dispersion_gate", "events_max_drawdown",
-    "stream_max_drawdown", "mm_gif_interlaced_stats", "mm_png_adam7_stats",
-    "mm_png_palette_stats", "sql_parameterized", "agg_listagg", "sql_q9_product_profit",
-    "sql_q18_large_orders", "sql_q21_waiting_suppliers", "agg_minby_maxby",
-    "agg_weighted_avg", "win_moving_avg", "j_cross",
-    # mid-r14 swap-backs (one per genuinely new r14 registration, the
-    # standing mart_abc_parts precedent; youngest-vintage filler
-    # leaves the window first so the oldest official rows stay in for
-    # recertification — VERDICT r13 #1): layout_zorder_profile came
-    # back for text_dup_span_removal_capped — and is HELD OUT again at
-    # the r15 rotation as an r04-last-green filler (see the r15 note).
-    #
-    # ROUND-15 ROTATION — EXECUTED at r15 start. The r14 window was
-    # CORRECTNESS_r14 50/50 green (rows + schema + hash, zero errors);
-    # ALL 50 rows promote below in window order EXCEPT
-    # text_dup_span_removal_capped, HELD IN the r15 window for a
-    # PLANNED change (ADVICE r14 #1: the shared single-slot
-    # gram-stream cache in operators/text.py becomes a small keyed LRU
-    # so exact+capped dup-span twins and cross-operator compositions
-    # keep their persist; changed implementations recertify
-    # officially). The same planned change pulls FOUR long-stable
-    # entries out of this list into the window: text_collocations,
-    # text_dup_span_coverage (both r06-last-green),
-    # text_dup_span_removal (r07-last-green) and text_dup_span_cap_audit
-    # (r13-last-green — the exact+capped composition that motivated
-    # the LRU). Window composition: 16 registry_r15 bank entries + 5
-    # gram-cache holds + 29 recertification fillers = 50. The fillers
-    # are the 29 alphabetically-first of the 38 r04-last-green rows
-    # (LAST-DRIVER-GREEN recomputed over CORRECTNESS_r01..r14 — the
-    # oldest official greens in the repo): agg_collect_sorted,
-    # agg_grouping_sets, agg_having, agg_incremental_merge,
-    # decontam_embedding, dedup_incremental_batch,
-    # dedup_incremental_bloom, dim_scd2_lookup, dim_scd2_orders,
-    # events_interval_merge, events_resample_ffill,
-    # events_retention_cohorts, events_session_native,
-    # events_time_rollup, events_variant_extract, freq_heavy_hitters,
-    # join_incremental_delta, layout_zorder_profile, link_fuzzy_titles,
-    # quality_expectations, quality_key_skew, quality_pseudonymize,
-    # quality_train_split, r_unpivot_metrics, sketch_incremental_merge,
-    # snapshot_diff_audit, sql_correlated_scalar, sql_disjunctive_join,
-    # sql_exists_agg. The 9 remaining r04 rows (sql_having_total,
-    # sql_in_subquery, sql_lateral_topk, sql_market_share,
-    # sql_recursive_spine, sql_scalar_subquery, text_lm_quality,
-    # text_oov_rate, win_dist_functions) stay promoted and are the
-    # next-oldest picks for the r16 window. Fillers swap back
-    # one-for-one as genuinely new r15 registrations land mid-round.
-    # r14 window promotes — CORRECTNESS_r14: 50/50 green, in window
-    # order (minus the one hold noted above):
-    "text_token_stats", "text_lang_id", "text_quality_score",
-    "text_repetition_stats", "doc_chunks", "sample_source_mix",
-    "train_pack_sequences", "dedup_shingle_jaccard",
-    "dedup_shingle_capped", "dedup_simhash", "dedup_simhash_pairs",
-    "dedup_clusters", "dedup_canonical_docs", "sim_ann_lsh_bucket",
-    "sim_ann_lsh_sized", "corpus_clean_pipeline", "text_inverted_index",
-    "events_funnel", "ivf_kmeans_step", "sim_ivf_topk",
-    "sim_ivf_multiprobe", "dedup_embedding_cosine_w6",
-    "dedup_embedding_cosine", "mm_frame_sample", "text_zscore_by_lang",
-    "text_redact_pii", "decontam_ngram_overlap", "text_tfidf_top_terms",
-    "text_vocab_topv", "sketch_countmin_suppliers",
-    "mm_png_gray_resize_nearest", "mm_png_rgba_flip_crop",
-    "events_km_median_latency", "quality_benford2_chi2_gate",
-    "agg_skewness_kurtosis", "sample_temperature_curve",
-    "events_markov_convergence", "mm_wav_silence_trim",
-    "mart_discount_effectiveness", "graph_double_sweep_diameter",
-    "mm_bmp_topdown_stats", "mm_wav_stereo_stats",
-    "quality_runs_test_gate", "sim_ivf_cluster_balance",
-    "agg_pivot_status", "agg_cube", "events_interval_join",
-    "agg_regional_volume", "j_salted_skew",
-    #
-    # ROUND-16 ROTATION — EXECUTED at r16 start. The r15 window was
-    # CORRECTNESS_r15 50/50 green (rows + schema + hash, zero errors);
-    # ALL 50 rows promote below in window order EXCEPT
-    # sim_lsh_recall_sweep, HELD IN the r16 window for a PLANNED
-    # change (ADVICE r15 #3: registry_r15's sweep-cache positional
-    # 2-slot FIFO becomes a plan-keyed sameSemantics LRU — the
-    # operators/text.py gram-stream pattern — so composed
-    # builds can no longer silently unpersist the sweep's shared
-    # signature relation; changed implementations recertify
-    # officially). Window composition: 18 registry_r16 bank entries +
-    # 1 hold + 31 recertification fillers = 50. The fillers are the 9
-    # r04-last-green rows + the 22 alphabetically-first of the 34
-    # r06-last-green rows (LAST-DRIVER-GREEN recomputed over
-    # CORRECTNESS_r01..r15) — names in the r16 notes above. Fillers
-    # swap back one-for-one as genuinely new r16 registrations land
-    # mid-round.
-    # r15 window promotes — CORRECTNESS_r15: 50/50 green, in window
-    # order (minus the one hold noted above):
-    "layout_zorder_profile", "quality_key_skew",
-    "dedup_incremental_batch", "quality_train_split",
-    "snapshot_diff_audit", "decontam_embedding",
-    "dedup_incremental_bloom", "agg_incremental_merge",
-    "link_fuzzy_titles", "dim_scd2_orders", "quality_expectations",
-    "events_retention_cohorts", "events_interval_merge",
-    "events_resample_ffill", "quality_pseudonymize", "dim_scd2_lookup",
-    "events_variant_extract", "join_incremental_delta",
-    "text_collocations", "text_dup_span_coverage",
-    "text_dup_span_removal", "text_dup_span_cap_audit",
-    "text_dup_span_removal_capped", "text_simpson_diversity",
-    "train_token_budget_select", "sample_weighted_bottomk",
-    "events_page_hinkley_drift", "quality_jarque_bera",
-    "dedup_idf_jaccard", "text_heaps_curve", "quality_pareto_front",
-    "dedup_cascade_attribution", "text_boilerplate_edges",
-    "events_burstiness_index", "train_mix_epochs_plan",
-    "events_changepoint_scan", "stream_gap_burstiness",
-    "text_dup_span_shrinkage", "r_unpivot_metrics",
-    "agg_grouping_sets", "sketch_incremental_merge", "sql_exists_agg",
-    "agg_having", "freq_heavy_hitters", "sql_correlated_scalar",
-    "events_session_native", "events_time_rollup",
-    "sql_disjunctive_join", "agg_collect_sorted",
-]
-
-# Queries awaiting their first driver certification that could NOT fit
-# the current 50-slot window. EMPTY as of round 5: the promote-ALL
-# rotation planned in r04 executed at r05 start —
-#
-# * the 50 CORRECTNESS_r04 hash-greens moved into _STABLE_CERTIFIED;
-# * all 34 previously-deferred entries (ten TPC-H completions, the
-#   corpus/asof/BM25/recall-eval ops, j_cross, the int8 pair, the 16
-#   window-overflow analytics entries, and stream_click_attribution's
-#   rows-only slot) rotated INTO the r05 window;
-# * `events_asof_join` + `sim_cosine_topk` left _STABLE_CERTIFIED to
-#   recertify officially after their r04 helper changes (VERDICT r04
-#   "What's wrong" #1);
-# * the 14 round-5 registrations (registry_r05.py) fill the remaining
-#   slots exactly: 34 + 2 + 14 = 50.
-#
-# End state: after the r05 driver run, EVERY registered query has an
-# official driver CORRECTNESS row. Any new registration from here on
-# must either fit a freed window slot (stable promotion) or be
-# appended here with a reason — tests/test_certification_window.py
-# enforces the accounting.
-#
-# ROUND-6 ROTATION — EXECUTED at r06 start: the r05 greens moved into
-# _STABLE_CERTIFIED above (minus the held-out recertifications noted
-# there), registry_r06 went live via the import at registry_ext's
-# bottom (see the note at the import block above), and its staged
-# entries + the held-out slots fill the window to exactly 50. Staged
-# registrations, built + parity-proven in round 5 (the r05 window was
-# exactly full):
-# `pq_encode`, `pq_adc_topk`, and `ivfpq_topk` (operators/pq.py —
-# product quantization + the IVF-PQ composition; DuckDB oracles proven
-# bit-identical in tests/test_pq_oracle_parity.py) and
-# `events_ewma` (operators/timeseries.py::ewma_fixed_point —
-# exact integer exponential smoothing; recursive-CTE oracle proven in
-# tests/test_timeseries.py). Round-5 additions to the staged set, each
-# with its DuckDB oracle proven bit-identical before registration:
-# `sketch_countmin_suppliers` (operators/frequency.py count_min_* —
-# bounded mergeable frequency state; tests/test_countmin.py),
-# `events_mad_outliers` (operators/quality.py exact_group_median /
-# mad_outliers; tests/test_robust_stats.py),
-# `dedup_shingle_containment` (operators/dedup.py
-# shingle_containment_pairs — asymmetric sub-document lens;
-# tests/test_containment.py), `dedup_semantic`
-# (operators/similarity.py semantic_dedup — SemDeDup cluster-then-
-# epsilon-ball; tests/test_semantic_dedup.py), `text_domain_affinity`
-# (operators/text.py domain_affinity — DSIR-shape data selection;
-# tests/test_domain_affinity.py), `text_bpe_merge_step`
-# (operators/bpe.py — distributed BPE vocabulary induction;
-# tests/test_bpe.py), `text_collocations` (operators/text.py
-# collocation_lift — ln-free PMI association mining;
-# tests/test_collocations.py), `graph_label_propagation`
-# (operators/graph.py label_propagation — deterministic sync LPA,
-# 3-round unrolled-CTE oracle; tests/test_label_propagation.py), and
-# `emb_gram_matrix` (operators/linalg.py gram_matrix — exact integer
-# -unit second-moment accumulation; tests/test_linalg.py),
-# `dedup_simhash_recall_eval` (banding scorecard vs exact bigram
-# Jaccard truth; tests/test_simhash_eval.py),
-# `quality_distribution_drift` (operators/quality.py
-# distribution_drift — null-safe category share drift;
-# tests/test_distribution_drift.py), `corpus_shard_manifest`
-# (operators/layout.py corpus_manifest — order-independent release
-# checksums; checksum must stay stringified at the boundary;
-# tests/test_corpus_manifest.py), and `dedup_blocking_profile`
-# (operators/dedup.py shingle_blocking_profile — exact candidate-pair
-# volume estimator; tests/test_blocking_profile.py).
-# `agg_exact_median_global` (operators/quality.py exact_kth_value —
-# distributed exact selection via iterative histogram refinement; the
-# engine side computes a scalar and wraps it in a one-row DataFrame,
-# like the kmeans centroid collect; ORDER BY OFFSET oracle proven in
-# tests/test_kth_value.py).
-# Late-round-5 additions (same contract — oracle proven bit-identical
-# at sf0.001 AND sf0.01 before staging): `agg_weighted_median`
-# (operators/quality.py::weighted_group_median — exact lower weighted
-# median; tests/test_weighted_median.py), `quality_benford`
-# (quality.py::benford_profile — log-free first-digit audit;
-# tests/test_benford.py), `events_cusum_alarms`
-# (timeseries.py::cusum_fixed_point — Page's CUSUM with reset, the
-# EWMA fold pattern; tests/test_cusum.py), `events_rolling_slope`
-# (timeseries.py::rolling_slope — int64 window-sum OLS trend;
-# tests/test_rolling_slope.py), `text_dup_span_coverage`
-# (text.py::dup_span_coverage — Lee-et-al positional duplicate-n-gram
-# coverage; tests/test_dup_spans.py), `freq_copurchase_lift`
-# (frequency.py::copurchase_lift — basket pair mining with the
-# enforced basket cap; tests/test_copurchase.py), `events_mode_type`
-# (quality.py::exact_mode — deterministic argmax-by-struct mode;
-# tests/test_exact_mode.py), `graph_link_jaccard`
-# (graph.py::neighbor_jaccard — wedge-join neighbor-set Jaccard;
-# tests/test_neighbor_jaccard.py), and `text_rake_keyphrases`
-# (text.py::rake_keyphrases — integer-ppm RAKE phrase mining;
-# tests/test_rake.py). Further: `agg_exact_quantiles`
-# (quality.py::exact_group_quantiles — exact type-1 per-group
-# quantiles at ppm levels; tests/test_group_quantiles.py),
-# `stream_ewma_values` (streaming/stateful.py::ewma_stateful —
-# rows-only, bit-exact batch parity chained to events_ewma's oracle;
-# tests/test_stream_ewma.py), `events_seasonal_baseline`
-# (timeseries.py::seasonal_baseline — hour-of-week slot means +
-# residuals; tests/test_seasonal_baseline.py), `quality_winsorize`
-# (quality.py::winsorize_by_group — clip into exact [p5, p95] bands;
-# tests/test_winsorize.py), `text_hashed_features`
-# (text.py::hashed_term_features — hashing-trick sparse term
-# features; tests/test_hashed_features.py), and `mart_rfm_scores`
-# (quality.py::rfm_scores — RFM quintile-band segmentation without a
-# global ntile; tests/test_rfm.py), `mart_cohort_ltv` (cohort
-# lifetime-value curve, DECIMAL-exact cumulative revenue;
-# tests/test_cohort_ltv.py), and `events_top_paths` (deterministic
-# top-25 event-type trigram paths; tests/test_top_paths.py), plus
-# `events_dwell_time` (time-in-state from exact microsecond gaps;
-# tests/test_dwell_time.py) and `text_lang_confusion` (declared-vs-
-# predicted language QA matrix reusing text_lang_id's oracle
-# fragments; tests/test_lang_confusion.py), and `text_dup_span_removal`
-# (executable Lee-et-al exact-substring dedup — duplicated spans
-# deleted, debut doc keeps; tests/test_dup_removal.py).
-# `streaming/joins.py::click_attribution_outer` (left-outer stream-
-# stream with watermark eviction) is batch-parity-tested and could
-# register rows-only if slots allow. The pre-wired registration in
-# registry_r06.py (oracles validated green at sf0.001 AND sf0.01,
-# guarded by tests/test_registry_r06_staged.py) went live with the
-# r06-start import above. Keep any further r06 additions ≤ the free
-# window slots so every query stays driver-certified at each round
-# boundary.
-# ROUND-7 ROTATION PLAN — EXECUTED at r07 start exactly as written:
-# the 46 promotions + 34 held-out recerts are recorded inline in
-# _STABLE_CERTIFIED above; registry_r07 went live via the
-# registry_ext-bottom import; the staged guard flipped to wired-state;
-# check_staged.py/bench.py repointed at the (initially empty) r08
-# bank. Window: 12 bank + stream_tumbling_counts + stream_ewma_values
-# + graph_kcore + text_dup_span_removal + 34 recerts = 50. Original
-# plan kept below for the audit trail:
-# 1. Move the 50 r06-window greens from CORRECTNESS_r06 into
-#    _STABLE_CERTIFIED (preserve relative order; note any red rows
-#    instead of promoting them).
-# 2. Wire the bank: add
-#        from yougile_etl_pipeline_spark import registry_r07  # noqa
-#    at the BOTTOM of registry_ext.py next to the registry_r06 import
-#    (NOT here — the ext-bottom position is the one that survives the
-#    registry_ext-first circular entry path; see the note at the
-#    import block above).
-# 3. registry_r07.py holds 12 entries (R07_ENTRIES manifest; count
-#    pinned by tests/test_registry_r07_staged.py::_EXPECTED), each
-#    oracle-proven at sf0.001 AND sf0.01 — 12 staged + 38 free slots
-#    means the window needs 38 fillers: hold out the cheapest r05/r06
-#    stable greens for recertification (the f_* scalar entries and
-#    other sub-second queries are the natural picks) and swap them
-#    back to stable as genuinely new registrations land mid-round.
-# 4. Flip tests/test_registry_r07_staged.py to the wired-state guards
-#    (the r06 file's history shows both shapes) and re-point
-#    scripts/check_staged.py + bench.py's `staged` block at the new
-#    r08 bank as it accrues.
-# 5. Re-run: pytest (expect ~768 passed / 1 skipped at r06 end),
-#    scripts/check_queries.py (new window at sf0.01), and the full
-#    registry sweep before the first commit.
-# ROUND-12 ROTATION PLAN — execute at r12 start (the r07/r10/r11
-# precedent; each step has a worked example in git history):
-# 1. Read CORRECTNESS_r11.json. Promote every green window row into
-#    _STABLE_CERTIFIED above, in window order (the window held 33
-#    R11_ENTRIES + stream_click_attribution + graph_pagerank_
-#    convergence + 15 recert fillers). Note any red rows instead of
-#    promoting them — they stay in the r12 window to re-certify.
-# 2. Wire the bank: add
-#        from yougile_etl_pipeline_spark import registry_r12  # noqa
-#    at the BOTTOM of registry_ext.py next to the r06–r11 imports
-#    (NOT here — the ext-bottom position survives the circular entry
-#    path). registry_r12.py holds 10 entries, each oracle-proven at
-#    sf0.001 AND sf0.01 in round 11.
-# 3. Hold out 40 recertification fillers (50 − 10 bank): the OLDEST
-#    cert vintages after the r11 promotions are the r05-era entries
-#    (last official row CORRECTNESS_r05 — the sim_cosine_topk /
-#    events_asof_join / TPC-H-completion block and the agg_*/win_*
-#    r05 additions; 43 candidates, pick 40 and note the 3 left
-#    stable). Swap them back one-for-one as r12 registrations land.
-# 4. Flip tests/test_registry_r11_staged.py to the post-promotion
-#    limbo shape and tests/test_registry_r12_staged.py to the wired
-#    shape; seed registry_r13.py (empty staged bank + subprocess
-#    smoke, _EXPECTED = 0); repoint scripts/check_staged.py and
-#    bench.py's `staged` block at r13; add a manifest-driven r12
-#    block to bench.py.
-# 5. Re-run: full pytest (expect ~1020 passed at r11 end),
-#    scripts/check_queries.py (new window at sf0.01 — testdata is
-#    regenerated between rounds; check for parquet type drift), and
-#    the full registry sweep before the first commit.
-# ROUND-13 ROTATION PLAN — execute at r13 start (the r07–r12
-# precedent; each step has a worked example in git history):
-# 1. Read CORRECTNESS_r12.json. Promote every green window row into
-#    _STABLE_CERTIFIED above, in window order. The r12 window held:
-#    3 ADVICE-r11 holds (stream_burst_flags, sql_pivot_multi_agg,
-#    stream_cumulative_users — all changed and re-proven this round),
-#    the 10-entry r12 bank, 10 mid-round registrations
-#    (sim_ivf_recall_sweep, mm_gif_stats, events_ab_lift_gate,
-#    quality_ks_drift_gate, dedup_minhash_estimate_error,
-#    corpus_dedup_rate_by_source, link_er_clusters,
-#    mm_media_dispatch_profile, events_markov_stationary,
-#    quality_benford_chi2_gate), and 27 r05-era recert fillers
-#    (sim_cosine_topk / events_asof_* / the TPC-H block / agg_* /
-#    win_* rows). Note any red rows instead of promoting them.
-# 2. Wire the bank: add
-#        from yougile_etl_pipeline_spark import registry_r13  # noqa
-#    at the BOTTOM of registry_ext.py next to the r06–r12 imports
-#    (NOT here — the ext-bottom position survives the circular entry
-#    path). registry_r13.py holds TEN entries, each oracle-proven at
-#    sf0.001 AND sf0.01 in round 12 (stream_error_rate_daily is a
-#    streaming entry — already in bench._STREAMING_SKIP).
-# 3. Hold out 40 recertification fillers (50 − 10 bank). The OLDEST
-#    vintages after the r12 promotions are the 16 entries still on
-#    their r05-era proof: the 6 left stable at the r12 rotation
-#    (j_cross, sql_parameterized, agg_listagg, agg_minby_maxby,
-#    agg_weighted_avg, win_moving_avg) and the 10 swapped back
-#    mid-r12 before the driver run (text_line_dedup, text_bm25_scores,
-#    text_self_dedup, sample_quality_quota, dedup_minhash_recall_eval,
-#    emb_quantize_int8, sim_topk_int8, sql_q9_product_profit,
-#    sql_q21_waiting_suppliers, sql_q18_large_orders). Take all 16 +
-#    the 24 oldest r06-vintage stables to reach 40; swap back
-#    one-for-one as r13 registrations land.
-# 4. BEFORE designing any new entry, grep the registry for the name
-#    AND the feature — @register silently overwrites an existing name
-#    in place (r12 near-miss: agg_grouping_sets / win_dist_functions
-#    already existed from r05).
-# 5. Flip tests/test_registry_r12_staged.py to the post-promotion
-#    shape and tests/test_registry_r13_staged.py to the wired shape;
-#    seed registry_r14.py (empty staged bank + subprocess smoke,
-#    _EXPECTED = 0); repoint scripts/check_staged.py and bench.py's
-#    `staged` block at r14; add a manifest-driven r13 block to
-#    bench.py.
-# 6. Re-run: full pytest (expect ~1083 passed at r12 end),
-#    scripts/check_queries.py (new window at sf0.01 — testdata is
-#    regenerated between rounds; check for parquet type drift), and
-#    the full registry sweep before the first commit.
-# ROUND-14 ROTATION — EXECUTED at r14 start (this round). What was
-# actually done (the staged plan's numbers were stale — ADVICE r13 #1:
-# the bank grew from 10 to 14 entries after the plan was written, so
-# the filler count is 36, not 40):
-# 1. CORRECTNESS_r13.json read: 50/50 green (rows + schema + hash,
-#    zero errors). ALL 50 window rows promoted into _STABLE_CERTIFIED
-#    above, in window order; no ADVICE holds this round (the two
-#    ADVICE-r13 low findings touch a BANK entry
-#    (events_markov_convergence — fixed before it ever certifies,
-#    inside the r14 window by construction) and a docstring).
-# 2. Bank wired: `from yougile_etl_pipeline_spark import registry_r14`
-#    at the BOTTOM of registry_ext.py next to the r06–r13 imports.
-#    registry_r14.py holds FOURTEEN entries, each oracle-proven at
-#    sf0.001 AND sf0.01 in round 13 (no streaming entries — nothing
-#    added to bench._STREAMING_SKIP).
-# 3. Held out 36 recertification fillers (50 − 14 bank), picked by
-#    LAST-DRIVER-GREEN ROUND computed from CORRECTNESS_r01..r13
-#    (VERDICT r13 #1: official-record age, NOT bank vintage — the
-#    vintage labels skipped the genuinely oldest official rows). The
-#    held-out set (see the r14 note inside _STABLE_CERTIFIED):
-#    3 × r02-last-green, 22 × r03-last-green, 11 × r04-last-green.
-#    The r06-era names the stale plan listed (sketch_countmin_suppliers
-#    etc.) all have r06 official rows — YOUNGER than these — and stay
-#    promoted; they rotate in a later window. Swap back one-for-one as
-#    r14 registrations land.
-# 4. tests/test_registry_r13_staged.py flipped to post-promotion
-#    shape; tests/test_registry_r14_staged.py to the wired shape
-#    (_EXPECTED = 14, grows with mid-round registrations);
-#    registry_r15.py seeded (empty staged bank + subprocess smoke,
-#    _EXPECTED = 0); scripts/check_staged.py and bench.py's `staged`
-#    block repointed at r15; manifest-driven r14 block added to
-#    bench.py — all in the same commit as the wiring (VERDICT r13 #8:
-#    the staged machinery must never point at a wired bank).
-# ROUND-15 ROTATION — EXECUTED at r15 start (this round). What was
-# actually done:
-# 1. CORRECTNESS_r14.json read: 50/50 green (rows + schema + hash,
-#    zero errors). 49 of the 50 window rows promoted into
-#    _STABLE_CERTIFIED above, in window order; text_dup_span_removal_
-#    capped HELD IN the window (plus FOUR stable pulls:
-#    text_collocations, text_dup_span_coverage, text_dup_span_removal,
-#    text_dup_span_cap_audit) for the PLANNED gram-cache LRU change —
-#    ADVICE r14 #1; see the r15 note inside _STABLE_CERTIFIED.
-# 2. Bank wired: `from yougile_etl_pipeline_spark import registry_r15`
-#    at the BOTTOM of registry_ext.py next to the r06–r14 imports.
-#    registry_r15.py holds SIXTEEN entries, each oracle-proven at
-#    sf0.001 AND sf0.01 in round 14 (stream_gap_burstiness is in
-#    bench._STREAMING_SKIP since staging).
-# 3. Held out 29 recertification fillers (50 − 16 bank − 5 gram-cache
-#    holds), picked by LAST-DRIVER-GREEN ROUND computed from
-#    CORRECTNESS_r01..r14: the 29 alphabetically-first of the 38
-#    r04-last-green rows (names in the r15 note inside
-#    _STABLE_CERTIFIED). The 9 remaining r04 rows, then the 36-row
-#    r06 block, are the next-oldest picks for r16. Swap back
-#    one-for-one as r15 registrations land.
-# 4. tests/test_registry_r14_staged.py flipped to post-promotion
-#    shape; tests/test_registry_r15_staged.py to the wired shape
-#    (_EXPECTED = 16, grows with mid-round registrations);
-#    registry_r16.py seeded (empty staged bank + subprocess smoke,
-#    _EXPECTED = 0); scripts/check_staged.py and bench.py's `staged`
-#    block repointed at r16; manifest-driven r15 block added to
-#    bench.py — all in the same commit as the wiring.
-# ROUND-16 ROTATION — EXECUTED at r16 start (this round). What was
-# actually done:
-# 1. CORRECTNESS_r15.json read: 50/50 green (rows + schema + hash,
-#    zero errors). 49 of the 50 window rows promoted into
-#    _STABLE_CERTIFIED above, in window order; sim_lsh_recall_sweep
-#    HELD IN the window for the PLANNED registry_r15 sweep-cache →
-#    plan-keyed sameSemantics LRU change (ADVICE r15 #3; see the r16
-#    note inside _STABLE_CERTIFIED).
-# 2. Bank wired: `from yougile_etl_pipeline_spark import registry_r16`
-#    at the BOTTOM of registry_ext.py next to the r06–r15 imports.
-#    registry_r16.py holds EIGHTEEN entries, each oracle-proven at
-#    sf0.001 AND sf0.01 in round 15 with sf0.1 walls and sf1 slopes
-#    in SCALE.md's r16-gate table. NO media entries (the COVERAGE.md
-#    §E4 boundary holds).
-# 3. Held out 31 recertification fillers (50 − 18 bank − 1 hold),
-#    picked by LAST-DRIVER-GREEN ROUND recomputed over
-#    CORRECTNESS_r01..r15: the 9 r04-last-green rows
-#    (sql_having_total, sql_in_subquery, sql_lateral_topk,
-#    sql_market_share, sql_recursive_spine, sql_scalar_subquery,
-#    text_lm_quality, text_oov_rate, win_dist_functions) + the 22
-#    alphabetically-first of the 34 r06-last-green rows
-#    (agg_exact_median_global … mart_abc_parts; names in the r16
-#    notes inside _STABLE_CERTIFIED). The 12 remaining r06 rows are
-#    the next-oldest picks for r17. Swap back one-for-one as r16
-#    registrations land.
-# 4. tests/test_registry_r15_staged.py flipped to post-promotion
-#    shape; tests/test_registry_r16_staged.py to the wired shape
-#    (_EXPECTED = 18, grows with mid-round registrations);
-#    registry_r17.py seeded (empty staged bank + subprocess smoke,
-#    _EXPECTED = 0); scripts/check_staged.py and bench.py's `staged`
-#    block repointed at r17; manifest-driven r16 block added to
-#    bench.py — all in the same commit as the wiring.
-# ROUND-17 ROTATION PLAN — execute at r17 start (the r07–r16
-# precedent; each step has a worked example in git history):
-# 1. Read CORRECTNESS_r16.json. Promote every green window row into
-#    _STABLE_CERTIFIED above, in window order; note any red rows or
-#    ADVICE-r16 holds instead of promoting them. The r16 window holds
-#    the 18-entry r16 bank + the sim_lsh_recall_sweep hold + 31
-#    age-picked fillers (minus any mid-r16 swap-backs, plus the
-#    registrations that replaced them — consult the r16 notes above
-#    for the final composition).
-# 2. Wire the bank: add
-#        from yougile_etl_pipeline_spark import registry_r17  # noqa
-#    at the BOTTOM of registry_ext.py next to the r06–r16 imports
-#    (NOT here — the ext-bottom position survives the circular entry
-#    path). Check registry_r17.R17_ENTRIES for the FINAL entry count.
-# 3. Hold out (50 − len(R17_ENTRIES) − holds) recertification
-#    fillers, picked by LAST-DRIVER-GREEN ROUND recomputed over
-#    CORRECTNESS_r01..r16 (python over the json history, not vintage
-#    labels). After the r16 recerts land, the oldest official rows
-#    are the 12 remaining r06-last-green entries (mart_cohort_ltv,
-#    mart_rfm_scores, quality_benford, quality_distribution_drift,
-#    quality_winsorize, text_bpe_merge_step, text_domain_affinity,
-#    text_hashed_features, text_lang_confusion, text_ngram_novelty,
-#    text_rake_keyphrases, text_readability), then the r07-last-green
-#    block.
-# 4. BEFORE designing any new entry, grep the registry for the name
-#    AND the feature — @register silently overwrites an existing name
-#    in place (r12 near-miss: agg_grouping_sets / win_dist_functions
-#    already existed from r05).
-# 5. Flip tests/test_registry_r16_staged.py to the post-promotion
-#    shape and tests/test_registry_r17_staged.py to the wired shape;
-#    seed registry_r18.py (empty staged bank + subprocess smoke,
-#    _EXPECTED = 0); repoint scripts/check_staged.py and bench.py's
-#    `staged` block at r18; add a manifest-driven r17 block to
-#    bench.py — all in the same commit as the wiring.
-# 6. Re-run: full pytest, scripts/check_queries.py (new window at
-#    sf0.01 — testdata is regenerated between rounds; check for
-#    parquet type drift), and the full registry sweep before the
-#    first commit. Keep SWEEP_r{N}.json + audit_plans in the FINAL
-#    trio every remaining round (VERDICT r15 #5: official windows
-#    cannot re-cover the registry by r20; the committed sweep is the
-#    compensating control).
-_DEFERRED_TO_NEXT_WINDOW: list[str] = []
-
-
-def _rotate_certification_window() -> None:
-    for _k in _STABLE_CERTIFIED + _DEFERRED_TO_NEXT_WINDOW:
-        if _k in QUERIES:
-            QUERIES[_k] = QUERIES.pop(_k)
-        if _k in ORACLES:
-            ORACLES[_k] = ORACLES.pop(_k)
-
-
 @register("f_case_bands", """
 SELECT o_orderkey,
   CASE WHEN o_totalprice < 50000 THEN 'small'
@@ -1771,6 +732,59 @@ def f_case_bands(spark, sf):
          .otherwise("other").alias("status_label"))
 
 
-# Must stay LAST: every @register above (including the registry_ext /
-# registry_analytics imports) has run by now.
-_rotate_certification_window()
+# ---------------------------------------------------------------------------
+# The query banks, and the one fixed order
+# ---------------------------------------------------------------------------
+# Each bank registers into QUERIES/ORACLES on import, in this order. The
+# banks import registry_base (and earlier banks' oracle fragments), never
+# this module.
+BANKS = tuple(importlib.import_module(f"{__package__}.{m}") for m in (
+    "registry_ext", "registry_analytics", "registry_tpch", "registry_r05",
+    "registry_r06", "registry_r07", "registry_r09", "registry_r10",
+    "registry_r11", "registry_r12", "registry_r13", "registry_r14",
+    "registry_r15", "registry_r16"))
+
+# The driver certifies list(QUERIES)[:50]. These are the 50 it certifies,
+# in order; every other query follows them.
+WINDOW = (
+    "text_oov_rate", "text_lm_quality", "events_mad_outliers",
+    "dedup_shingle_containment", "dedup_semantic", "graph_label_propagation",
+    "emb_gram_matrix", "dedup_simhash_recall_eval", "corpus_shard_manifest",
+    "dedup_blocking_profile", "agg_exact_median_global", "events_theil_sen",
+    "agg_price_histogram", "agg_weighted_median", "events_cusum_alarms",
+    "events_rolling_slope", "freq_copurchase_lift", "events_mode_type",
+    "graph_link_jaccard", "agg_exact_quantiles", "events_seasonal_baseline",
+    "events_top_paths", "events_dwell_time", "mart_abc_parts",
+    "sim_lsh_recall_sweep", "text_mean_docfreq_gate",
+    "quality_rule_attribution", "train_curriculum_bands",
+    "quality_dedup_threshold_curve", "dedup_pair_degree_hist",
+    "text_skipgram_cooccurrence", "text_dup_span_source_pairs",
+    "dedup_minhash_band_sweep", "sim_rrf_fusion", "decontam_minhash",
+    "dedup_quality_canonical", "dedup_neardup_source_crosstab",
+    "dedup_boundary_chain", "corpus_lang_concentration",
+    "train_token_apportionment", "events_peak_to_mean",
+    "events_session_gap_sweep", "corpus_survivor_token_share",
+    "win_dist_functions", "sql_scalar_subquery", "sql_in_subquery",
+    "sql_having_total", "sql_lateral_topk", "sql_recursive_spine",
+    "sql_market_share",
+)
+
+
+def _fix_order() -> None:
+    """WINDOW first; then the rest by module (this one, then BANKS, then
+    any other) and by registration order within a module. The order thus
+    does not depend on which module a process imported first. A WINDOW
+    name that is not registered fails the import with KeyError."""
+    rank = {m: i for i, m in enumerate(
+        (__name__,) + tuple(b.__name__ for b in BANKS))}
+    seq = {n: i for i, n in enumerate(QUERIES)}
+    rest = sorted(QUERIES.keys() - set(WINDOW), key=lambda n: (
+        rank.get(QUERIES[n].__module__, len(rank)), seq[n]))
+    order = WINDOW + tuple(rest)
+    queries = {n: QUERIES.pop(n) for n in order}
+    oracles = {n: ORACLES.pop(n) for n in order if n in ORACLES}
+    QUERIES.update(queries)
+    ORACLES.update(oracles)
+
+
+_fix_order()

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from yougile_etl_pipeline_spark.registry import _dec, register
+from yougile_etl_pipeline_spark.registry_base import _dec, register
 from yougile_etl_pipeline_spark.sources.tables import load_table, load_tables
 
 
@@ -1471,18 +1471,3 @@ def agg_mode_per_group(spark, sf):
              .select("o_orderstatus",
                      F.col("o_orderpriority").alias("mode_priority"),
                      F.col("cnt").alias("mode_count")))
-
-
-# Order-independence guard: if THIS module was the process's entry
-# point into the engine (e.g. `from ...registry_ext import <helper>`
-# before anything imported registry), the circular tail-import path
-# means registry.py's end-of-module rotation already ran BEFORE the
-# registrations above executed. Re-rotating here converges any import
-# order to the same certification-window SET (rotation is idempotent:
-# it just re-moves the stable list to the tail). In the canonical
-# order (registry imported first) the attribute does not exist yet at
-# this point and registry's own tail call performs the single rotation.
-from yougile_etl_pipeline_spark import registry as _registry_mod
-
-if hasattr(_registry_mod, "_rotate_certification_window"):
-    _registry_mod._rotate_certification_window()

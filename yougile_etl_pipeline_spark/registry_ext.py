@@ -32,7 +32,7 @@ from yougile_etl_pipeline_spark.operators.similarity import (
     lsh_bucket_topk,
     lsh_bucket_topk_np,
 )
-from yougile_etl_pipeline_spark.registry import register
+from yougile_etl_pipeline_spark.registry_base import register
 from yougile_etl_pipeline_spark.sources.tables import (
     load_table,
     table_row_count,
@@ -2528,99 +2528,3 @@ def join_incremental_delta(spark, sf):
     b_d = li.filter(F.col("l_linenumber") % 3 == 0).drop("l_linenumber")
     return delta_join(a_h, a_d, b_h, b_d, "o_orderkey") \
         .select("o_orderkey", "o_custkey", "l_suppkey", "l_quantity")
-
-
-# Round-6 registrations import HERE (not in registry.py): they consume
-# this module's oracle-SQL fragments (_CSIM, _LANG_CASE, ...), which
-# are only guaranteed to exist at this point on EVERY entry path —
-# including the registry_ext-first circular path, where registry.py
-# executes inside our line-35 import while this module is still
-# partially initialized. registry_r06's own tail guard re-rotates if
-# needed.
-from yougile_etl_pipeline_spark import registry_r06  # noqa: E402,F401
-
-# Round-7 rotation (r07 start): the 12-entry bank staged in round 6
-# goes live here, in the same ext-bottom position and for the same
-# circular-entry-path reason as the r06 import above.
-from yougile_etl_pipeline_spark import registry_r07  # noqa: E402,F401
-
-# Round-8 rotation (r08 start): registry_r08 goes live here. The bank
-# was EMPTY at r07 end, so every r08 entry is built and registered
-# in-round, filling the 18 freed recert-filler slots one-for-one.
-from yougile_etl_pipeline_spark import registry_r08  # noqa: E402,F401
-
-# Round-9 wiring (r09 start): registry_r09 goes live here. The bank
-# was EMPTY at r08 end (VERDICT r08 "What's missing" #3), so every
-# r09 entry is built and registered in-round, each swapping one
-# held-out recertification filler back into _STABLE_CERTIFIED.
-from yougile_etl_pipeline_spark import registry_r09  # noqa: E402,F401
-
-# Round-10 rotation (r10 start): the 8-entry bank staged in round 9
-# goes live here, in the same ext-bottom position and for the same
-# circular-entry-path reason as the imports above. Further round-10
-# operators register directly into registry_r10 mid-round, each
-# swapping a held-out recertification filler back into
-# _STABLE_CERTIFIED one-for-one.
-from yougile_etl_pipeline_spark import registry_r10  # noqa: E402,F401
-
-# Round-11 rotation (r11 start): the ten-entry bank staged in round 10
-# goes live here, in the same ext-bottom position and for the same
-# circular-entry-path reason as the imports above. Further round-11
-# operators register directly into registry_r11 mid-round, each
-# swapping a held-out recertification filler back into
-# _STABLE_CERTIFIED one-for-one.
-from yougile_etl_pipeline_spark import registry_r11  # noqa: E402,F401
-
-# Round-12 rotation (r12 start): the ten-entry bank staged in round 11
-# goes live here, in the same ext-bottom position and for the same
-# circular-entry-path reason as the imports above. Further round-12
-# operators register directly into registry_r12 mid-round, each
-# swapping a held-out recertification filler back into
-# _STABLE_CERTIFIED one-for-one.
-from yougile_etl_pipeline_spark import registry_r12  # noqa: E402,F401
-
-# Round-13 rotation (r13 start): the ten-entry bank staged in round 12
-# goes live here, in the same ext-bottom position and for the same
-# circular-entry-path reason as the imports above. Further round-13
-# operators register directly into registry_r13 mid-round, each
-# swapping a held-out recertification filler back into
-# _STABLE_CERTIFIED one-for-one.
-from yougile_etl_pipeline_spark import registry_r13  # noqa: E402,F401
-
-# Round-14 rotation (see registry.py's ROUND-14 ROTATION PLAN): the
-# fourteen-entry bank staged and oracle-proven during round 13 goes
-# live here, in the same ext-bottom position and for the same
-# circular-entry-path reason as the imports above. Further round-14
-# operators register directly into registry_r14 mid-round, each
-# swapping a held-out recertification filler back into
-# _STABLE_CERTIFIED one-for-one.
-from yougile_etl_pipeline_spark import registry_r14  # noqa: E402,F401
-
-# Round-15 rotation (see registry.py's ROUND-15 ROTATION note): the
-# sixteen-entry bank staged and oracle-proven during round 14 goes
-# live here, in the same ext-bottom position and for the same
-# circular-entry-path reason as the imports above. Further round-15
-# operators register directly into registry_r15 mid-round, each
-# swapping a held-out recertification filler back into
-# _STABLE_CERTIFIED one-for-one.
-from yougile_etl_pipeline_spark import registry_r15  # noqa: E402,F401
-
-# ROUND-16 WIRING (r16 rotation, registry.py tail plan): genuinely new
-# operators register directly into registry_r16 mid-round, each
-# swapping a held-out recertification filler back into
-# _STABLE_CERTIFIED (the standing mart_abc_parts precedent).
-from yougile_etl_pipeline_spark import registry_r16  # noqa: E402,F401
-
-# Order-independence guard: if THIS module was the process's entry
-# point into the engine (e.g. `from ...registry_ext import <helper>`
-# before anything imported registry), the circular tail-import path
-# means registry.py's end-of-module rotation already ran BEFORE the
-# registrations above executed. Re-rotating here converges any import
-# order to the same certification-window SET (rotation is idempotent:
-# it just re-moves the stable list to the tail). In the canonical
-# order (registry imported first) the attribute does not exist yet at
-# this point and registry's own tail call performs the single rotation.
-from yougile_etl_pipeline_spark import registry as _registry_mod
-
-if hasattr(_registry_mod, "_rotate_certification_window"):
-    _registry_mod._rotate_certification_window()

@@ -1,6 +1,5 @@
 """Round-5 query registrations — function-surface completions plus
-time-series / graph / corpus ops that fill the freed certification
-window (see registry.py rotation tail).
+time-series / graph / corpus ops.
 
 Same determinism contract as registry.py's module docstring:
 exact-integer or DECIMAL aggregation wherever partition order could
@@ -30,7 +29,7 @@ from pyspark.sql.window import Window
 
 from yougile_etl_pipeline_spark.operators.graph import triangle_count
 from yougile_etl_pipeline_spark.operators.text import tokens
-from yougile_etl_pipeline_spark.registry import register
+from yougile_etl_pipeline_spark.registry_base import register
 from yougile_etl_pipeline_spark.sources.tables import load_table
 
 
@@ -464,18 +463,3 @@ def graph_triangle_count(spark, sf):
     edges = d.select((F.col("doc_id") % 40).alias("src"),
                      ((F.col("doc_id") * 7 + 3) % 40).alias("dst"))
     return triangle_count(edges)
-
-
-# Order-independence guard: if THIS module was the process's entry
-# point into the engine (e.g. `from ...registry_ext import <helper>`
-# before anything imported registry), the circular tail-import path
-# means registry.py's end-of-module rotation already ran BEFORE the
-# registrations above executed. Re-rotating here converges any import
-# order to the same certification-window SET (rotation is idempotent:
-# it just re-moves the stable list to the tail). In the canonical
-# order (registry imported first) the attribute does not exist yet at
-# this point and registry's own tail call performs the single rotation.
-from yougile_etl_pipeline_spark import registry as _registry_mod
-
-if hasattr(_registry_mod, "_rotate_certification_window"):
-    _registry_mod._rotate_certification_window()

@@ -1,24 +1,10 @@
-"""Round-6 query registrations — STAGED IN ROUND 5, NOT YET WIRED.
-
-Do NOT import this module in round 5: the r05 certification window is
-exactly full, and registering past the driver's 50-slot window would
-leave never-certified queries at the round boundary (the accounting
-tests/test_certification_window.py enforces). At ROUND-6 START, wire
-it with one line next to the other registry imports in registry.py
-(BEFORE `_rotate_certification_window()` at the module tail):
-
-    from yougile_etl_pipeline_spark import registry_r06  # noqa
+"""Round-6 query registrations.
 
 Every oracle below is the exact SQL proven bit-identical against the
-engine in its staged test (file named per entry) at BOTH sf0.001 and
-the driver's certification scale sf0.01 (`scripts/check_staged.py`,
-26/26 green in round 5). The engine sides are the same operator calls
-the tests exercise. Same determinism contract as registry.py's module
-docstring.
-
-tests/test_registry_r06_staged.py smoke-imports this module in a
-SUBPROCESS (so the round-5 window stays untouched) and verifies every
-entry registers with an oracle and runs green at sf0.001.
+engine in its per-op test (file named per entry) at BOTH sf0.001 and
+the driver's certification scale sf0.01. The engine sides are the same
+operator calls the tests exercise. Same determinism contract as
+registry.py's module docstring.
 """
 
 from __future__ import annotations
@@ -64,7 +50,7 @@ from yougile_etl_pipeline_spark.operators.text import (
     domain_affinity,
 )
 from yougile_etl_pipeline_spark.operators.timeseries import ewma_fixed_point
-from yougile_etl_pipeline_spark.registry import register
+from yougile_etl_pipeline_spark.registry_base import register
 from yougile_etl_pipeline_spark.operators import text as _TXM
 from yougile_etl_pipeline_spark.registry_ext import (
     _CSIM,
@@ -1939,37 +1925,3 @@ def mart_abc_parts(spark, sf):
 
     return abc_analysis(load_table(spark, sf, "lineitem"),
                         "l_partkey", "l_extendedprice")
-
-
-# Order-independence guard (same as the other registry_* modules): if
-# this module was the process's entry point into the engine, re-run
-# the rotation so the certification-window SET is import-order
-# -independent.
-from yougile_etl_pipeline_spark import registry as _registry_mod  # noqa: E402
-
-if hasattr(_registry_mod, "_rotate_certification_window"):
-    _registry_mod._rotate_certification_window()
-
-
-# Manifest of this module's registrations — the wired-state guard
-# (tests/test_registry_r06_staged.py) asserts each name is registered
-# and inside the driver's 50-slot certification window.
-R06_ENTRIES: list[str] = [
-    "sketch_countmin_suppliers", "events_mad_outliers",
-    "dedup_shingle_containment", "dedup_semantic", "text_domain_affinity",
-    "text_bpe_merge_step", "text_collocations", "graph_label_propagation",
-    "emb_gram_matrix", "dedup_simhash_recall_eval",
-    "quality_distribution_drift", "corpus_shard_manifest",
-    "dedup_blocking_profile", "agg_exact_median_global", "events_ewma",
-    "pq_encode", "pq_adc_topk", "ivfpq_topk", "events_rolling_users_daily",
-    "sample_stratified_exact", "events_step_latency", "events_theil_sen",
-    "text_readability", "text_ngram_novelty", "agg_price_histogram",
-    "graph_kcore", "agg_weighted_median", "quality_benford",
-    "events_cusum_alarms", "events_rolling_slope",
-    "text_dup_span_coverage", "freq_copurchase_lift", "events_mode_type",
-    "graph_link_jaccard", "text_rake_keyphrases", "agg_exact_quantiles",
-    "events_seasonal_baseline", "quality_winsorize",
-    "text_hashed_features", "mart_rfm_scores", "text_dup_span_removal",
-    "mart_cohort_ltv", "events_top_paths", "events_dwell_time",
-    "text_lang_confusion", "stream_ewma_values", "mart_abc_parts",
-]

@@ -1,35 +1,17 @@
-"""Round-7 query registrations — STAGED IN ROUND 6, NOT YET WIRED.
-
-Do NOT import this module in round 6: the r06 certification window is
-exactly full (47 round-6 registrations + 3 recertification fillers),
-and registering past the driver's 50-slot window would leave
-never-certified queries at the round boundary
-(tests/test_certification_window.py enforces the accounting). At
-ROUND-7 START, wire it with one line at the bottom of registry_ext.py
-next to the registry_r06 import (NOT in registry.py — these entries
-reuse registry_ext SQL-fragment conventions and the ext-bottom
-position is the one that survives every circular entry path; see the
-note above that import):
-
-    from yougile_etl_pipeline_spark import registry_r07  # noqa
+"""Round-7 query registrations.
 
 Every oracle below is the exact SQL proven bit-identical against the
-engine in its staged test (file named per entry) at BOTH sf0.001 and
-the driver's certification scale sf0.01 (`scripts/check_staged.py`).
-The engine sides are the same operator calls the tests exercise. Same
-determinism contract as registry.py's module docstring; one new rule
-learned staging these (SCALE.md §Determinism): wide-decimal→double
-casts in oracles go through VARCHAR because DuckDB's direct cast
-double-rounds past 2^53.
-
-tests/test_registry_r07_staged.py smoke-imports this module in a
-SUBPROCESS (so the round-6 window stays untouched) and verifies every
-entry registers with an oracle and runs green at sf0.001.
+engine in its per-op test (file named per entry) at BOTH sf0.001 and
+the driver's certification scale sf0.01. The engine sides are the same
+operator calls the tests exercise. Same determinism contract as
+registry.py's module docstring; one rule learned building these
+(SCALE.md §Determinism): wide-decimal→double casts in oracles go
+through VARCHAR because DuckDB's direct cast double-rounds past 2^53.
 """
 
 from __future__ import annotations
 
-from yougile_etl_pipeline_spark.registry import register
+from yougile_etl_pipeline_spark.registry_base import register
 from yougile_etl_pipeline_spark.sources.tables import load_table
 
 
@@ -522,10 +504,8 @@ def mart_pareto_coverage(spark, sf):
 
 
 # ---------------------------------------------------------------------------
-# Round-7 MID-ROUND registrations (the mart_abc_parts precedent from
-# r06): built, oracle-proven at sf0.001 AND sf0.01, and registered
-# directly into freed filler slots so they certify THIS round. Six
-# entries: the media family's first compressed format (RLE8) and
+# Round-7 later registrations, oracle-proven at sf0.001 AND sf0.01.
+# Six entries: the media family's first compressed format (RLE8) and
 # first DSP op (integer resampling), three new streaming shapes
 # (stateful top-k, stream-static enrichment rollup, watermark-evicted
 # session emission), and the corpus-release capstone chaining
@@ -774,30 +754,3 @@ def corpus_release_manifest(spark, sf):
                  F.sum("n_tokens").cast("bigint").alias("total_tokens"),
                  F.min("doc_id").alias("min_doc_id"),
                  F.max("doc_id").alias("max_doc_id")))
-
-
-# Order-independence guard (same as the other registry_* modules): if
-# this module was the process's entry point into the engine, re-run
-# the rotation so the certification-window SET is import-order
-# -independent.
-from yougile_etl_pipeline_spark import registry as _registry_mod  # noqa: E402
-
-if hasattr(_registry_mod, "_rotate_certification_window"):
-    _registry_mod._rotate_certification_window()
-
-
-# Manifest of this module's registrations — pinned by
-# tests/test_registry_r07_staged.py and consumed by bench.py's
-# `staged` block so every bank entry carries a wall time + plan
-# fingerprint before it ever certifies. The first 12 are the bank
-# staged in round 6; the last 6 are the round-7 mid-round
-# registrations (freed filler slots — see the section comment above).
-R07_ENTRIES: list[str] = [
-    "mm_wav_stats", "mm_bmp_stats", "quality_gini", "events_ks_global",
-    "text_code_profile", "text_bpe_fertility", "graph_bfs_layers",
-    "stream_dedup_keys", "mm_media_features", "f_map_functions",
-    "events_seasonal_anomalies", "mart_pareto_coverage",
-    "mm_wav_resample", "mm_bmp_rle8", "stream_topk_state",
-    "stream_segment_rollup", "stream_sessions_final",
-    "corpus_release_manifest",
-]

@@ -1,28 +1,16 @@
-"""Round-9 query registrations — WIRED at round-9 start.
+"""Round-9 query registrations.
 
-The staging history (preserved in git): authored in round 8 as a
-deliberately-unimported empty bank; round 9 wired it live via the
-import at registry_ext.py's bottom, next to the
-registry_r06/r07/r08 imports, and tests/test_registry_r09_staged.py
-now enforces the WIRED state (live import, every entry registered
-with an oracle inside the driver's 50-slot certification window).
-
-Every round-9 entry is built and registered in-round (direct
-registration), each swapping one held-out recertification filler
-back into _STABLE_CERTIFIED one-for-one so the window keeps exactly
-50 non-stable entries (tests/test_certification_window.py enforces
-the accounting). Same contract as every bank: an entry lands only
-with its DuckDB oracle proven bit-identical at sf0.001 AND sf0.01
-(per-op parity test + scripts/check_queries.py) and a recorded
-sf0.1 wall time (bench.py's `staged` block is manifest-driven off
-R09_ENTRIES — automatic once the entry and its parity test exist).
+Every entry landed with its DuckDB oracle proven bit-identical at
+sf0.001 AND sf0.01 and a recorded sf0.1 wall time + plan fingerprint
+(bench.py's r09 block). Same determinism contract as registry.py's
+module docstring.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from yougile_etl_pipeline_spark.registry import register
+from yougile_etl_pipeline_spark.registry_base import register
 from yougile_etl_pipeline_spark.sources.tables import load_table
 
 
@@ -504,33 +492,3 @@ def corpus_dedup_rate_report(spark, sf):
                  F.count_distinct("fp").alias("n_unique"),
                  (F.count(F.lit(1)) - F.count_distinct("fp"))
                  .cast("bigint").alias("n_dup_rows")))
-
-
-# Order-independence guard (same as the other registry_* modules): if
-# this module was the process's entry point into the engine, re-run
-# the rotation so the certification-window SET is import-order
-# -independent.
-from yougile_etl_pipeline_spark import registry as _registry_mod  # noqa: E402
-
-if hasattr(_registry_mod, "_rotate_certification_window"):
-    _registry_mod._rotate_certification_window()
-
-
-# Manifest of this module's registrations — pinned by
-# tests/test_registry_r09_staged.py and consumed by bench.py's
-# `staged` block so every bank entry carries a wall time + plan
-# fingerprint before it ever certifies.
-R09_ENTRIES: list[str] = [
-    "sample_reservoir_per_lang",
-    "corpus_mixture_rebalance",
-    "events_hopping_counts",
-    "text_bpe_roundtrip",
-    "stream_dedup_static_store",
-    "mm_bmp_palette8",
-    "events_asof_nearest",
-    "events_resample_interpolate",
-    "graph_pagerank_personalized",
-    "stream_hopping_counts",
-    "events_stickiness_dau_mau",
-    "corpus_dedup_rate_report",
-]

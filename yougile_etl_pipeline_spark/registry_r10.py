@@ -1,29 +1,17 @@
-"""Round-10 query registrations — WIRED at the r10 rotation.
+"""Round-10 query registrations.
 
-Round-9 state (preserved in git history): this was the staged bank —
-eight entries built and oracle-proven in round 9 (sf0.001 AND sf0.01
-parity + recorded sf0.1 wall times), deliberately unimported so the
-exactly-full r09 window could not strand a never-certified query. The
-r10 rotation wired it at registry_ext.py's bottom; the eight entries
-now sit inside the driver's 50-slot certification window next to 42
-held-out recertification fillers. Genuinely new round-10 operators
-register directly into this module mid-round, each swapping one
-held-out filler back into _STABLE_CERTIFIED (registry.py) so the
-window stays at exactly 50 non-stable entries
-(tests/test_certification_window.py enforces the accounting; the
-wired-state guards live in tests/test_registry_r10_staged.py).
-
-Staging contract for every entry, unchanged from the r06–r09 banks:
-DuckDB oracle proven bit-identical at sf0.001 AND sf0.01 before
-registration, sf0.1 wall time + plan fingerprint recorded by
-bench.py's manifest-driven r10 block.
+Every entry landed with its DuckDB oracle proven bit-identical at
+sf0.001 AND sf0.01 and a recorded sf0.1 wall time + plan fingerprint
+(bench.py's r10 block). Same determinism contract as registry.py's
+module docstring.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from yougile_etl_pipeline_spark.registry import register
+from yougile_etl_pipeline_spark.registry_base import register
+from yougile_etl_pipeline_spark.registry_ext import _QSCALE_SQL
 from yougile_etl_pipeline_spark.sources.tables import load_table
 
 
@@ -414,9 +402,7 @@ def text_vocab_coverage_curve(spark, sf):
 
 
 # ---------------------------------------------------------------------------
-# Round-10 mid-round direct registrations (each swaps one held-out
-# recertification filler back into _STABLE_CERTIFIED — see the r10
-# note in registry.py).
+# Round-10 later registrations
 # ---------------------------------------------------------------------------
 
 _D0_EDGES_SQL = """
@@ -975,16 +961,8 @@ def events_missing_days(spark, sf):
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_users")))
 
 
-# Local copy of registry_ext's int8 quantization oracle fragment
-# (_QSCALE_SQL/_QCODE): the bank must not import registry_ext at
-# module top — the circular entry path can reach this module while
-# registry_ext is still partially initialized (see the import notes at
-# registry_ext's bottom).
-_Q_SQL = """
-qv AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-qs AS (SELECT vec_id, v,
-              list_max(list_transform(v, x -> abs(x))) / 127.0 AS scale
-       FROM qv),
+# registry_ext's int8 scale CTEs plus the quantized codes.
+_Q_SQL = _QSCALE_SQL.rstrip("\n") + """,
 qq AS (SELECT vec_id,
          CASE WHEN scale = 0 THEN list_transform(v, x -> 0)
               ELSE list_transform(v, x -> CAST(greatest(-127.0,
@@ -1693,61 +1671,3 @@ def train_shuffle_order_sample(spark, sf):
     w = Window.orderBy("sk", "doc_id")
     return t.select(F.row_number().over(w).cast("bigint").alias("pos"),
                     "doc_id", "sk")
-
-
-# Order-independence guard (same as the other registry_* modules): if
-# this module was the process's entry point into the engine, re-run
-# the rotation so the certification-window SET is import-order
-# -independent.
-from yougile_etl_pipeline_spark import registry as _registry_mod  # noqa: E402
-
-if hasattr(_registry_mod, "_rotate_certification_window"):
-    _registry_mod._rotate_certification_window()
-
-
-# Manifest of this module's registrations — pinned by
-# tests/test_registry_r10_staged.py and consumed by bench.py's
-# `staged` block so every bank entry carries a wall time + plan
-# fingerprint before it ever certifies.
-R10_ENTRIES: list[str] = [
-    "quality_iqr_outliers",
-    "agg_share_of_parent",
-    "mm_wav_mulaw",
-    "events_asof_tolerance",
-    "graph_hits_scores",
-    "text_jaccard_topk_pairs",
-    "quality_duplicate_key_audit",
-    "text_vocab_coverage_curve",
-    # mid-round direct registrations (round 10):
-    "graph_degree_assortativity",
-    "graph_reciprocity",
-    "quality_chi2_lang_source",
-    "text_kwic_concordance",
-    "mm_bmp_resize_nearest",
-    "mm_wav_frame_energy",
-    "events_gaps_islands",
-    "train_shard_planner",
-    "graph_katz_centrality",
-    "quality_cramers_v",
-    "events_user_lifecycle",
-    "events_peak_concurrency",
-    "mart_revenue_bridge",
-    "events_missing_days",
-    "sim_margin_audit",
-    "text_hapax_ratio",
-    "graph_clustering_coeff",
-    "events_conversion_latency",
-    "mart_order_fill_latency",
-    "events_autocorr_daily",
-    "mart_revenue_hhi",
-    "events_engagement_transitions",
-    "events_ab_assignment_audit",
-    "events_hour_dow_heatmap",
-    "events_session_depth_hist",
-    "text_doclen_quartiles_by_source",
-    "graph_degree_histogram",
-    "corpus_source_overlap",
-    "quality_effect_size_cohens_d",
-    "graph_pagerank_convergence",
-    "train_shuffle_order_sample",
-]

@@ -1,52 +1,30 @@
-"""Round-11 query registrations — WIRED at the r11 rotation.
+"""Round-11 query registrations.
 
-Round-10 state (preserved in git history): this was the staged bank —
-ten entries built and oracle-proven in round 10 (sf0.001 AND sf0.01
-parity + recorded sf0.1 wall times), deliberately unimported so the
-exactly-full r10 window could not strand a never-certified query. The
-r11 rotation wired it at registry_ext.py's bottom; the ten entries
-now sit inside the driver's 50-slot certification window next to 38
-held-out recertification fillers and the two planned-change holds
-(stream_click_attribution's new hash-exact oracle,
-graph_pagerank_convergence's shared-prefix rework — VERDICT r10
-#2/#3). Genuinely new round-11 operators register directly into this
-module mid-round, each swapping one held-out filler back into
-_STABLE_CERTIFIED (registry.py) so the window stays at exactly 50
-non-stable entries (tests/test_certification_window.py enforces the
-accounting; the wired-state guards live in
-tests/test_registry_r11_staged.py).
-
-Staging contract for every entry, unchanged from the r06–r10 banks:
-DuckDB oracle proven bit-identical at sf0.001 AND sf0.01 before
-registration, sf0.1 wall time + plan fingerprint recorded by
-bench.py's manifest-driven r11 block.
+Every entry landed with its DuckDB oracle proven bit-identical at
+sf0.001 AND sf0.01 and a recorded sf0.1 wall time + plan fingerprint
+(bench.py's r11 block). Same determinism contract as registry.py's
+module docstring.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from yougile_etl_pipeline_spark.registry import register
+from yougile_etl_pipeline_spark.registry_base import register
+from yougile_etl_pipeline_spark.registry_ext import (
+    _COS,
+    _CSIM,
+    _MH_BANDS,
+    _MH_MINS,
+    _ivf_assign_sql,
+    _shingles_sql,
+)
+from yougile_etl_pipeline_spark.registry_r06 import _K, _L2SQ, _M, _W
+from yougile_etl_pipeline_spark.registry_r10 import _D0_EDGES_SQL, _d0_edges
 from yougile_etl_pipeline_spark.sources.tables import (
     load_table,
     table_row_count,
 )
-
-# Local copy of the modular doc-graph fragment (registry_r10._D0_EDGES
-# _SQL): banks must not import sibling bank modules — the circular
-# entry path can reach this module while they are partially
-# initialized.
-_D0_SQL = """
-  SELECT DISTINCT doc_id % 40 AS src, (doc_id * 7 + 3) % 40 AS dst
-  FROM documents WHERE doc_id % 40 <> (doc_id * 7 + 3) % 40"""
-
-
-def _d0(spark, sf):
-    d = load_table(spark, sf, "documents")
-    return (d.select((F.col("doc_id") % 40).alias("src"),
-                     ((F.col("doc_id") * 7 + 3) % 40).alias("dst"))
-            .filter(F.col("src") != F.col("dst"))
-            .distinct())
 
 
 @register("mm_bmp_flip_crop", """
@@ -84,7 +62,7 @@ def mm_bmp_flip_crop(spark, sf):
 
 
 @register("graph_harmonic_r2", f"""
-WITH d0 AS ({_D0_SQL}),
+WITH d0 AS ({_D0_EDGES_SQL}),
 nodes AS (SELECT DISTINCT n AS node FROM (
   SELECT src AS n FROM d0 UNION SELECT dst FROM d0)),
 n1 AS (SELECT src, CAST(count(*) AS BIGINT) AS c1 FROM d0 GROUP BY src),
@@ -111,7 +89,7 @@ def graph_harmonic_r2(spark, sf):
     # distance-based centrality stays hash-exact. Two equi-joins and
     # two keyed counts; the 2-hop set is bounded by sum of
     # deg_in*deg_out like every wedge op.
-    e = _d0(spark, sf)
+    e = _d0_edges(spark, sf)
     nodes = (e.select(F.col("src").alias("node"))
              .union(e.select(F.col("dst").alias("node"))).distinct())
     n1 = e.groupBy("src").agg(
@@ -447,20 +425,6 @@ def sample_temperature_mixture(spark, sf):
                     .alias("n_after")))
 
 
-# Order-independence guard (same as the other registry_* modules): if
-# this module was the process's entry point into the engine, re-run
-# the rotation so the certification-window SET is import-order
-# -independent.
-from yougile_etl_pipeline_spark import registry as _registry_mod  # noqa: E402
-
-if hasattr(_registry_mod, "_rotate_certification_window"):
-    _registry_mod._rotate_certification_window()
-
-
-# Manifest of this module's registrations — pinned by
-# tests/test_registry_r11_staged.py and consumed by bench.py's
-# `staged` block so every bank entry carries a wall time + plan
-# fingerprint before it ever certifies.
 @register("mm_png_stats", """
 WITH p AS (SELECT event_id AS id,
                   5 + event_id % 4 AS w, 3 + event_id % 4 AS h
@@ -698,19 +662,14 @@ def events_cumulative_users(spark, sf):
         F.sum("new_users").over(w).cast("bigint").alias("cum_users"))
 
 
-# Local copies of the PQ oracle fragments (registry_r06._PQ_BOOKS_SQL
-# and friends): banks must not import sibling bank modules — the
-# circular entry path can reach this module while they are partially
-# initialized (same rule as _D0_SQL above).
-_PQM, _PQK, _PQW = 4, 8, 16
-_PQ_L2SQ = ("list_sum(list_transform(range(1, len({a}) + 1), "
-            "i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])))")
+# The codebook CTEs: registry_r06._PQ_BOOKS_SQL with one line broken
+# differently; kept as is so the certified oracle text does not change.
 _PQ_SQL = f"""
 src AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
 sub AS (
   SELECT vec_id, s.sub_id,
-         vec[s.sub_id * {_PQW} + 1 : s.sub_id * {_PQW} + {_PQW}] AS subvec
-  FROM src, (SELECT CAST(unnest(range(0, {_PQM})) AS INT) AS sub_id) s),
+         vec[s.sub_id * {_W} + 1 : s.sub_id * {_W} + {_W}] AS subvec
+  FROM src, (SELECT CAST(unnest(range(0, {_M})) AS INT) AS sub_id) s),
 seeds AS (
   SELECT sub_id,
          CAST(row_number() OVER (PARTITION BY sub_id ORDER BY vec_id) - 1
@@ -718,13 +677,13 @@ seeds AS (
          subvec AS cvec
   FROM sub
   QUALIFY row_number() OVER (PARTITION BY sub_id ORDER BY vec_id)
-          <= {_PQK}),
+          <= {_K}),
 assign0 AS (
   SELECT vec_id, sub_id, code FROM (
     SELECT b.vec_id, b.sub_id, s.code,
            row_number() OVER (
              PARTITION BY b.vec_id, b.sub_id
-             ORDER BY {_PQ_L2SQ.format(a="b.subvec", b="s.cvec")}, s.code)
+             ORDER BY {_L2SQ.format(a="b.subvec", b="s.cvec")}, s.code)
              AS rn
     FROM sub b JOIN seeds s USING (sub_id)) WHERE rn = 1),
 means AS (
@@ -742,12 +701,10 @@ assign1 AS (
     SELECT b.vec_id, b.sub_id, s.code,
            row_number() OVER (
              PARTITION BY b.vec_id, b.sub_id
-             ORDER BY {_PQ_L2SQ.format(a="b.subvec", b="s.cvec")}, s.code)
+             ORDER BY {_L2SQ.format(a="b.subvec", b="s.cvec")}, s.code)
              AS rn
     FROM sub b JOIN books s USING (sub_id)) WHERE rn = 1)
 """
-_PQ_COS = ("list_dot_product(qv, cv) / (sqrt(list_dot_product(qv, qv)) "
-           "* sqrt(list_dot_product(cv, cv)))")
 
 
 @register("sim_pq_recall_eval", f"""
@@ -758,17 +715,17 @@ truth AS (
   SELECT query_id, match_id FROM (
     SELECT q.query_id, c.vec_id AS match_id,
            row_number() OVER (PARTITION BY q.query_id
-                              ORDER BY {_PQ_COS.format()} DESC, c.vec_id)
+                              ORDER BY {_COS} DESC, c.vec_id)
              AS rn
     FROM qsrc q CROSS JOIN (SELECT vec_id, vec AS cv FROM src) c
     WHERE q.query_id != c.vec_id) WHERE rn <= 5),
 qsub AS (
   SELECT query_id, s.sub_id,
-         qv[s.sub_id * {_PQW} + 1 : s.sub_id * {_PQW} + {_PQW}] AS subvec
-  FROM qsrc, (SELECT CAST(unnest(range(0, {_PQM})) AS INT) AS sub_id) s),
+         qv[s.sub_id * {_W} + 1 : s.sub_id * {_W} + {_W}] AS subvec
+  FROM qsrc, (SELECT CAST(unnest(range(0, {_M})) AS INT) AS sub_id) s),
 qtab AS (
   SELECT query_id, sub_id, code,
-         CAST({_PQ_L2SQ.format(a="subvec", b="cvec")} AS DECIMAL(27,12))
+         CAST({_L2SQ.format(a="subvec", b="cvec")} AS DECIMAL(27,12))
            AS qd2
   FROM qsub JOIN books USING (sub_id)),
 adc AS (
@@ -833,8 +790,8 @@ def sim_pq_recall_eval(spark, sf):
     queries = emb.filter(F.col("vec_id") % 97 == 0)
     truth = brute_force_topk_np(emb, queries, k=5) \
         .select("query_id", "match_id")
-    books = pq_train(emb, m=_PQM, k=_PQK, iters=1)
-    codes = pq_encode(emb, books, m=_PQM)
+    books = pq_train(emb, m=_M, k=_K, iters=1)
+    codes = pq_encode(emb, books, m=_M)
     cand6 = pq_adc_topk(codes, queries.select(
         F.col("vec_id").alias("query_id"), "embedding"), books, k=6)
     w = Window.partitionBy("query_id").orderBy("rank")
@@ -944,7 +901,7 @@ def mm_png_resize_nearest(spark, sf):
 
 
 @register("graph_component_sizes", f"""
-WITH RECURSIVE d0 AS ({_D0_SQL}),
+WITH RECURSIVE d0 AS ({_D0_EDGES_SQL}),
 nodes AS (SELECT DISTINCT n AS node FROM (
   SELECT src AS n FROM d0 UNION SELECT dst FROM d0)),
 edges AS (SELECT src AS u, dst AS v FROM d0
@@ -971,7 +928,7 @@ def graph_component_sizes(spark, sf):
         connected_components,
     )
 
-    e = _d0(spark, sf)
+    e = _d0_edges(spark, sf)
     comp = connected_components(e, e.select(F.col("src").alias("node"))
                                 .union(e.select("dst")).distinct())
     sizes = comp.groupBy("component").agg(
@@ -1464,30 +1421,13 @@ def events_mann_kendall_trend(spark, sf):
     return mann_kendall_trend(d, "event_type", "day", "v")
 
 
-# Local copies of the minhash-LSH + connected-components oracle
-# fragments (registry_ext._shingles_sql/_MH_*/_CC_EDGES) — same
-# no-sibling-imports rule as _D0_SQL above.
-_R11_TOKS = "string_split(text, ' ')"
-_R11_SHINGLES = ("list_distinct(list_transform("
-                 f"range(1, greatest(len({_R11_TOKS}) - 2, 0) + 1), "
-                 f"i -> array_to_string({_R11_TOKS}[i:i+2], ' ')))")
-_R11_MH_MINS = ", ".join(
-    f"min(substr(md5(sh) || md5(sh), {1 + 4 * i}, 16)) AS mh{i}"
-    for i in range(8))
-_R11_MH_BANDS = " UNION ALL ".join(
-    f"SELECT doc, {b} AS band, md5(mh{2 * b} || '|' || mh{2 * b + 1}) AS key "
-    f"FROM sig"
-    for b in range(4)
-)
-
-
 @register("dedup_cluster_purity_eval", f"""
 WITH RECURSIVE ex AS (
-  SELECT doc_id AS doc, unnest({_R11_SHINGLES}) AS sh FROM documents
+  SELECT doc_id AS doc, unnest({_shingles_sql()}) AS sh FROM documents
 ), sig AS (
-  SELECT doc, {_R11_MH_MINS} FROM ex GROUP BY doc
+  SELECT doc, {_MH_MINS} FROM ex GROUP BY doc
 ), bk AS (
-  {_R11_MH_BANDS}
+  {_MH_BANDS}
 ), pairs AS (
   SELECT a.doc AS doc_a, b.doc AS doc_b
   FROM bk a JOIN bk b ON a.band = b.band AND a.key = b.key
@@ -1581,30 +1521,6 @@ def dedup_cluster_purity_eval(spark, sf):
          / F.count_if(c_has).cast("double")).alias("precision"))
 
 
-# Local copies of the IVF oracle fragments (registry_ext._IVF_* /
-# _CSIM) — same no-sibling-imports rule as the fragments above.
-_R11_IVF_NCENT = ("(SELECT CAST(round(sqrt(count(*))) AS BIGINT) "
-                  "FROM embeddings)")
-_R11_IVF_CENT = ("SELECT vec_id AS centroid_id, "
-                 "embedding::DOUBLE[] AS cent_vec "
-                 f"FROM embeddings WHERE vec_id < {_R11_IVF_NCENT}")
-_R11_CSIM = ("list_dot_product({a}, {b}) / "
-             "(sqrt(list_dot_product({a}, {a})) * "
-             "sqrt(list_dot_product({b}, {b})))")
-
-
-def _r11_ivf_assign_sql(src: str, idc: str, vecc: str,
-                        nprobe: int = 1) -> str:
-    sim = _R11_CSIM.format(a=vecc, b="cent_vec")
-    return f"""
-  SELECT {idc}, {vecc}, centroid_id FROM (
-    SELECT {idc}, {vecc}, centroid_id,
-           row_number() OVER (PARTITION BY {idc}
-                              ORDER BY {sim} DESC, centroid_id) AS rn
-    FROM {src} CROSS JOIN ({_R11_IVF_CENT})
-  ) WHERE rn <= {nprobe}"""
-
-
 @register("sim_ivf_recall_eval", f"""
 WITH qsrc AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
               FROM embeddings WHERE vec_id % 41 = 0),
@@ -1614,17 +1530,17 @@ truth AS (
   SELECT query_id, match_id FROM (
     SELECT query_id, match_id,
            row_number() OVER (PARTITION BY query_id
-                              ORDER BY {_R11_CSIM.format(a='qv', b='cv')}
+                              ORDER BY {_CSIM.format(a='qv', b='cv')}
                                 DESC, match_id) AS rn
     FROM qsrc CROSS JOIN csrc WHERE query_id != match_id)
   WHERE rn <= 5),
-qa AS ({_r11_ivf_assign_sql('qsrc', 'query_id', 'qv')}),
-ca AS ({_r11_ivf_assign_sql('csrc', 'match_id', 'cv')}),
+qa AS ({_ivf_assign_sql('qsrc', 'query_id', 'qv')}),
+ca AS ({_ivf_assign_sql('csrc', 'match_id', 'cv')}),
 cand AS (
   SELECT query_id, match_id FROM (
     SELECT query_id, match_id,
            row_number() OVER (PARTITION BY query_id
-                              ORDER BY {_R11_CSIM.format(a='qv', b='cv')}
+                              ORDER BY {_CSIM.format(a='qv', b='cv')}
                                 DESC, match_id) AS rank
     FROM qa JOIN ca USING (centroid_id)
     WHERE query_id != match_id)
@@ -1679,44 +1595,3 @@ def sim_ivf_recall_eval(spark, sf):
         F.count_if(hit).cast("bigint").alias("n_hits"),
         (F.count_if(hit).cast("double")
          / F.count(F.lit(1)).cast("double")).alias("recall_at_5"))
-
-
-# Manifest of this module's registrations — pinned by
-# tests/test_registry_r11_staged.py and consumed by bench.py's
-# r11 block so every entry carries a wall time + plan fingerprint.
-R11_ENTRIES: list[str] = [
-    "mm_bmp_flip_crop",
-    "graph_harmonic_r2",
-    "text_term_burstiness",
-    "agg_weekend_revenue_share",
-    "events_interarrival_bands",
-    "train_split_leakage_audit",
-    "stream_interarrival_bands",
-    "mm_wav_peak_normalize",
-    "events_burst_flag_audit",
-    "sample_temperature_mixture",
-    # mid-round direct registrations (round 11):
-    "mm_png_stats",
-    "events_holt_linear",
-    "freq_association_rules",
-    "quality_lorenz_deciles",
-    "stream_burst_flags",
-    "events_cumulative_users",
-    "sim_pq_recall_eval",
-    "events_funnel_windowed",
-    "mm_png_resize_nearest",
-    "graph_component_sizes",
-    "mart_customer_band_migration",
-    "sql_pivot_multi_agg",
-    "emb_dimension_profile",
-    "f_json_functions",
-    "link_blocking_recall_eval",
-    "stream_cumulative_users",
-    "mm_png_flip_crop",
-    "events_zscore_anomaly_days",
-    "mart_repeat_purchase_curve",
-    "events_attribution_gap_bands",
-    "events_mann_kendall_trend",
-    "dedup_cluster_purity_eval",
-    "sim_ivf_recall_eval",
-]

@@ -1,61 +1,34 @@
-"""Round-12 query registrations — WIRED at the r12 rotation.
+"""Round-12 query registrations.
 
-Round-11 state (preserved in git history): this was the staged bank —
-ten entries built and oracle-proven in round 11 (sf0.001 AND sf0.01
-parity + recorded sf0.1 wall times), deliberately unimported so the
-exactly-full r11 window could not strand a never-certified query. The
-r12 rotation wired it at registry_ext.py's bottom; the ten entries
-now sit inside the driver's 50-slot certification window next to 37
-held-out r05-era recertification fillers and the three planned-change
-holds (sql_pivot_multi_agg's post-pivot coalesce, the single-batch
-drain hardening of stream_burst_flags / stream_cumulative_users —
-ADVICE r11). Genuinely new round-12 operators register directly into
-this module mid-round, each swapping one held-out filler back into
-_STABLE_CERTIFIED (registry.py) so the window stays at exactly 50
-non-stable entries (tests/test_certification_window.py enforces the
-accounting; the wired-state guards live in
-tests/test_registry_r12_staged.py).
-
-Staging contract for every entry, unchanged from the r06–r11 banks:
-DuckDB oracle proven bit-identical at sf0.001 AND sf0.01 before
-registration, sf0.1 wall time + plan fingerprint recorded by
-bench.py's manifest-driven r12 block.
+Every entry landed with its DuckDB oracle proven bit-identical at
+sf0.001 AND sf0.01 and a recorded sf0.1 wall time + plan fingerprint
+(bench.py's r12 block). Same determinism contract as registry.py's
+module docstring.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from yougile_etl_pipeline_spark.registry import register
+from yougile_etl_pipeline_spark.registry_base import register
+from yougile_etl_pipeline_spark.registry_ext import (
+    _CSIM,
+    _MH_BANDS,
+    _MH_MINS,
+    _ivf_assign_sql,
+    _shingles_sql,
+    _toks,
+)
+from yougile_etl_pipeline_spark.registry_r10 import _D0_EDGES_SQL
 from yougile_etl_pipeline_spark.sources.tables import (
     load_table,
     table_row_count,
 )
 
-# Local copies of shared oracle fragments (registry_ext._toks /
-# _shingles_sql / _MH_* and registry_r10._D0_EDGES_SQL): banks must
-# not import sibling modules mid-initialization — the circular entry
-# path can reach this module while they are partially initialized.
-_TOKS = "string_split(text, ' ')"
-_SHINGLES = ("list_distinct(list_transform("
-             f"range(1, greatest(len({_TOKS}) - 2, 0) + 1), "
-             f"i -> array_to_string({_TOKS}[i:i+2], ' ')))")
-_MH_MINS = ", ".join(
-    f"min(substr(md5(sh) || md5(sh), {1 + 4 * i}, 16)) AS mh{i}"
-    for i in range(8))
-_MH_BANDS = " UNION ALL ".join(
-    f"SELECT doc, {b} AS band, md5(mh{2 * b} || '|' || mh{2 * b + 1}) AS key "
-    f"FROM sig"
-    for b in range(4)
-)
-_D0_SQL = """
-  SELECT DISTINCT doc_id % 40 AS src, (doc_id * 7 + 3) % 40 AS dst
-  FROM documents WHERE doc_id % 40 <> (doc_id * 7 + 3) % 40"""
-
 
 @register("dedup_lsh_bucket_profile", f"""
 WITH ex AS (
-  SELECT doc_id AS doc, unnest({_SHINGLES}) AS sh FROM documents
+  SELECT doc_id AS doc, unnest({_shingles_sql()}) AS sh FROM documents
 ), sig AS (
   SELECT doc, {_MH_MINS} FROM ex GROUP BY doc
 ), bk AS (
@@ -86,7 +59,7 @@ def dedup_lsh_bucket_profile(spark, sf):
 
 @register("dedup_lsh_band_hist", f"""
 WITH ex AS (
-  SELECT doc_id AS doc, unnest({_SHINGLES}) AS sh FROM documents
+  SELECT doc_id AS doc, unnest({_shingles_sql()}) AS sh FROM documents
 ), sig AS (
   SELECT doc, {_MH_MINS} FROM ex GROUP BY doc
 ), bk AS (
@@ -123,7 +96,7 @@ def dedup_lsh_band_hist(spark, sf):
 
 
 @register("graph_bfs_layer_hist", f"""
-WITH d0 AS ({_D0_SQL}),
+WITH d0 AS ({_D0_EDGES_SQL}),
 e0 AS (SELECT src AS a, dst AS b FROM d0 UNION SELECT dst, src FROM d0),
 l0 AS (SELECT DISTINCT doc_id % 40 AS node FROM documents
        WHERE (doc_id % 40) % 10 = 0),
@@ -169,8 +142,8 @@ def graph_bfs_layer_hist(spark, sf):
 @register("train_packing_efficiency", f"""
 WITH chunks AS (
   SELECT d.source,
-    CAST(least(32, len({_TOKS}) - s + 1) AS BIGINT) AS chunk_tokens
-  FROM documents d, unnest(range(1, greatest(len({_TOKS}), 1) + 1, 24))
+    CAST(least(32, len({_toks()}) - s + 1) AS BIGINT) AS chunk_tokens
+  FROM documents d, unnest(range(1, greatest(len({_toks()}), 1) + 1, 24))
        AS t(s)
 ), agg AS (
   SELECT source, CAST(SUM(chunk_tokens) AS BIGINT) AS total_tokens,
@@ -215,8 +188,8 @@ def train_packing_efficiency(spark, sf):
 WITH chunks AS (
   SELECT d.doc_id, d.source,
     CAST((s - 1) // 24 AS BIGINT) AS chunk_idx,
-    CAST(least(32, len({_TOKS}) - s + 1) AS INTEGER) AS chunk_tokens
-  FROM documents d, unnest(range(1, greatest(len({_TOKS}), 1) + 1, 24))
+    CAST(least(32, len({_toks()}) - s + 1) AS INTEGER) AS chunk_tokens
+  FROM documents d, unnest(range(1, greatest(len({_toks()}), 1) + 1, 24))
        AS t(s)
 ), packed AS (
   SELECT doc_id, source,
@@ -255,7 +228,7 @@ def train_pack_fragmentation(spark, sf):
 
 @register("text_ttr_by_source", f"""
 WITH toks AS (
-  SELECT source, unnest({_TOKS}) AS tok FROM documents)
+  SELECT source, unnest({_toks()}) AS tok FROM documents)
 SELECT source,
        CAST(count(*) AS BIGINT) AS total_tokens,
        CAST(count(DISTINCT tok) AS BIGINT) AS distinct_terms,
@@ -435,30 +408,6 @@ def f_higher_order_array_funcs(spark, sf):
         F.array_join(F.sort_array("arr", asc=False), ",")
         .alias("desc_sorted"),
         F.array_join(F.slice("arr", 2, 2), ",").alias("middle_slice"))
-
-
-# Local copies of the IVF oracle fragments (registry_ext._IVF_* /
-# _CSIM, via registry_r11's local copies) — same no-sibling-imports
-# rule as the fragments above.
-_IVF_NCENT = ("(SELECT CAST(round(sqrt(count(*))) AS BIGINT) "
-              "FROM embeddings)")
-_IVF_CENT = ("SELECT vec_id AS centroid_id, "
-             "embedding::DOUBLE[] AS cent_vec "
-             f"FROM embeddings WHERE vec_id < {_IVF_NCENT}")
-_CSIM = ("list_dot_product({a}, {b}) / "
-         "(sqrt(list_dot_product({a}, {a})) * "
-         "sqrt(list_dot_product({b}, {b})))")
-
-
-def _ivf_assign_sql(src: str, idc: str, vecc: str, nprobe: int) -> str:
-    sim = _CSIM.format(a=vecc, b="cent_vec")
-    return f"""
-  SELECT {idc}, {vecc}, centroid_id FROM (
-    SELECT {idc}, {vecc}, centroid_id,
-           row_number() OVER (PARTITION BY {idc}
-                              ORDER BY {sim} DESC, centroid_id) AS rn
-    FROM {src} CROSS JOIN ({_IVF_CENT})
-  ) WHERE rn <= {nprobe}"""
 
 
 def _ivf_cand_sql(nprobe: int) -> str:
@@ -755,7 +704,7 @@ def quality_ks_drift_gate(spark, sf):
 
 @register("dedup_minhash_estimate_error", f"""
 WITH ex AS (
-  SELECT doc_id AS doc, unnest({_SHINGLES}) AS sh FROM documents
+  SELECT doc_id AS doc, unnest({_shingles_sql()}) AS sh FROM documents
 ), sig AS (
   SELECT doc, {_MH_MINS} FROM ex GROUP BY doc
 ), bk AS (
@@ -1045,7 +994,9 @@ _MARKOV_S = 10**12
 _MARKOV_ITERS = 8
 
 
-def _markov_oracle() -> str:
+def _markov_chain_sql() -> str:
+    """The transition-count CTEs and the fixed-point power iterates
+    it0.._MARKOV_ITERS, for an oracle to finish with its own SELECT."""
     base = f"""
 WITH seq AS (
   SELECT user_id, epoch_ms(ts) AS ms, event_id, event_type,
@@ -1069,9 +1020,13 @@ it{k} AS (SELECT trans.to_type AS type,
           FROM {prev} JOIN trans ON {prev}.type = trans.from_type
           GROUP BY 1)"""
         prev = f"it{k}"
-    return base + f"""
+    return base
+
+
+def _markov_oracle() -> str:
+    return _markov_chain_sql() + f"""
 SELECT type, x AS x_fixed, x * 1000000 // {_MARKOV_S} AS share_ppm
-FROM {prev}
+FROM it{_MARKOV_ITERS}
 """
 
 
@@ -1211,43 +1166,3 @@ def quality_benford_chi2_gate(spark, sf):
                   "(acc, t) -> acc + t.term)").alias("chi2")))
     return folded.select(
         "n", "chi2", (F.col("chi2") > 15.507).alias("reject_benford"))
-
-
-
-# Order-independence guard (same as the other registry_* modules): if
-# this module was the process's entry point into the engine, re-run
-# the rotation so the certification-window SET is import-order
-# -independent.
-from yougile_etl_pipeline_spark import registry as _registry_mod  # noqa: E402
-
-if hasattr(_registry_mod, "_rotate_certification_window"):
-    _registry_mod._rotate_certification_window()
-
-
-# Manifest of this module's registrations — pinned by
-# tests/test_registry_r12_staged.py and consumed by bench.py's
-# `staged` block so every bank entry carries a wall time + plan
-# fingerprint before it ever certifies.
-R12_ENTRIES: list[str] = [
-    "dedup_lsh_bucket_profile",
-    "dedup_lsh_band_hist",
-    "graph_bfs_layer_hist",
-    "train_packing_efficiency",
-    "train_pack_fragmentation",
-    "text_ttr_by_source",
-    "mm_wav_rms_bands",
-    "mart_supplier_scorecard",
-    "events_error_rate_daily",
-    "f_higher_order_array_funcs",
-    # mid-round direct registrations (round 12):
-    "sim_ivf_recall_sweep",
-    "mm_gif_stats",
-    "events_ab_lift_gate",
-    "quality_ks_drift_gate",
-    "dedup_minhash_estimate_error",
-    "corpus_dedup_rate_by_source",
-    "link_er_clusters",
-    "mm_media_dispatch_profile",
-    "events_markov_stationary",
-    "quality_benford_chi2_gate",
-]

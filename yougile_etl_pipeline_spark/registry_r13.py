@@ -1,39 +1,19 @@
-"""Round-13 query registrations — WIRED at the r13 rotation.
+"""Round-13 query registrations.
 
-Round-12 state (preserved in git history): this was the staged bank —
-ten entries built and oracle-proven in round 12 (sf0.001 AND sf0.01
-parity + recorded sf0.1 wall times), deliberately unimported so the
-exactly-full r12 window could not strand a never-certified query. The
-r13 rotation wired it at registry_ext.py's bottom; the ten entries
-now sit inside the driver's 50-slot certification window next to 37
-held-out recertification fillers (the 16 entries still on their
-r05-era proof plus the 21 oldest r06-vintage stables) and the three
-ADVICE-r12 planned-change holds (quality_benford_chi2_gate's 9-cell
-domain join, mm_media_dispatch_profile's BIGINT partial sums,
-dedup_minhash_estimate_error's validated signature reuse). Genuinely
-new round-13 operators register directly into this module mid-round,
-each swapping one held-out filler back into _STABLE_CERTIFIED
-(registry.py) so the window stays at exactly 50 non-stable entries
-(tests/test_certification_window.py enforces the accounting; the
-wired-state guards live in tests/test_registry_r13_staged.py).
-
-Staging contract for every entry, unchanged from the r06–r12 banks:
-DuckDB oracle proven bit-identical at sf0.001 AND sf0.01 before
-registration, sf0.1 wall time + plan fingerprint recorded by
-bench.py's manifest-driven r13 block.
+Every entry landed with its DuckDB oracle proven bit-identical at
+sf0.001 AND sf0.01 and a recorded sf0.1 wall time + plan fingerprint
+(bench.py's r13 block). Same determinism contract as registry.py's
+module docstring.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from yougile_etl_pipeline_spark.registry import register
+from yougile_etl_pipeline_spark.registry_base import register
+from yougile_etl_pipeline_spark.registry_ext import _toks
+from yougile_etl_pipeline_spark.registry_r06 import _DUP_N
 from yougile_etl_pipeline_spark.sources.tables import load_table
-
-# Local copies of shared oracle fragments (no sibling registry-module
-# imports mid-initialization — the circular entry path rule).
-_TOKS = "string_split(text, ' ')"
-_DUP_N = 5
 
 
 @register("stream_error_rate_daily", """
@@ -124,8 +104,8 @@ def events_error_burst_runs(spark, sf):
 @register("train_packing_curve", f"""
 WITH chunks AS (
   SELECT d.source,
-    CAST(least(32, len({_TOKS}) - s + 1) AS BIGINT) AS chunk_tokens
-  FROM documents d, unnest(range(1, greatest(len({_TOKS}), 1) + 1, 24))
+    CAST(least(32, len({_toks()}) - s + 1) AS BIGINT) AS chunk_tokens
+  FROM documents d, unnest(range(1, greatest(len({_toks()}), 1) + 1, 24))
        AS t(s)
 ), agg AS (
   SELECT source, CAST(SUM(chunk_tokens) AS BIGINT) AS total_tokens
@@ -308,7 +288,7 @@ def mm_gif_flip_crop(spark, sf):
 
 
 @register("text_dup_span_cap_audit", f"""
-WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH t AS (SELECT doc_id, {_toks()} AS toks FROM documents),
 ex AS (
   SELECT doc_id, s,
          md5(array_to_string(toks[s:s+{_DUP_N - 1}], ' ')) AS fp
@@ -690,7 +670,7 @@ def quality_mann_whitney_gate(spark, sf):
     return f.select("n1", "n2", "u1_x2", "tie_t", z.alias("z"),
                     (F.abs(z) > 1.96).alias("significant"))
 @register("text_zipf_rank_ratio", f"""
-WITH tok AS (SELECT unnest({_TOKS}) AS token FROM documents),
+WITH tok AS (SELECT unnest({_toks()}) AS token FROM documents),
 tfreq AS (SELECT token, CAST(count(*) AS BIGINT) AS freq
           FROM tok GROUP BY token),
 ranked AS (SELECT token, freq,
@@ -1105,48 +1085,3 @@ def mm_png_palette_stats(spark, sf):
 
     ev = load_table(spark, sf, "events").select("event_id")
     return png_stats(synth_png_pal8_payloads(ev, "event_id"))
-
-
-# Order-independence guard (same as the other registry_* modules): if
-# this module was the process's entry point into the engine, re-run
-# the rotation so the certification-window SET is import-order
-# -independent.
-from yougile_etl_pipeline_spark import registry as _registry_mod  # noqa: E402
-
-if hasattr(_registry_mod, "_rotate_certification_window"):
-    _registry_mod._rotate_certification_window()
-
-
-# Accumulated through round 12 (the staged bank), grows with every
-# mid-round r13 registration; every name must be oracle-proven at
-# BOTH certification scales before it lands here (the r06–r12 staging
-# discipline). Pinned by tests/test_registry_r13_staged.py and
-# consumed by bench.py's `r13` block so every entry carries a
-# wall time + plan fingerprint.
-R13_ENTRIES: list[str] = [
-    "stream_error_rate_daily",
-    "events_error_burst_runs",
-    "train_packing_curve",
-    "quality_approx_percentile_gate",
-    "sketch_hll_error_gate",
-    "mm_gif_resize_nearest",
-    "mm_gif_flip_crop",
-    "text_dup_span_cap_audit",
-    "mart_nation_trade_balance",
-    "text_dedup_survivorship",
-    # mid-round direct registrations (round 13):
-    "mm_png_gray_stats",
-    "mm_png_rgba_stats",
-    "events_survival_km",
-    "quality_mann_whitney_gate",
-    "text_zipf_rank_ratio",
-    "quality_tv_drift_gate",
-    "events_slo_burn_rates",
-    "stream_bigram_transitions",
-    "events_poisson_dispersion_gate",
-    "events_max_drawdown",
-    "stream_max_drawdown",
-    "mm_gif_interlaced_stats",
-    "mm_png_adam7_stats",
-    "mm_png_palette_stats",
-]

@@ -1,31 +1,22 @@
-"""Round-14 query registrations — WIRED at r14 start.
+"""Round-14 query registrations.
 
-Staged and oracle-proven during round 13 (every entry's DuckDB oracle
-bit-identical at sf0.001 AND sf0.01 via scripts/check_staged.py, with
-a recorded sf0.1 wall in BENCH_r13's `staged` block); went live at the
-r14 rotation via the one-line import at the bottom of registry_ext.py
-next to the registry_r06–r13 imports. The fourteen bank entries sit
-inside the r14 certification window next to 36 held-out
-recertification fillers picked by last-driver-green age (VERDICT r13
-#1). Further round-14 operators register directly into this module
-mid-round, each swapping a held-out filler back into
-_STABLE_CERTIFIED one-for-one.
-
-tests/test_registry_r14_staged.py now enforces the WIRED invariants
-(import live, every entry inside ``list(QUERIES)[:50]``, oracle
-present, oracle-executed from the REGISTRY copy at SF_SMOKE).
-
-BEFORE designing any new entry, grep the registry for the name AND
-the feature — @register silently overwrites an existing name in
-place (the r12 near-miss: agg_grouping_sets / win_dist_functions
-already existed from r05).
+Every entry landed with its DuckDB oracle proven bit-identical at
+sf0.001 AND sf0.01 and a recorded sf0.1 wall time + plan fingerprint
+(bench.py's r14 block). Same determinism contract as registry.py's
+module docstring.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from yougile_etl_pipeline_spark.registry import register
+from yougile_etl_pipeline_spark.registry_base import register
+from yougile_etl_pipeline_spark.registry_ext import _CSIM, _IVF_CENT, _IVF_NCENT
+from yougile_etl_pipeline_spark.registry_r12 import (
+    _MARKOV_ITERS,
+    _MARKOV_S,
+    _markov_chain_sql,
+)
 from yougile_etl_pipeline_spark.sources.tables import (
     load_table,
     table_row_count,
@@ -140,9 +131,8 @@ def events_km_median_latency(spark, sf):
     # converters only would be biased early by ignoring the censored
     # mass). Built ON the registered KM entry's output — the engine's
     # own compositionality is the point — plus one broadcast of the
-    # user count; the oracle restates the recursive-CTE chain locally
-    # (banks never import sibling bank modules).
-    from yougile_etl_pipeline_spark.registry import QUERIES
+    # user count; the oracle restates the recursive-CTE chain.
+    from yougile_etl_pipeline_spark.registry_base import QUERIES
 
     km = QUERIES["events_survival_km"](spark, sf)
     med = (km.filter(F.col("survival_fp") <= 500000000)
@@ -361,45 +351,19 @@ def sample_temperature_curve(spark, sf):
                     .alias("n_after")))
 
 
-_MKV_S = 10**12
-_MKV_ITERS = 8
 _MKV_PROBE = 4
 
 
 def _markov_conv_oracle() -> str:
-    # Local copy of the r12 markov chain builder (banks never import
-    # sibling bank modules) extended to snapshot the iterate at step 4
-    # AND step 8 and emit their total-variation distance.
-    base = f"""
-WITH seq AS (
-  SELECT user_id, epoch_ms(ts) AS ms, event_id, event_type,
-         lead(event_type) OVER (PARTITION BY user_id
-                                ORDER BY epoch_ms(ts), event_id) AS nxt
-  FROM events),
-tr AS (SELECT event_type AS from_type, nxt AS to_type,
-              CAST(count(*) AS BIGINT) AS cnt
-       FROM seq WHERE nxt IS NOT NULL GROUP BY 1, 2),
-rt AS (SELECT from_type, SUM(cnt) AS row_total FROM tr GROUP BY 1),
-trans AS (SELECT tr.*, rt.row_total FROM tr JOIN rt USING (from_type)),
-ns AS (SELECT count(DISTINCT from_type) AS n FROM tr),
-it0 AS (SELECT from_type AS type, {_MKV_S} // (SELECT n FROM ns) AS x
-        FROM (SELECT DISTINCT from_type FROM tr))"""
-    prev = "it0"
-    for k in range(1, _MKV_ITERS + 1):
-        base += f""",
-it{k} AS (SELECT trans.to_type AS type,
-                 CAST(SUM({prev}.x * trans.cnt // trans.row_total)
-                      AS BIGINT) AS x
-          FROM {prev} JOIN trans ON {prev}.type = trans.from_type
-          GROUP BY 1)"""
-        prev = f"it{k}"
-    return base + f"""
+    # registry_r12's chain, read at step 4 AND step 8 for their
+    # total-variation distance.
+    return _markov_chain_sql() + f"""
 SELECT CAST(count(*) AS BIGINT) AS n_states,
        CAST(SUM(ABS(COALESCE(a.x, 0) - COALESCE(b.x, 0))) // 2
             // 1000000 AS BIGINT) AS tv_probe_ppm,
        SUM(ABS(COALESCE(a.x, 0) - COALESCE(b.x, 0))) // 2
          // 1000000 < 5000 AS converged
-FROM it{_MKV_PROBE} a FULL OUTER JOIN it{_MKV_ITERS} b USING (type)
+FROM it{_MKV_PROBE} a FULL OUTER JOIN it{_MARKOV_ITERS} b USING (type)
 """
 
 
@@ -437,9 +401,9 @@ def events_markov_convergence(spark, sf):
     for e in edges:
         row_total[e.from_type] = row_total.get(e.from_type, 0) + e.cnt
     states = sorted(row_total)
-    x = {t: _MKV_S // len(states) for t in states}
+    x = {t: _MARKOV_S // len(states) for t in states}
     snap4: dict[str, int] = {}
-    for it in range(1, _MKV_ITERS + 1):
+    for it in range(1, _MARKOV_ITERS + 1):
         nxt: dict[str, int] = {}
         for e in edges:
             # Mirror the oracle's recursive-CTE JOIN semantics: an
@@ -738,17 +702,9 @@ def quality_runs_test_gate(spark, sf):
                      (F.abs(z) > 1.96).alias("clustered"))
 
 
-# Local copies of the IVF oracle fragments (registry_ext._IVF_* /
-# _ivf_assign_sql): banks never import sibling registry modules — the
-# circular entry path can reach this module while they are partially
-# initialized.
-_IVF_NCENT = ("(SELECT CAST(round(sqrt(count(*))) AS BIGINT) "
-              "FROM embeddings)")
-_IVF_CENT = ("SELECT vec_id AS centroid_id, embedding::DOUBLE[] AS cent_vec "
-             f"FROM embeddings WHERE vec_id < {_IVF_NCENT}")
-_CSIM = ("list_dot_product({a}, {b}) / "
-         "(sqrt(list_dot_product({a}, {a})) * "
-         "sqrt(list_dot_product({b}, {b})))")
+# registry_ext._ivf_assign_sql(nprobe=1) without the vector column,
+# with the ORDER BY wrapped differently; kept as is so the certified
+# oracle text does not change.
 _IVF_ASSIGN = f"""
   SELECT v, centroid_id FROM (
     SELECT v, centroid_id,
@@ -872,40 +828,3 @@ def text_dup_span_removal_capped(spark, sf):
 
     return dup_span_removal(load_table(spark, sf, "documents"),
                             n=_DSRC_N, max_gram_df=_DSRC_CAP)
-
-
-# Order-independence guard (same as the other registry_* modules): if
-# this module was the process's entry point into the engine, re-run
-# the rotation so the certification-window SET is import-order
-# -independent.
-from yougile_etl_pipeline_spark import registry as _registry_mod  # noqa: E402
-
-if hasattr(_registry_mod, "_rotate_certification_window"):
-    _registry_mod._rotate_certification_window()
-
-
-# Accumulates through round 13; every name must be oracle-proven at
-# BOTH certification scales before it lands here (the r06–r13 staging
-# discipline). Pinned by tests/test_registry_r14_staged.py and
-# consumed by bench.py's `staged` block so every bank entry carries a
-# wall time + plan fingerprint before it ever certifies.
-R14_ENTRIES: list[str] = [
-    "mm_png_gray_resize_nearest",
-    "mm_png_rgba_flip_crop",
-    "events_km_median_latency",
-    "quality_benford2_chi2_gate",
-    "agg_skewness_kurtosis",
-    "sample_temperature_curve",
-    "events_markov_convergence",
-    "mm_wav_silence_trim",
-    "mart_discount_effectiveness",
-    "graph_double_sweep_diameter",
-    "mm_bmp_topdown_stats",
-    "mm_wav_stereo_stats",
-    "quality_runs_test_gate",
-    "sim_ivf_cluster_balance",
-    # mid-round r14 registrations (each swaps one held-out recert
-    # filler back into _STABLE_CERTIFIED, youngest-vintage first, so
-    # the oldest official rows stay in the window — VERDICT r13 #1):
-    "text_dup_span_removal_capped",  # swap-back: layout_zorder_profile
-]

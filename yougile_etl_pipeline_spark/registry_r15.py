@@ -1,24 +1,9 @@
-"""Round-15 query registrations — WIRED at r15 start.
+"""Round-15 query registrations.
 
-Staged and oracle-proven during round 14 (every entry's DuckDB oracle
-bit-identical at sf0.001 AND sf0.01 via scripts/check_staged.py, with
-a recorded sf0.1 wall in BENCH_r14's `staged` block); went live at the
-r15 rotation via the one-line import at the bottom of registry_ext.py
-next to the registry_r06–r14 imports. The sixteen bank entries sit
-inside the r15 certification window next to 5 planned-change
-gram-cache holds (ADVICE r14 #1) and 29 held-out recertification
-fillers picked by last-driver-green age. Further round-15 operators
-register directly into this module mid-round, each swapping a
-held-out filler back into _STABLE_CERTIFIED one-for-one.
-
-tests/test_registry_r15_staged.py now enforces the WIRED invariants
-(import live, every entry inside ``list(QUERIES)[:50]``, oracle
-present, oracle-executed from the REGISTRY copy at SF_SMOKE).
-
-BEFORE designing any new entry, grep the registry for the name AND
-the feature — @register silently overwrites an existing name in
-place (the r12 near-miss: agg_grouping_sets / win_dist_functions
-already existed from r05).
+Every entry landed with its DuckDB oracle proven bit-identical at
+sf0.001 AND sf0.01 and a recorded sf0.1 wall time + plan fingerprint
+(bench.py's r15 block). Same determinism contract as registry.py's
+module docstring.
 """
 
 from __future__ import annotations
@@ -26,7 +11,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from yougile_etl_pipeline_spark.operators import caching
-from yougile_etl_pipeline_spark.registry import register
+from yougile_etl_pipeline_spark.registry_base import register
+from yougile_etl_pipeline_spark.registry_ext import _COS, _lsh_buckets_union
 from yougile_etl_pipeline_spark.sources.tables import load_table
 
 
@@ -863,27 +849,6 @@ def events_changepoint_scan(spark, sf):
 # LSH recall-vs-tables sweep (the tuning curve for the L knob)
 # ---------------------------------------------------------------------------
 
-def _lsh_union_sql(src_sql: str, id_alias: str, vec_alias: str,
-                   n_tables: int, planes_per_table: int) -> str:
-    # Local copy of registry_ext._lsh_buckets_union (banks do not
-    # import sibling registry modules; the plane generator itself is
-    # the engine's seeded hyperplane_bucket_sql).
-    from yougile_etl_pipeline_spark.operators.similarity import (
-        hyperplane_bucket_sql,
-    )
-
-    return " UNION ALL ".join(
-        f"SELECT {id_alias}, {vec_alias}, {t} AS tbl, "
-        f"{hyperplane_bucket_sql('embedding', t, n_tables=n_tables, planes_per_table=planes_per_table)}"
-        f" AS key FROM {src_sql}"
-        for t in range(n_tables))
-
-
-_SWEEP_COS = ("list_dot_product(qv, cv) / "
-              "(sqrt(list_dot_product(qv, qv)) * "
-              "sqrt(list_dot_product(cv, cv)))")
-
-
 def _lsh_sweep_oracle() -> str:
     base = """
 WITH qsrc AS (SELECT vec_id AS query_id, embedding,
@@ -899,12 +864,12 @@ truth AS (
     FROM qsrc q CROSS JOIN csrc c WHERE q.query_id != c.match_id)
   WHERE rank <= 5),
 tn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM truth)""".format(
-        cos=_SWEEP_COS.replace("qv", "q.qv").replace("cv", "c.cv"))
+        cos=_COS.replace("qv", "q.qv").replace("cv", "c.cv"))
     arms = []
     for L in (2, 6, 18):
         base += f""",
-qb{L} AS ({_lsh_union_sql('qsrc', 'query_id', 'qv', L, 4)}),
-cb{L} AS ({_lsh_union_sql('csrc', 'match_id', 'cv', L, 4)}),
+qb{L} AS ({_lsh_buckets_union('qsrc', 'query_id', 'qv', L, 4)}),
+cb{L} AS ({_lsh_buckets_union('csrc', 'match_id', 'cv', L, 4)}),
 cand{L} AS (
   SELECT DISTINCT query_id, match_id, qv, cv
   FROM qb{L} JOIN cb{L} USING (tbl, key) WHERE query_id != match_id),
@@ -912,7 +877,7 @@ top{L} AS (
   SELECT query_id, match_id FROM (
     SELECT query_id, match_id,
            row_number() OVER (PARTITION BY query_id
-             ORDER BY {_SWEEP_COS} DESC, match_id) AS rank
+             ORDER BY {_COS} DESC, match_id) AS rank
     FROM cand{L})
   WHERE rank <= 5),
 hit{L} AS (SELECT CAST(count(*) AS BIGINT) AS h
@@ -1090,9 +1055,7 @@ def text_dup_span_shrinkage(spark, sf):
     # deciding whether span-level dedup is worth a pass. Composes the
     # certified dup_span_removal lineage (same n=5, parallelism
     # guard, shared gram-stream persist) and rolls it up to one row;
-    # the SQL twin restates the debut-join shape independently (local
-    # copy, the r14 markov precedent — banks do not import sibling
-    # registry modules).
+    # the SQL twin restates the debut-join shape independently.
     from yougile_etl_pipeline_spark.operators.text import (
         dup_span_removal,
     )
@@ -1107,40 +1070,3 @@ def text_dup_span_shrinkage(spark, sf):
         .alias("docs_touched"),
         F.expr("CAST(SUM(n_removed) * 1000000 div SUM(n_tokens) "
                "AS BIGINT)").alias("removed_ppm"))
-
-
-# Staged-entry manifest, in registration order (kept in sync by the
-# bank's subprocess smoke: every name registered by importing this
-# module must appear here, and vice versa). Also consumed by
-# bench.py's `staged` block so every bank entry carries a wall time +
-# plan fingerprint before it ever certifies.
-R15_ENTRIES: list[str] = [
-    "text_simpson_diversity",
-    "train_token_budget_select",
-    "sample_weighted_bottomk",
-    "events_page_hinkley_drift",
-    "quality_jarque_bera",
-    "dedup_idf_jaccard",
-    "text_heaps_curve",
-    "quality_pareto_front",
-    "dedup_cascade_attribution",
-    "text_boilerplate_edges",
-    "events_burstiness_index",
-    "train_mix_epochs_plan",
-    "events_changepoint_scan",
-    "sim_lsh_recall_sweep",
-    "stream_gap_burstiness",  # in bench._STREAMING_SKIP since staging
-    "text_dup_span_shrinkage",
-]
-
-
-# Order-independence guard (the registry_r14 tail precedent, made real
-# for r15/r16 by ADVICE r15 #1): re-rotating converges any import
-# order to the same certification-window SET; in the canonical order
-# (wired via registry_ext's bottom, mid registry import) the attribute
-# does not exist yet and registry's own tail call performs the single
-# rotation.
-from yougile_etl_pipeline_spark import registry as _registry_mod  # noqa: E402
-
-if hasattr(_registry_mod, "_rotate_certification_window"):
-    _registry_mod._rotate_certification_window()

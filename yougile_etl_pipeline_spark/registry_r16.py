@@ -1,29 +1,13 @@
-"""Round-16 query registrations — WIRED at r16 start.
+"""Round-16 query registrations.
 
-Round-15 state (preserved in git history): this was a staged
-eighteen-entry bank, deliberately unimported so the exactly-full r15
-certification window stayed untouched. The r16 rotation wired it at
-registry_ext.py's bottom next to the r06–r15 imports; its entries now
-sit inside ``list(QUERIES)[:50]`` (18 bank + 1 sim_lsh_recall_sweep
-hold + 31 age-picked recertification fillers = 50). Genuinely new
-round-16 operators register directly into this module mid-round, each
-swapping a held-out recertification filler back into
-_STABLE_CERTIFIED so the driver's 50-slot window never strands a
-never-certified query.
-
-Same staging discipline as the previous banks: every entry landed
-here only with its DuckDB oracle proven bit-identical at sf0.001 AND
-sf0.01 (scripts/check_staged.py) and a recorded sf0.1 wall time
-(bench.py's r16 block is manifest-driven off R16_ENTRIES).
+Every entry landed with its DuckDB oracle proven bit-identical at
+sf0.001 AND sf0.01 and a recorded sf0.1 wall time + plan fingerprint
+(bench.py's r16 block). Same determinism contract as registry.py's
+module docstring.
 
 NO media entries in this bank (VERDICT r14 #7: the media completion
 boundary declared in COVERAGE.md §E4 holds; the new-entry budget goes
 to LLM-pipeline depth).
-
-BEFORE designing any new entry, grep the registry for the name AND
-the feature — @register silently overwrites an existing name in
-place (the r12 near-miss: agg_grouping_sets / win_dist_functions
-already existed from r05).
 """
 
 from __future__ import annotations
@@ -31,7 +15,14 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from yougile_etl_pipeline_spark.operators import caching
-from yougile_etl_pipeline_spark.registry import register
+from yougile_etl_pipeline_spark.registry_base import register
+from yougile_etl_pipeline_spark.registry_ext import (
+    _CSIM,
+    _MH_MINS,
+    _ivf_assign_sql,
+    _lsh_buckets_union,
+    _shingles_sql,
+)
 from yougile_etl_pipeline_spark.sources.tables import (
     load_table,
     table_row_count,
@@ -228,23 +219,9 @@ def train_curriculum_bands(spark, sf):
 # Dedup threshold curve + candidate-pair degree histogram
 # ---------------------------------------------------------------------------
 
-def _shingles_sql(expr: str = "text", n: int = 3) -> str:
-    """Local copy of registry_ext._shingles_sql (banks do not import
-    sibling registry modules — the wired import path would be a
-    partially-initialized circular import; r15's _lsh_union_sql
-    precedent): DuckDB twin of operators.text.shingles."""
-    toks = f"string_split({expr}, ' ')"
-    return (
-        f"list_distinct(list_transform("
-        f"range(1, greatest(len({toks}) - {n - 1}, 0) + 1), "
-        f"i -> array_to_string({toks}[i:i+{n - 1}], ' ')))"
-    )
-
-
 def _pair_sql(cap: int, n: int = 3) -> str:
-    """Local copy of registry_ext._shingle_jaccard_oracle's pair CTEs
-    (same no-sibling-import rule), threshold-free: every capped
-    candidate pair with its exact jaccard."""
+    """The pair CTEs of registry_ext._shingle_jaccard_oracle, threshold
+    -free: every capped candidate pair with its exact jaccard."""
     return f"""
 ex0 AS (
   SELECT doc_id AS doc, lang, unnest({_shingles_sql('text', n)}) AS sh
@@ -482,11 +459,6 @@ def text_dup_span_source_pairs(spark, sf):
 # MinHash banding sweep (the (bands, rows) knob curve, one signature)
 # ---------------------------------------------------------------------------
 
-_MH_SWEEP_MINS = ", ".join(
-    f"min(substr(md5(sh) || md5(sh), {1 + 4 * i}, 16)) AS mh{i}"
-    for i in range(8))
-
-
 def _mh_bands_sql(bands: int, src: str = "sig",
                   doc_alias: str = "doc") -> str:
     rows = 8 // bands
@@ -506,7 +478,7 @@ truth AS (SELECT doc_a, doc_b FROM pairs WHERE jaccard >= 0.5),
 tn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM truth),
 mex AS (SELECT doc_id AS doc, unnest({_shingles_sql()}) AS sh
         FROM documents),
-sig AS (SELECT doc, {_MH_SWEEP_MINS} FROM mex GROUP BY doc)"""
+sig AS (SELECT doc, {_MH_MINS} FROM mex GROUP BY doc)"""
     arms = []
     for b in (2, 4, 8):
         base += f""",
@@ -594,43 +566,6 @@ def dedup_minhash_band_sweep(spark, sf):
 # Reciprocal-rank fusion of the two ANN scale paths (LSH + IVF)
 # ---------------------------------------------------------------------------
 
-def _lsh_union_sql_r16(src_sql: str, id_alias: str, vec_alias: str,
-                       n_tables: int, planes_per_table: int) -> str:
-    # Local copy of registry_ext._lsh_buckets_union (no sibling
-    # registry imports; the plane generator itself is the engine's
-    # seeded hyperplane_bucket_sql) — the r15 _lsh_union_sql precedent.
-    from yougile_etl_pipeline_spark.operators.similarity import (
-        hyperplane_bucket_sql,
-    )
-
-    return " UNION ALL ".join(
-        f"SELECT {id_alias}, {vec_alias}, {t} AS tbl, "
-        f"{hyperplane_bucket_sql('embedding', t, n_tables=n_tables, planes_per_table=planes_per_table)}"
-        f" AS key FROM {src_sql}"
-        for t in range(n_tables))
-
-
-_R16_CSIM = ("list_dot_product({a}, {b}) / "
-             "(sqrt(list_dot_product({a}, {a})) * "
-             "sqrt(list_dot_product({b}, {b})))")
-_R16_IVF_CENT = (
-    "SELECT vec_id AS centroid_id, embedding::DOUBLE[] AS cent_vec "
-    "FROM embeddings WHERE vec_id < "
-    "(SELECT CAST(round(sqrt(count(*))) AS BIGINT) FROM embeddings)")
-
-
-def _ivf_assign_sql_r16(src: str, idc: str, vecc: str) -> str:
-    # Local copy of registry_ext._ivf_assign_sql (nprobe=1).
-    sim = _R16_CSIM.format(a=vecc, b="cent_vec")
-    return f"""
-  SELECT {idc}, {vecc}, centroid_id FROM (
-    SELECT {idc}, {vecc}, centroid_id,
-           row_number() OVER (PARTITION BY {idc}
-                              ORDER BY {sim} DESC, centroid_id) AS rn
-    FROM {src} CROSS JOIN ({_R16_IVF_CENT})
-  ) WHERE rn <= 1"""
-
-
 @register("sim_rrf_fusion", f"""
 WITH qsrc AS (SELECT vec_id AS query_id, embedding,
                      embedding::DOUBLE[] AS qv
@@ -638,8 +573,8 @@ WITH qsrc AS (SELECT vec_id AS query_id, embedding,
 csrc AS (SELECT vec_id AS match_id, embedding,
                 embedding::DOUBLE[] AS cv
          FROM embeddings),
-qb AS ({_lsh_union_sql_r16('qsrc', 'query_id', 'qv', 18, 4)}),
-cb AS ({_lsh_union_sql_r16('csrc', 'match_id', 'cv', 18, 4)}),
+qb AS ({_lsh_buckets_union('qsrc', 'query_id', 'qv', 18, 4)}),
+cb AS ({_lsh_buckets_union('csrc', 'match_id', 'cv', 18, 4)}),
 lcand AS (
   SELECT DISTINCT query_id, match_id, qv, cv
   FROM qb JOIN cb USING (tbl, key) WHERE query_id != match_id),
@@ -647,14 +582,14 @@ lsh AS (
   SELECT query_id, match_id, rank FROM (
     SELECT query_id, match_id,
            row_number() OVER (PARTITION BY query_id
-             ORDER BY {_R16_CSIM.format(a='qv', b='cv')} DESC,
+             ORDER BY {_CSIM.format(a='qv', b='cv')} DESC,
                       match_id) AS rank
     FROM lcand) WHERE rank <= 5),
-qa AS ({_ivf_assign_sql_r16('qsrc', 'query_id', 'qv')}),
-ca AS ({_ivf_assign_sql_r16('csrc', 'match_id', 'cv')}),
+qa AS ({_ivf_assign_sql('qsrc', 'query_id', 'qv')}),
+ca AS ({_ivf_assign_sql('csrc', 'match_id', 'cv')}),
 iscored AS (
   SELECT query_id, match_id,
-         {_R16_CSIM.format(a='qv', b='cv')} AS cos_sim
+         {_CSIM.format(a='qv', b='cv')} AS cos_sim
   FROM qa JOIN ca USING (centroid_id)
   WHERE query_id != match_id),
 ivf AS (
@@ -731,7 +666,7 @@ def sim_rrf_fusion(spark, sf):
 WITH tex AS (
   SELECT doc_id AS doc, unnest({_shingles_sql()}) AS sh
   FROM documents WHERE source NOT IN ('src0', 'src1')),
-tsig AS (SELECT doc, {_MH_SWEEP_MINS} FROM tex GROUP BY doc),
+tsig AS (SELECT doc, {_MH_MINS} FROM tex GROUP BY doc),
 bdocs AS (
   -- the benchmark is a SET of texts: exact duplicates collapse to
   -- the smallest-id representative (minhash_decontam's contract)
@@ -739,7 +674,7 @@ bdocs AS (
   WHERE source IN ('src0', 'src1') GROUP BY text),
 bex AS (
   SELECT doc, unnest({_shingles_sql()}) AS sh FROM bdocs),
-bsig AS (SELECT doc, {_MH_SWEEP_MINS} FROM bex GROUP BY doc),
+bsig AS (SELECT doc, {_MH_MINS} FROM bex GROUP BY doc),
 tbk AS ({_mh_bands_sql(4, 'tsig')}),
 bbk AS ({_mh_bands_sql(4, 'bsig', doc_alias='bench_doc')}),
 hits AS (
@@ -776,7 +711,7 @@ _CC_EDGES_R16 = f"""
 ex AS (
   SELECT doc_id AS doc, unnest({_shingles_sql()}) AS sh FROM documents
 ), sig AS (
-  SELECT doc, {_MH_SWEEP_MINS} FROM ex GROUP BY doc
+  SELECT doc, {_MH_MINS} FROM ex GROUP BY doc
 ), bk AS (
   {_mh_bands_sql(4)}
 ), mpairs AS (
@@ -1225,47 +1160,3 @@ def corpus_survivor_token_share(spark, sf):
             .select("source", "total_tokens", "kept_tokens",
                     F.expr("kept_tokens * 1000000 div total_tokens")
                      .cast("bigint").alias("kept_ppm")))
-
-
-# Staged-entry manifest, in registration order (kept in sync by the
-# bank's subprocess smoke: every name registered by importing this
-# module must appear here, and vice versa). Also consumed by
-# bench.py's `staged` block so every bank entry carries a wall time +
-# plan fingerprint before it ever certifies.
-R16_ENTRIES: list[str] = [
-    "text_mean_docfreq_gate",
-    "text_skipgram_cooccurrence",
-    "text_dup_span_source_pairs",
-    "dedup_minhash_band_sweep",
-    "sim_rrf_fusion",
-    "decontam_minhash",
-    "dedup_quality_canonical",
-    "dedup_neardup_source_crosstab",
-    "dedup_boundary_chain",
-    "corpus_lang_concentration",
-    "quality_rule_attribution",
-    "train_curriculum_bands",
-    "quality_dedup_threshold_curve",
-    "dedup_pair_degree_hist",
-    "train_token_apportionment",
-    "events_peak_to_mean",
-    "events_session_gap_sweep",
-    "corpus_survivor_token_share",
-]
-
-
-# Order-independence guard (the registry_r14 tail precedent, made real
-# for r15/r16 by ADVICE r15 #1 — the comments that referenced it used
-# to describe a mechanism only r14 had): if this module is imported
-# in-process AFTER registry.py's end-of-module rotation already ran
-# (a test importing the module directly, bench importing a bank), the
-# registrations above appended past the rotated stable block;
-# re-rotating converges any import order to the same
-# certification-window SET (rotation is idempotent: it just re-moves
-# the stable list to the tail). In the canonical order (wired via
-# registry_ext's bottom, mid registry import) the attribute does not
-# exist yet and registry's own tail call performs the single rotation.
-from yougile_etl_pipeline_spark import registry as _registry_mod  # noqa: E402
-
-if hasattr(_registry_mod, "_rotate_certification_window"):
-    _registry_mod._rotate_certification_window()

@@ -1,23 +1,11 @@
-"""Round-17 query registrations — STAGING BANK, NOT YET WIRED.
+"""Round-17 query registrations — the one staged bank.
 
-Do NOT import this module in round 16: the r16 certification window is
-exactly full (the eighteen registry_r16 bank entries plus the
-sim_lsh_recall_sweep planned-change hold plus the 31 held-out
-recertification fillers picked by last-driver-green age, with
-mid-round registrations swapping fillers back one-for-one), and
-registering past the driver's 50-slot window would leave
-never-certified queries at the round boundary
-(tests/test_certification_window.py enforces the accounting). At
-ROUND-17 START, wire it with one line at the bottom of
-registry_ext.py next to the registry_r06–r16 imports.
-
-Same staging contract as the previous banks: every entry lands here
-only with its DuckDB oracle proven bit-identical at sf0.001 AND
-sf0.01 (scripts/check_staged.py) and a recorded sf0.1 wall time
-(bench.py's `staged` block is manifest-driven off R17_ENTRIES —
-automatic once the entry and its parity test exist). Every >0.5 s
-entry additionally needs an sf1 slope row in SCALE.md's r17-gate
-table BEFORE it lands (the standing VERDICT-r14 #4 staging gate).
+registry.py does not import this module, so the driver's query set
+stays at 430. Importing it appends its entries after every other
+query; ``list(QUERIES)[:50]`` (registry.WINDOW) does not move. Every
+entry carries its DuckDB oracle, proven bit-identical at sf0.001 AND
+sf0.01 by scripts/check_staged.py, and a recorded sf0.1 wall time
+(bench.py's `staged` block runs R17_ENTRIES).
 
 NO media entries in this bank (the media completion boundary declared
 in COVERAGE.md §E4 holds; the new-entry budget goes to LLM-pipeline
@@ -32,17 +20,11 @@ token budget) → greedy packed selection with per (lang, source)
 token accounting — the LLM-pipeline analogue of `mart_flagship`,
 oracle-paired end to end.
 
-tests/test_registry_r17_staged.py smoke-imports this module in a
-SUBPROCESS (so the round-16 window stays untouched) and verifies every
-entry registers with an oracle and runs green at sf0.001. Tests that
-need an r17 entry in-process must snapshot/restore QUERIES/ORACLES or
-run in a subprocess (ADVICE r15 #2 — an in-process import permanently
-appends to the global registry for the rest of the pytest session).
-
-BEFORE designing any new entry, grep the registry for the name AND
-the feature — @register silently overwrites an existing name in
-place (the r12 near-miss: agg_grouping_sets / win_dist_functions
-already existed from r05).
+tests/test_registry_r17_staged.py imports this module in a
+SUBPROCESS and verifies every entry registers with an oracle and runs
+green at sf0.001. Tests that need an r17 entry in-process must
+snapshot/restore QUERIES/ORACLES or run in a subprocess: an in-process
+import appends to the global registry for the rest of the session.
 """
 
 from __future__ import annotations
@@ -51,7 +33,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from yougile_etl_pipeline_spark.operators import caching
-from yougile_etl_pipeline_spark.registry import register
+from yougile_etl_pipeline_spark.registry_base import register
+from yougile_etl_pipeline_spark.registry_ext import _MH_MINS, _shingles_sql
+from yougile_etl_pipeline_spark.registry_r16 import _mh_bands_sql
 from yougile_etl_pipeline_spark.sources.tables import load_table
 
 # The corpus-build capstone and its funnel readout share the canon +
@@ -62,40 +46,6 @@ from yougile_etl_pipeline_spark.sources.tables import load_table
 # frontier, so two builds of the "same" lineage carry different
 # checkpoint RDD ids and never compare semantically equal. At cluster
 # scale these are the staging tables the pipeline writes between stages.
-
-
-# --- DuckDB twin helpers (local copies of the registry_ext/r16 forms;
-# banks do not import sibling registry modules — the wired import path
-# would be a partially-initialized circular import) -----------------------
-
-def _shingles_sql(expr: str = "text", n: int = 3) -> str:
-    """DuckDB twin of operators.text.shingles."""
-    toks = f"string_split({expr}, ' ')"
-    return (
-        f"list_distinct(list_transform("
-        f"range(1, greatest(len({toks}) - {n - 1}, 0) + 1), "
-        f"i -> array_to_string({toks}[i:i+{n - 1}], ' ')))"
-    )
-
-
-# DuckDB twin of operators.dedup.minhash_signature (n_hashes=8).
-_MH_MINS = ", ".join(
-    f"min(substr(md5(sh) || md5(sh), {1 + 4 * i}, 16)) AS mh{i}"
-    for i in range(8))
-
-
-def _mh_bands_sql(bands: int, src: str = "sig",
-                  doc_alias: str = "doc") -> str:
-    """DuckDB twin of the (bands, rows) banding over an 8-min
-    signature relation ``src(doc, mh0..mh7)``."""
-    rows = 8 // bands
-    legs = []
-    for b in range(bands):
-        cols = " || '|' || ".join(f"mh{b * rows + r}"
-                                  for r in range(rows))
-        legs.append(f"SELECT doc AS {doc_alias}, {b} AS band, "
-                    f"md5({cols}) AS key FROM {src}")
-    return " UNION ALL ".join(legs)
 
 
 # Recursive-CTE connected components over the (8,4) MinHash-LSH pair
@@ -1224,12 +1174,3 @@ R17_ENTRIES: list[str] = [
     "emb_label_centroid_purity",
     "train_quota_sensitivity",
 ]
-
-
-# Order-independence guard (the registry_r14 tail precedent, made real
-# for r15/r16/r17 by ADVICE r15 #1): re-rotating converges any import
-# order to the same certification-window SET; rotation is idempotent.
-from yougile_etl_pipeline_spark import registry as _registry_mod  # noqa: E402
-
-if hasattr(_registry_mod, "_rotate_certification_window"):
-    _registry_mod._rotate_certification_window()
