@@ -15,6 +15,7 @@ import os
 import sys
 from collections.abc import Callable
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -35,8 +36,10 @@ def _configure(spark: SparkSession) -> SparkSession:
               "spark.sql.files.openCostInBytes"):
         try:
             spark.conf.set(k, ENGINE_CONF[k])
-        except Exception:
-            pass  # conf not runtime-settable in this deployment — defaults ok
+        except AnalysisException as e:
+            # not runtime-settable in this deployment — its value stands
+            if e.getCondition() != "CANNOT_MODIFY_CONFIG":
+                raise
     return spark
 
 

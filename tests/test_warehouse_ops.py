@@ -14,8 +14,10 @@ from yougile_etl_pipeline_spark.operators.quality import (
     scd2_build,
 )
 from yougile_etl_pipeline_spark.plans.incremental import (
+    append_snapshot,
     backfill,
     missing_partitions,
+    read_latest_snapshot,
 )
 
 
@@ -125,6 +127,49 @@ def test_backfill_builds_only_missing(spark, tmp_path):
     assert missing_partitions(path, days) == ["2024-01-02"]
     assert backfill(spark, path, days, build) == ["2024-01-02"]
     assert spark.read.parquet(path).count() == 30
+
+
+# ---------------------------------------------------------------------------
+# Latest-snapshot readback
+# ---------------------------------------------------------------------------
+
+def _snapshot(spark, rows):
+    return spark.createDataFrame(rows, "k long, loaded_ts string").withColumn(
+        "loaded_ts", F.col("loaded_ts").cast("timestamp"))
+
+
+def test_latest_snapshot_skips_a_newest_day_without_data(spark, tmp_path):
+    import datetime as dt
+
+    path = str(tmp_path / "snap")
+    append_snapshot(_snapshot(spark, [(1, "2024-01-01 05:00:00")]), path)
+    append_snapshot(_snapshot(spark, [(2, "2024-01-02 05:00:00"),
+                                      (3, "2024-01-02 05:00:00")]), path)
+    append_snapshot(_snapshot(spark, [(4, "2024-01-02 06:00:00")]), path)
+    # a killed write: the newest day's directory holds no data file
+    os.makedirs(os.path.join(path, "load_date=2024-01-03"))
+    open(os.path.join(path, "load_date=2024-01-03", ".part.parquet.crc"),
+         "w").close()
+    latest = read_latest_snapshot(spark, path)
+    assert latest.schema == spark.read.parquet(path).schema
+    assert [(r.k, r.loaded_ts, r.load_date) for r in latest.collect()] == [
+        (4, dt.datetime(2024, 1, 2, 6), dt.date(2024, 1, 2))]
+
+
+def test_latest_snapshot_runs_one_spark_job(spark, tmp_path):
+    path = str(tmp_path / "snap")
+    for day in range(1, 4):
+        append_snapshot(_snapshot(spark, [(day, f"2024-01-0{day} 05:00:00")]),
+                        path)
+    sc = spark.sparkContext
+    group = f"latest-{tmp_path.name}"
+    sc.setJobGroup(group, "read_latest_snapshot")
+    try:
+        latest = read_latest_snapshot(spark, path)
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert [r.k for r in latest.collect()] == [3]
 
 
 # ---------------------------------------------------------------------------

@@ -72,6 +72,31 @@ def listdir(path: str) -> list[str]:
     return [s.getPath().getName() for s in fs.listStatus(p)]
 
 
+def parquet_spark_schema(path: str):
+    """The Spark schema (``StructType``) that a Spark writer stored in
+    the footer of parquet file `path`, read on the driver, or None when
+    no JVM is up or the file carries none (written by another engine).
+    Handing it to the reader skips Spark's schema-inference job."""
+    import json
+
+    from pyspark.sql import SparkSession
+    from pyspark.sql.types import StructType
+
+    h = _fs(path)
+    if h is None:
+        return None
+    fs, p = h
+    parquet = SparkSession.getActiveSession()._jvm.org.apache.parquet.hadoop
+    reader = parquet.ParquetFileReader.open(
+        parquet.util.HadoopInputFile.fromPath(p, fs.getConf()))
+    try:
+        meta = reader.getFooter().getFileMetaData().getKeyValueMetaData()
+    finally:
+        reader.close()
+    stored = meta.get("org.apache.spark.sql.parquet.row.metadata")
+    return StructType.fromJson(json.loads(stored)) if stored else None
+
+
 def rename(src: str, dst: str) -> None:
     """Move a file/tree. `dst` must not exist (staging-swap contract —
     Hadoop rename would otherwise move src INTO an existing dst dir,

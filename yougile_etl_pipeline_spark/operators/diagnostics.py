@@ -18,9 +18,9 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["plan_profile", "formatted_plan"]
+__all__ = ["plan_profile", "formatted_plan", "codegen_compiles"]
 
 
 def formatted_plan(df: DataFrame) -> str:
@@ -29,6 +29,18 @@ def formatted_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().explainString(
         jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"))
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated-code compiles this JVM has run so far (Spark's
+    ``CodegenMetrics`` compilation-time histogram count; read-only).
+
+    A warm rebuild of an unchanged plan hits Spark's code cache and adds
+    0; a per-run value inlined into generated code (see
+    ``relational.stamp``) adds one compile per affected stage on every
+    run. Take the difference around the action being checked."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def _distinct_nodes(body: str, plan: str, *, tree_regex: str,

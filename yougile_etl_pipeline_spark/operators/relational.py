@@ -18,6 +18,7 @@ __all__ = [
     "null_safe_neq",
     "member_filter",
     "dedup_full",
+    "stamp",
     "dedup_by_key",
     "union_by_name",
     "orphan_audit",
@@ -148,6 +149,23 @@ def dedup_full(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
     the full row; fine at mart width. See `dedup_by_key` for the 100 TB
     variant (shuffle on the business key only)."""
     return df.dropDuplicates(subset) if subset else df.dropDuplicates()
+
+
+def stamp(df: DataFrame, name: str, value: Any) -> DataFrame:
+    """P9 — add column `name` holding one per-run constant (the
+    reference's ``loaded_ts``, ``dags/yougile_etl_dag.py:280``) as data.
+
+    A timestamp, date, int, long or boolean literal is written into
+    whole-stage generated Java as a constant, so every new value gives
+    the stage new source: a fresh Janino compile and a cold JIT on every
+    hourly load. Here the value enters as ``explode`` of a one-element
+    array: constant folding turns the array into an array literal, which
+    generated code reaches through ``references[]``, and a generator's
+    output is not a foldable alias, so ``FoldablePropagation`` cannot
+    put the literal back. Builds that differ only in `value` compile to
+    identical code. `value` is anything ``F.lit`` accepts, a Column
+    included; one row in, one row out."""
+    return df.select("*", F.explode(F.array(F.lit(value))).alias(name))
 
 
 def dedup_by_key(df: DataFrame, keys: list[str],

@@ -10,7 +10,7 @@ stages; the only shuffle is the fact-side J2 join + final dedup — every
 hub join is broadcast.
 
 Exercised operators: P2/P3 projections+renames, P5 membership filter,
-P6 null-safe ``!= True`` (``:239``), P9 literal stamp (``:280``),
+P6 null-safe ``!= True`` (``:239``), P9 per-run stamp (``:280``),
 J1–J8 joins, F1 coalesce (``:230,233``), F2 space-strip (``:283``),
 F3 range-split (``:284``), F4 ``dd.MM.yyyy`` parse (``:288-289``),
 F5 epoch-ms UTC floor (``:290-292``), F6 empty-string→NULL cast
@@ -40,6 +40,7 @@ from yougile_etl_pipeline_spark.operators.relational import (
     left_lookup_join,
     member_filter,
     null_safe_neq,
+    stamp,
 )
 from yougile_etl_pipeline_spark.sources.tables import load_tables
 
@@ -55,7 +56,13 @@ MART_SEGMENTS = ["BUILDING", "MACHINERY", "AUTOMOBILE"]
 
 def build_mart(spark: SparkSession, sf_dir: str,
                loaded_ts: dt.datetime = LOADED_TS) -> DataFrame:
-    """Build the wide denormalized mart as one lazy plan."""
+    """Build the wide denormalized mart as one lazy plan.
+
+    The A1 dedup runs over the 15 data columns and the P9 stamp comes
+    after it. That is exact: every row of one build carries the same
+    ``loaded_ts``, so DISTINCT(R × {ts}) = DISTINCT(R) × {ts}. The stamp
+    enters as data (``relational.stamp``), so hourly builds that differ
+    only in ``loaded_ts`` share one compiled mart stage."""
     t = load_tables(
         spark, sf_dir,
         ("orders", "lineitem", "customer", "nation", "region", "supplier",
@@ -130,7 +137,7 @@ def build_mart(spark: SparkSession, sf_dir: str,
                            coalesce_cols(F.col("part_name"),
                                          F.col("o_orderpriority")))
 
-    # --- final projection (P2, :298-319) + P9 stamp (:280) + A1 dedup (:319)
+    # --- final projection (P2, :298-319) + A1 dedup (:319) + P9 stamp (:280)
     # Dates rendered ISO at the boundary: Spark and DuckDB hand DATE to
     # pandas differently (date objects vs midnight datetime64), which would
     # break the driver's value hash even when the dates are equal.
@@ -147,9 +154,9 @@ def build_mart(spark: SparkSession, sf_dir: str,
         iso("loading_end_date").alias("loading_end_date"),
         "quantity_plan", "place",
         F.col("o_totalprice").alias("total_price"),
-        F.lit(loaded_ts).cast("timestamp").alias("loaded_ts"),
     )
-    return dedup_full(out)
+    return stamp(dedup_full(out), "loaded_ts",
+                 F.lit(loaded_ts).cast("timestamp"))
 
 
 # DuckDB mirror for the driver's differential check. Column aliases match

@@ -52,6 +52,7 @@ from yougile_etl_pipeline_spark.operators.relational import (
     member_filter,
     null_safe_neq,
     orphan_audit,
+    stamp,
 )
 from yougile_etl_pipeline_spark.operators.reshape import (
     explode_keep_empty,
@@ -181,7 +182,6 @@ def build_yougile_mart(
         enr = left_lookup_join(enr, hub(states, display, attr),
                                f"{attr}_state_id")
 
-    enr = enr.withColumn("loaded_ts", F.lit(loaded_ts).cast("timestamp"))
     # F2+F3: strip spaces then split 'dd.MM.yyyy-dd.MM.yyyy' (:283-284).
     # Presence-guarded: the config decides which sticker-derived columns
     # exist (mirrors the reference, where these lines only make sense for
@@ -205,7 +205,7 @@ def build_yougile_mart(
             enr = enr.withColumn(q, clean_numeric(q))
 
     out_cols = [
-        "loaded_ts", "task_name", "task_creation_date", "task_id",
+        "task_name", "task_creation_date", "task_id",
         "subtask_name", "subtask_id", "board_name", "column_name",
         *cfg.hub_names,
         "quantity_plan", "quantity_fact",
@@ -213,5 +213,8 @@ def build_yougile_mart(
         "discharging_place", "deadline_start_date", "deadline_end_date",
     ]
     mart = enr.select(*[c for c in out_cols if c in enr.columns])
-    # A1: final dedup (:319).
-    return dedup_full(mart), audit
+    # A1: final dedup (:319), then the P9 stamp (:280) as data — exact,
+    # since every row of one run carries the same loaded_ts.
+    mart = stamp(dedup_full(mart), "loaded_ts",
+                 F.lit(loaded_ts).cast("timestamp"))
+    return mart.select("loaded_ts", *mart.columns[:-1]), audit
