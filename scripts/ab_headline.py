@@ -7,7 +7,9 @@ matching the driver's methodology (the r16 win_rank_topn regression
 was invisible in warm same-session A/Bs).
 
 Usage:
-  SPARK_GRAFT_OPEN_COST=4194304 python scripts/ab_headline.py [q1 q2 ..]
+  python scripts/ab_headline.py [--conf key=value ...] [q1 q2 ..]
+  e.g. --conf spark.sql.files.openCostInBytes=524288; each --conf goes
+  to get_spark(extra_conf=...) over the engine's pinned settings.
 """
 
 from __future__ import annotations
@@ -24,7 +26,12 @@ from bench import HEADLINE  # noqa: E402
 
 
 def main() -> None:
-    names = sys.argv[1:] or HEADLINE
+    args, conf = sys.argv[1:], {}
+    while args[:1] == ["--conf"]:
+        key, _, value = args[1].partition("=")
+        conf[key] = value
+        args = args[2:]
+    names = args or HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from yougile_etl_pipeline_spark.registry import QUERIES
     from yougile_etl_pipeline_spark.session import get_spark
@@ -33,7 +40,7 @@ def main() -> None:
         # staged r17 bank entries register on module import only
         from yougile_etl_pipeline_spark import registry_r17  # noqa: F401
 
-    spark = get_spark(app_name="ab-headline")
+    spark = get_spark(app_name="ab-headline", extra_conf=conf)
     spark.sparkContext.setLogLevel("ERROR")
     QUERIES["a2_counts"](spark, sf_dir).write.format("noop") \
         .mode("overwrite").save()
@@ -49,7 +56,7 @@ def main() -> None:
             ts.append(time.perf_counter() - t0)
         out[name] = round(sorted(ts)[1], 3)
     print(json.dumps({
-        "open_cost": spark.conf.get("spark.sql.files.openCostInBytes"),
+        "conf": conf,
         "queries": out,
         "total": round(sum(out.values()), 3),
     }))

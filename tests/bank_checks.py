@@ -4,14 +4,11 @@ A bank's entries are the registered queries whose function is defined in
 that ``registry_rNN`` module. ``list(QUERIES)[:50]`` is frozen in
 ``registry.WINDOW`` (tests/test_certification_window.py), so what each bank
 guard pins is: the bank is imported by the registry, its entry count is
-unchanged, every entry carries an oracle, and its entries match their
-oracles when built from the registry.
+unchanged, and every entry carries an oracle. Each entry's oracle parity
+is ``tests/test_oracle_parity.py::test_query_matches_oracle``.
 """
 
 from __future__ import annotations
-
-from tests.conftest import SF_SMOKE
-from tests.oracle_compare import compare, duck_connect
 
 PKG = "yougile_etl_pipeline_spark"
 
@@ -37,12 +34,3 @@ def check_registered(bank: str, expected: int) -> None:
     names = bank_names(bank)
     assert len(names) == expected, (bank, names)
     assert [n for n in names if n not in ORACLES] == []
-
-
-def check_oracles(spark, names) -> None:
-    from yougile_etl_pipeline_spark.registry import ORACLES, QUERIES
-
-    con = duck_connect(SF_SMOKE)
-    for name in names:
-        issues = compare(QUERIES[name](spark, SF_SMOKE), con, ORACLES[name])
-        assert not issues, f"{name}: {issues}"

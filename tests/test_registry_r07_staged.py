@@ -13,7 +13,3 @@ def test_registry_imports_r07():
 
 def test_r07_entries_registered_inside_window():
     bank_checks.check_registered(BANK, 18)
-
-
-def test_r07_registry_entries_match_oracles(spark):
-    bank_checks.check_oracles(spark, bank_checks.bank_names(BANK))

@@ -13,7 +13,3 @@ def test_registry_imports_r13():
 
 def test_r13_entries_registered_inside_window():
     bank_checks.check_registered(BANK, 24)
-
-
-def test_r13_registry_entries_match_oracles(spark):
-    bank_checks.check_oracles(spark, bank_checks.bank_names(BANK))

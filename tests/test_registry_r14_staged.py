@@ -13,7 +13,3 @@ def test_registry_imports_r14():
 
 def test_r14_entries_registered_inside_window():
     bank_checks.check_registered(BANK, 15)
-
-
-def test_r14_registry_entries_match_oracles(spark):
-    bank_checks.check_oracles(spark, bank_checks.bank_names(BANK))

@@ -13,7 +13,3 @@ def test_registry_imports_r15():
 
 def test_r15_entries_registered_inside_window():
     bank_checks.check_registered(BANK, 16)
-
-
-def test_r15_registry_entries_match_oracles(spark):
-    bank_checks.check_oracles(spark, bank_checks.bank_names(BANK))

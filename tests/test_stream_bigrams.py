@@ -3,7 +3,7 @@
 property the registry twin's SUM-per-pair rollup rests on, exercised
 through the per-group function directly (the burst-test fake device),
 plus the drained-output parity at smoke scale via the registry entry's
-own oracle (tests/test_registry_r13_staged.py). The spark fixture is
+own oracle (tests/test_oracle_parity.py). The spark fixture is
 requested only for the live SparkContext the column expressions in
 bigram_stateful's select() need."""
 

@@ -172,6 +172,20 @@ def test_latest_snapshot_runs_one_spark_job(spark, tmp_path):
     assert [r.k for r in latest.collect()] == [3]
 
 
+def test_latest_snapshot_with_a_new_stamp_compiles_nothing(spark, tmp_path):
+    from yougile_etl_pipeline_spark.operators.diagnostics import (
+        codegen_compiles,
+    )
+
+    path = str(tmp_path / "snap")
+    append_snapshot(_snapshot(spark, [(1, "2024-01-01 05:00:00")]), path)
+    assert [r.k for r in read_latest_snapshot(spark, path).collect()] == [1]
+    append_snapshot(_snapshot(spark, [(2, "2024-01-01 06:00:00")]), path)
+    before = codegen_compiles(spark)
+    assert [r.k for r in read_latest_snapshot(spark, path).collect()] == [2]
+    assert codegen_compiles(spark) - before == 0
+
+
 # ---------------------------------------------------------------------------
 # Streaming quarantine gate
 # ---------------------------------------------------------------------------

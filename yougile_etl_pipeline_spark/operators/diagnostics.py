@@ -16,11 +16,13 @@ Driver-side and plan-only: nothing is executed, no job runs.
 
 from __future__ import annotations
 
+import hashlib
 import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["plan_profile", "formatted_plan", "codegen_compiles"]
+__all__ = ["plan_profile", "audit_flags", "formatted_plan",
+           "normalized_plan", "plan_fingerprint", "codegen_compiles"]
 
 
 def formatted_plan(df: DataFrame) -> str:
@@ -29,6 +31,59 @@ def formatted_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().explainString(
         jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"))
+
+
+# What varies between two builds of one plan: per-JVM counters (plan ids,
+# RDD ids and call sites, such as the localCheckpoint frontier's) and
+# where the input lives. Expression and subquery ids (`#123`) and the counter suffixes
+# of generated names (lambda variables `x_14`, `_common_expr_3`) are
+# renumbered instead of masked, so the hash still tells which attribute
+# feeds which operator.
+_PLAN_MASKS = (
+    (re.compile(r"plan_id=\d+"), "plan_id=?"),
+    (re.compile(r"RDD\[\d+\](?: at [^,\n]*)?"), "RDD[?]"),
+    (re.compile(r"(Location: \w+) \[[^\n]*\]"), r"\1 [?]"),
+    (re.compile(r"file:[^\s,\]]+"), "file:?"),
+)
+
+
+def normalized_plan(df: DataFrame) -> str:
+    """`formatted_plan` with per-session noise removed: expression ids
+    and generated-name suffixes renumbered by first appearance (``#1``,
+    ``#2``, ...), plan ids, RDD ids and input paths masked. Two builds
+    of the same plan in any two sessions give the same text, except
+    where Spark orders operands by a hash of expression ids (the
+    ``Expand`` that several DISTINCT aggregates become)."""
+    text = formatted_plan(df)
+    for pattern, repl in _PLAN_MASKS:
+        text = pattern.sub(repl, text)
+    for counter in (r"(\b[A-Za-z_]\w*?_)(\d+)(?=#\d)", r"(#)(\d+)"):
+        ids: dict[str, str] = {}
+        text = re.sub(counter,
+                      lambda m: m.group(1) + ids.setdefault(
+                          m.group(2), str(len(ids) + 1)),
+                      text)
+    return text
+
+
+def plan_fingerprint(df: DataFrame) -> str:
+    """sha256 of `normalized_plan`: equal iff the physical plan is the
+    same operator tree with the same expressions, up to ids and input
+    paths (scripts/full_sweep.py keeps one per query in
+    PLAN_TABLE.json)."""
+    return hashlib.sha256(normalized_plan(df).encode()).hexdigest()
+
+
+def audit_flags(profile: dict, shuffle_budget: int) -> list[str]:
+    """What a plan audit must explain about a `plan_profile`: a
+    nested-loop join (``nested_loop``) and more than `shuffle_budget`
+    shuffle exchanges (``shuffles``)."""
+    flags = []
+    if profile["has_nested_loop_join"]:
+        flags.append("nested_loop")
+    if profile["shuffle_exchanges"] > shuffle_budget:
+        flags.append("shuffles")
+    return flags
 
 
 def codegen_compiles(spark: SparkSession) -> int:

@@ -42,12 +42,20 @@ def read_latest_snapshot(spark: SparkSession, path: str) -> DataFrame:
     DATE column. The schema comes from a Spark-written footer on the
     driver, so the one Spark job here is the top-1 over ``loaded_ts``
     that finds the newest stamp; a global max would add a shuffle stage
-    that AQE runs as a second job. The stamp is then applied as a
-    pushed ``loaded_ts ==`` filter, which parquet row-group statistics
-    prune on. It stays a literal on purpose: unlike the mart build
-    (`relational.stamp`), readbacks that repeated one stamp were no
-    cheaper than readbacks with a new stamp each (3.3–4.6 vs 2.3–4.3
-    CPU-s at sf0.1 on 4 cores)."""
+    that AQE runs as a second job.
+
+    The stamp then selects the newest load's rows as data, the way
+    `relational.stamp` adds it: ``array_contains`` over a one-element
+    array cast to the column's type (so a missing stamp matches no
+    row), which generated code reads through ``references[]``; a
+    ``loaded_ts ==`` literal would be compiled into the scan stage and
+    cost every hourly readback 2 new classes (ENGINE.md house rule 7).
+    Nothing is lost by not pushing the stamp to parquet: Spark writes
+    ``loaded_ts`` as INT96, which has no row-group statistics, so a
+    pushed filter skips no row group (5 loads in one day at sf0.1: the
+    scan decodes 2,017,195 rows to return 403,439 either way). Reading
+    only the newest load's files needs a stamp with statistics or a
+    per-file discovery (ROADMAP direction 1)."""
     from yougile_etl_pipeline_spark import fsutil
 
     dates = sorted(
@@ -70,7 +78,9 @@ def read_latest_snapshot(spark: SparkSession, path: str) -> DataFrame:
     newest = (loads.select("loaded_ts").orderBy(F.col("loaded_ts").desc())
               .limit(1).collect())
     latest_ts = newest[0][0] if newest else None
-    return loads.filter(F.col("loaded_ts") == latest_ts)
+    ts_type = loads.schema["loaded_ts"].dataType
+    return loads.filter(F.array_contains(
+        F.array(F.lit(latest_ts).cast(ts_type)), F.col("loaded_ts")))
 
 
 def _data_files(d: str) -> list[str]:

@@ -62,7 +62,21 @@ def build_mart(spark: SparkSession, sf_dir: str,
     after it. That is exact: every row of one build carries the same
     ``loaded_ts``, so DISTINCT(R × {ts}) = DISTINCT(R) × {ts}. The stamp
     enters as data (``relational.stamp``), so hourly builds that differ
-    only in ``loaded_ts`` share one compiled mart stage."""
+    only in ``loaded_ts`` share one compiled mart stage.
+
+    A1 stays a full-row DISTINCT although it removes no row on the test
+    data (sf0.001 to sf0.1) and costs about a quarter of a warm build.
+    It cannot be made cheaper and stay exact:
+
+    * its partial and final aggregate already run in one stage, since
+      J2's shuffle on ``o_orderkey`` (= ``task_id``) satisfies the
+      grouping, and Spark has no setting that drops the partial one;
+    * a DISTINCT over the narrow inputs before the lookups is not the
+      same set: every non-member customer maps to the same NULL names,
+      ``place`` ignores ``o_orderpriority`` whenever ``part_name`` is
+      set, and the date rendering drops ``o_orderdate``'s time of day.
+
+    Numbers in ROADMAP direction 1."""
     t = load_tables(
         spark, sf_dir,
         ("orders", "lineitem", "customer", "nation", "region", "supplier",

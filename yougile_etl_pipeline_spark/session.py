@@ -51,11 +51,9 @@ ENGINE_CONF: dict[str, str] = {
     # medians). Scale-safe: the AQE rewrite is bounded per partition (a
     # build side over the threshold keeps SMJ and its graceful spill),
     # and the static SHJ pick still obeys the planner's size checks.
-    # Override via SPARK_GRAFT_PREFER_SMJ=true to restore sort-merge.
-    "spark.sql.join.preferSortMergeJoin":
-        os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
+    "spark.sql.join.preferSortMergeJoin": "false",
     "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold":
-        os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP_MAX", str(64 * 1024 * 1024)),
+        str(64 * 1024 * 1024),
     # Per-file open-cost charge when packing scan splits. r16 lowered
     # this to 512 KB on warm same-session A/Bs (more scan tasks for a
     # hot 11 MB table); the driver's COLD runs then showed
@@ -67,8 +65,7 @@ ENGINE_CONF: dict[str, str] = {
     # 0.257) — the 512 KB split floor was a warm-JVM artifact, so the
     # Spark default stands. At 100 TB files are >=128 MB and
     # `maxPartitionBytes` dominates the split formula either way.
-    "spark.sql.files.openCostInBytes":
-        os.environ.get("SPARK_GRAFT_OPEN_COST", str(4 * 1024 * 1024)),
+    "spark.sql.files.openCostInBytes": str(4 * 1024 * 1024),
     # Keep the UI off in tests/bench: faster session start, no port clashes.
     "spark.ui.enabled": "false",
 }
